@@ -95,6 +95,9 @@ def main() -> None:
     if args.backfill and args.from_snapshots:
         ap.error("--backfill needs explicit events (use --events or "
                  "--input), not --from-snapshots")
+    if args.backfill and args.snapshot_tiers:
+        ap.error("--backfill does not publish the serving store; run "
+                 "--snapshot-tiers separately after it")
 
     from workbook_exporter_fe_spark.plans.pipeline import TierPipeline
     from workbook_exporter_fe_spark.session import get_spark

@@ -16,7 +16,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", cores=8, shuffle_partitions=8)
+    # one task slot per host core; shuffle_partitions stays 8 so plans
+    # and written file counts do not depend on the host
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
+    cores = int(cpus) if cpus.isdigit() else os.cpu_count()
+    s = get_spark(app_name="tests", cores=cores, shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -132,14 +132,23 @@ def test_window_alignment_is_timezone_independent(monkeypatch):
 
 def test_run_tiers_rejects_backfill_with_from_snapshots(tmp_path):
     """--backfill --from-snapshots used to die with a NameError deep in
-    the run; it must be a usage error up front."""
+    the run, and --backfill --snapshot-tiers silently skipped the
+    serving-store publish; both must be usage errors up front."""
+    import os
     import subprocess
     import sys
 
-    r = subprocess.run(
-        [sys.executable, "run_tiers.py", "--from-snapshots", str(tmp_path),
-         "--backfill", "2024-01-01..2024-01-02", "--out", str(tmp_path / "o")],
-        capture_output=True, text=True, cwd="/root/repo",
-    )
-    assert r.returncode == 2
-    assert "--backfill needs explicit events" in r.stderr
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    cases = [
+        (["--from-snapshots", str(tmp_path)], "--backfill needs explicit events"),
+        (["--generate", "10", "--snapshot-tiers"],
+         "--backfill does not publish the serving store"),
+    ]
+    for extra, message in cases:
+        r = subprocess.run(
+            [sys.executable, "run_tiers.py", *extra,
+             "--backfill", "2024-01-01..2024-01-02", "--out", str(tmp_path / "o")],
+            capture_output=True, text=True, cwd=repo,
+        )
+        assert r.returncode == 2, extra
+        assert message in r.stderr, extra

@@ -207,3 +207,80 @@ def test_incremental_publish_bucketed_spec_preserves_bucket_mates(
     got = sorted(map(tuple, t.read().collect()))
     want = sorted(map(tuple, updated.collect()))
     assert got == want  # bucket-mates on day 2 survived, s3 replaced
+
+
+def _republish_after(spark, out, tier, updated, batch, spec):
+    """Publish ``tier``, replace the tier dir with ``updated`` (the
+    pipeline's in-place merge of ``batch``), publish again scoped to
+    ``batch``; returns (publish info, rows served, rows in the tier)."""
+    import shutil
+
+    from workbook_exporter_fe_spark.plans.pipeline import (
+        publish_snapshot_tiers,
+    )
+
+    tier.write.partitionBy("source").parquet(f"{out}/tier1")
+    publish_snapshot_tiers(spark, out, tier_names=("tier1",), spec=spec)
+    updated = updated.localCheckpoint()
+    shutil.rmtree(f"{out}/tier1")
+    updated.write.partitionBy("source").parquet(f"{out}/tier1")
+    info = publish_snapshot_tiers(
+        spark, out, tier_names=("tier1",), changed=batch, spec=spec
+    )
+    served = SnapshotTable(spark, info["tier1"]["root"]).read()
+    want = spark.read.parquet(f"{out}/tier1")
+    cols = sorted(want.columns)
+    return (
+        info,
+        sorted(map(tuple, served.select(*cols).collect()), key=repr),
+        sorted(map(tuple, want.select(*cols).collect()), key=repr),
+    )
+
+
+def test_incremental_publish_identity_ts_spec_republishes(spark, tmp_path):
+    """--tier-partition-spec 'bucket_ts,source': the batch's RAW event
+    time never equals a tier's floored bucket_ts, so a delta scoped by
+    the identity tuple would miss every changed row. Only day()/month()
+    fields of bucket_ts take the scoped path; this one republishes in
+    full, and the serving store equals the tier."""
+    spec = tuple("bucket_ts,source".split(","))
+    tier = _rows(spark, range(3), ("s0", "s1"))
+    hour = F.timestamp_seconds(F.lit(T0 + 2 * DAY + 3600))
+    updated = tier.withColumn(
+        "sum_v",
+        F.when((F.col("source") == "s1") & (F.col("bucket_ts") == hour),
+               F.col("sum_v") + 1e6).otherwise(F.col("sum_v")),
+    )
+    batch = spark.range(1).select(
+        F.lit("s1").alias("source"),
+        F.timestamp_seconds(F.lit(T0 + 2 * DAY + 3600 + 1234)).alias("event_ts"),
+    )
+    info, served, want = _republish_after(
+        spark, str(tmp_path / "out"), tier, updated, batch, spec
+    )
+    assert "partitions_replaced" not in info["tier1"]  # full republish
+    assert served == want
+
+
+def test_incremental_publish_null_source_partition(spark, tmp_path):
+    """A batch with a null-source event republishes the null-source
+    partition: tuples match null-safely (a plain equi-join drops them)."""
+    tier = _rows(spark, range(3), ("s0", None))
+    day2 = (F.col("bucket_ts") >= F.timestamp_seconds(F.lit(T0 + 2 * DAY))) & (
+        F.col("bucket_ts") < F.timestamp_seconds(F.lit(T0 + 3 * DAY))
+    )
+    updated = tier.withColumn(
+        "sum_v",
+        F.when(F.col("source").isNull() & day2, F.col("sum_v") + 1e6)
+        .otherwise(F.col("sum_v")),
+    )
+    batch = spark.range(1).select(
+        F.lit(None).cast("string").alias("source"),
+        F.timestamp_seconds(F.lit(T0 + 2 * DAY + 60)).alias("event_ts"),
+    )
+    info, served, want = _republish_after(
+        spark, str(tmp_path / "out"), tier, updated, batch,
+        ("day(bucket_ts)", "source"),
+    )
+    assert info["tier1"]["partitions_replaced"] == 1
+    assert served == want

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -202,10 +204,13 @@ def test_rollup_at_routes_to_coarsest_tier(spark, tmp_path):
         rollup_at(spark, out, "90s")
 
 
-def test_partition_scoped_merge_preserves_untouched_partitions(spark, tmp_path):
+def test_partition_scoped_merge_preserves_untouched_partitions(
+    spark, tmp_path, small_store
+):
     """merge_upsert_path(partition_col=...) must rewrite ONLY the partitions
     present in the new batch — untouched partition dirs keep their files'
-    mtimes (the replaceWhere shape a 100 TB merge needs)."""
+    mtimes (the replaceWhere shape a 100 TB merge needs). That holds on a
+    tier after backfill and expiry too: they keep its source= layout."""
     from workbook_exporter_fe_spark.operators.merge import merge_upsert_path
 
     path = str(tmp_path / "tier")
@@ -232,6 +237,36 @@ def test_partition_scoped_merge_preserves_untouched_partitions(spark, tmp_path):
         for r in spark.read.parquet(path).collect()
     }
     assert got == {("a", 1): 10.0, ("a", 2): 99.0, ("a", 3): 12.0, ("b", 1): 20.0}
+
+    import datetime
+
+    from workbook_exporter_fe_spark.operators.merge import (
+        merge_tier_additive_path,
+    )
+    from workbook_exporter_fe_spark.operators.retention import expire_tiers
+    from workbook_exporter_fe_spark.operators.tiers import rollup_tier1
+
+    store = str(tmp_path / "store")
+    shutil.copytree(small_store[0], store)
+    ev = small_store[1]
+    lo, hi = ev.agg(F.min("event_ts"), F.max("event_ts")).first()
+    TierPipeline(spark, store).backfill(
+        ev, lo, hi + datetime.timedelta(seconds=1), "bf"
+    )
+    expire_tiers(spark, store, {"tier1": "interval 2 minutes"})
+    t1 = os.path.join(store, "tier1")
+    assert not [f for f in os.listdir(t1) if f.endswith(".parquet")]
+    parts = sorted(d for d in os.listdir(t1) if d.startswith("source="))
+    assert len(parts) >= 2
+
+    def mtimes(d):
+        pdir = os.path.join(t1, d)
+        return {f: os.path.getmtime(os.path.join(pdir, f)) for f in os.listdir(pdir)}
+
+    before = {d: mtimes(d) for d in parts[1:]}
+    touched = ev.filter(F.col("source") == parts[0][len("source="):])
+    merge_tier_additive_path(spark, t1, rollup_tier1(touched), ["source", "bucket_ts"])
+    assert {d: mtimes(d) for d in parts[1:]} == before
 
 
 def test_late_bound_watermark_monotone_across_runs(spark, tmp_path):
@@ -389,3 +424,187 @@ def test_incremental_anomaly_recomputes_touched_sources(spark, tmp_path):
     assert got.count() == want.count()
     cols = ["source", "bucket_ts", "is_anomaly", "roll_n"]
     assert got.select(cols).exceptAll(want.select(cols)).count() == 0
+
+
+# --- crash injection: one swap, interrupted at every step -----------------
+
+
+class _Crash(OSError):
+    """An injected failure of one filesystem step."""
+
+
+@contextmanager
+def _faulty_fs(monkeypatch, prefix: str, crash_at: int | None = None):
+    """Record every os.rename and error-raising shutil.rmtree on a path
+    under ``prefix``; the ``crash_at``-th one raises before it touches the
+    disk, leaving it as a process killed at that step would."""
+    real_rename, real_rmtree = os.rename, shutil.rmtree
+    calls: list[str] = []
+
+    def step(p):
+        if str(p).startswith(prefix):
+            calls.append(str(p))
+            if len(calls) == crash_at:
+                raise _Crash(f"injected crash at step {crash_at}: {p}")
+
+    def rename(src, dst, *a, **k):
+        step(src)
+        return real_rename(src, dst, *a, **k)
+
+    def rmtree(p, ignore_errors=False, *a, **k):
+        if not ignore_errors:  # an ignoring rmtree cannot fail its caller
+            step(p)
+        return real_rmtree(p, ignore_errors, *a, **k)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", rename)
+        m.setattr(shutil, "rmtree", rmtree)
+        yield calls
+
+
+def _snapshot(spark, root, tables):
+    """Rows and partition dirs of each table, plus the swap leftovers."""
+    state = {}
+    for t in tables:
+        path = os.path.join(root, t)
+        rows = spark.read.parquet(path).collect()
+        state[t] = (
+            sorted((tuple(r) for r in rows), key=repr),
+            sorted(d for d in os.listdir(path) if "=" in d),
+        )
+    state["leftovers"] = sorted(
+        d for d in os.listdir(root) if d.endswith((".staging", ".old"))
+    )
+    return state
+
+
+def _assert_recovers(spark, monkeypatch, tmp_path, pre, op, swapped, tables,
+                     steps=None):
+    """``op(root)`` makes one swap of ``root/swapped`` (and maybe more).
+
+    A clean run on a copy of ``pre`` gives the wanted state and the
+    swap's steps. Then, for each step, a fresh copy crashes there; the
+    next ``op`` call must roll the half-done swap back and re-run it, to
+    the same rows and partition dirs, with no .staging/.old left."""
+    clean = str(tmp_path / "clean")
+    shutil.copytree(pre, clean)
+    with _faulty_fs(monkeypatch, os.path.join(clean, swapped)) as calls:
+        op(clean)
+    want = _snapshot(spark, clean, tables)
+    assert want["leftovers"] == [] and len(calls) >= 3, calls
+    for k in steps or range(1, len(calls) + 1):
+        root = str(tmp_path / f"crash{k}")
+        shutil.copytree(pre, root)
+        with _faulty_fs(monkeypatch, os.path.join(root, swapped), crash_at=k):
+            with pytest.raises(_Crash):
+                op(root)
+        op(root)
+        assert _snapshot(spark, root, tables) == want, f"crash at step {k}"
+
+
+def _kv(spark, rows):
+    return spark.createDataFrame(rows, "source string, bucket long, v double")
+
+
+def _partial(spark, rows):
+    return spark.createDataFrame(
+        [(s, b, v, v, v, 1, v) for s, b, v in rows],
+        "source string, bucket long, sum_v double, min_v double, "
+        "max_v double, cnt long, avg_v double",
+    )
+
+
+def test_swap_crash_recovery_merges(spark, tmp_path, monkeypatch):
+    """Upsert, additive merge and compaction: a crash at any rename or
+    rmtree of the partition-scoped swap (moving `a` aside, promoting it,
+    adding the new partition `c`, commit) is rolled back by the next
+    call. The additive merge is not idempotent, so a partial promote
+    that survived would count the batch twice on the re-run. The null
+    source partition is merged like any other, never dropped."""
+    from workbook_exporter_fe_spark.operators.merge import (
+        merge_tier_additive_path,
+        merge_upsert_path,
+    )
+    from workbook_exporter_fe_spark.sources.tableio import compact_partitions
+
+    keys = ["source", "bucket"]
+    # a null source lives in the __HIVE_DEFAULT_PARTITION__ dir
+    base = [("a", 1, 1.0), ("a", 2, 2.0), ("b", 1, 3.0), (None, 1, 4.0)]
+    batch = [("a", 2, 5.0), ("c", 1, 7.0), (None, 2, 6.0)]
+    cases = {
+        "upsert": (_kv, merge_upsert_path),
+        "additive": (_partial, merge_tier_additive_path),
+    }
+    for name, (frame, merge) in cases.items():
+        pre = str(tmp_path / name / "pre")
+        merge(spark, f"{pre}/t", frame(spark, base), keys, partition_col="source")
+        new = frame(spark, batch)
+        _assert_recovers(
+            spark, monkeypatch, tmp_path / name, pre,
+            lambda root: merge(spark, f"{root}/t", new, keys,
+                               partition_col="source"),
+            "t", ["t"],
+        )
+
+    pre = str(tmp_path / "compact" / "pre")
+    merge_upsert_path(spark, f"{pre}/t", _kv(spark, base), keys,
+                      partition_col="source")
+    _kv(spark, [("a", 9, 9.0)]).write.mode("append").partitionBy(
+        "source").parquet(f"{pre}/t")
+    _assert_recovers(
+        spark, monkeypatch, tmp_path / "compact", pre,
+        lambda root: compact_partitions(spark, f"{root}/t", min_files=2),
+        "t", ["t"],
+    )
+
+
+@pytest.fixture(scope="module")
+def small_store(spark, tmp_path_factory):
+    """A 600-document tier store and the events it was built from."""
+    seq = gen_sequences(spark, 600, seed=7)
+    root = str(tmp_path_factory.mktemp("crash") / "pre")
+    TierPipeline(spark, root).run(seq, run_fp="base")
+    ev = pl.eventize(seq).select("source", "event_ts", "v", "doc_id")
+    return root, ev.localCheckpoint()
+
+
+def test_swap_crash_recovery_backfill_and_expire(spark, tmp_path, monkeypatch,
+                                                 small_store):
+    """Backfill and expiry rewrite whole tiers: a crash at each step of
+    the tier-1 swap is rolled back and the re-run matches a clean run,
+    every source= partition present."""
+    from workbook_exporter_fe_spark.operators.retention import expire_tiers
+
+    pre, ev = small_store
+    lo, hi = ev.agg(F.min("event_ts"), F.max("event_ts")).first()
+    mid = lo + (hi - lo) / 2
+    fixed = ev.withColumn("v", F.col("v") * 2)
+    tiers = ["tier1", "tier2", "tier3", "chunks"]
+    _assert_recovers(
+        spark, monkeypatch, tmp_path / "backfill", pre,
+        lambda root: TierPipeline(spark, root).backfill(fixed, lo, mid, "bf"),
+        "tier1", tiers,
+    )
+    _assert_recovers(
+        spark, monkeypatch, tmp_path / "expire", pre,
+        lambda root: expire_tiers(spark, root, {"tier1": "interval 1 minute"}),
+        "tier1", ["tier1"],
+    )
+
+
+def test_swap_crash_recovery_incremental_stage(spark, tmp_path, monkeypatch,
+                                               small_store):
+    """Pipeline level: a crash halfway through the tier-1 additive swap of
+    run_incremental (some sources promoted, others not) leaves the stage
+    unrecorded; re-running the batch rolls the swap back and folds it
+    once, so every table matches an uninterrupted run."""
+    pre, ev = small_store
+    batch = ev.withColumn("doc_id", F.concat(F.col("doc_id"), F.lit("-r")))
+    n_sources = ev.select("source").distinct().count()
+    assert n_sources >= 3
+    _assert_recovers(
+        spark, monkeypatch, tmp_path, pre,
+        lambda root: TierPipeline(spark, root).run_incremental(batch, "b1"),
+        "tier1", ["events", "tier1", "tier2", "tier3", "chunks"],
+        steps=[n_sources + 1],
+    )

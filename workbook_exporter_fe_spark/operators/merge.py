@@ -11,11 +11,21 @@ hive-parquet fallback (SURVEY §7: no Iceberg jar in this sandbox — the
 Scale design: `merge_upsert` is a left-anti join (existing minus updated
 keys) + union. When the *new* side is small relative to existing (the usual
 incremental case) we broadcast it, so the merge never shuffles the big
-existing table. Writes are partitioned by source so a merge that only
-touches recent partitions can use `replaceWhere`-style partition overwrite.
+existing table. Tier tables are partitioned by source, so a merge reads and
+rewrites only the ``source=`` partitions its batch touches.
+
+Every rewrite of a hive tier table goes through ``_swap``: it stages the
+data in ``<path>.staging``, moves each live unit (a ``source=`` dir, or the
+whole table for an unscoped write) into ``<path>.old``, promotes the staged
+one and commits by renaming ``<path>.old`` away. The next swap after a
+crash rolls the table back to its pre-swap state first — fully, because
+the additive merge is not idempotent.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -91,39 +101,102 @@ def merge_tier_additive(existing: DataFrame, partial: DataFrame, keys: list[str]
     return out.withColumn("avg_v", F.col("sum_v") / F.col("cnt"))
 
 
+#: name of the whole-table unit inside ``<path>.old`` (partition units
+#: are named by their ``col=value`` dir, so the two cannot collide)
+_TABLE = "_table"
+
+
+def _rollback(path: str) -> None:
+    """Undo a swap on ``path`` that did not commit. ``<path>.old`` holds,
+    per unit the swap reached, its pre-swap dir, or an empty file if the
+    unit did not exist: whatever was promoted there is removed and the
+    dir goes back. Then the staging dir is dropped."""
+    old = path + ".old"
+    if os.path.isdir(old):
+        for name in os.listdir(old):
+            live = path if name == _TABLE else os.path.join(path, name)
+            if os.path.exists(live):
+                shutil.rmtree(live)
+            if os.path.isdir(os.path.join(old, name)):
+                os.rename(os.path.join(old, name), live)
+        shutil.rmtree(old)
+    if os.path.exists(path + ".staging"):
+        shutil.rmtree(path + ".staging")
+
+
+def _swap(path: str, write, scoped: bool = False) -> None:
+    """Crash-safely replace data of the parquet table at ``path``.
+
+    ``write(staging)`` writes the new data; reads of ``path`` belong
+    inside it, after the rollback of an interrupted swap. With ``scoped``
+    each staged ``col=value`` dir replaces its namesake and the other
+    partitions keep their files; otherwise the staged dir replaces the
+    whole table. A write that stages nothing swaps nothing."""
+    _rollback(path)
+    staging, old = path + ".staging", path + ".old"
+    scoped = scoped and os.path.exists(path)
+    if scoped and any(f.endswith(".parquet") for f in os.listdir(path)):
+        raise ValueError(
+            f"{path} holds unpartitioned parquet files; a partition-scoped "
+            "write would mix layouts"
+        )
+    write(staging)
+    if not os.path.exists(staging):
+        return
+    units = [(staging, path, _TABLE)]
+    if scoped:
+        units = [(os.path.join(staging, d), os.path.join(path, d), d)
+                 for d in os.listdir(staging) if os.path.isdir(os.path.join(staging, d))]
+    os.makedirs(old)
+    for staged, live, name in units:
+        aside = os.path.join(old, name)
+        if os.path.exists(live):
+            os.rename(live, aside)
+        else:
+            open(aside, "w").close()
+        os.rename(staged, live)
+    if os.path.exists(staging):  # scoped: only the writer's markers remain
+        shutil.rmtree(staging)
+    # commit: with no <path>.old left nothing rolls back
+    os.rename(old, staging)
+    shutil.rmtree(staging, ignore_errors=True)
+
+
+def _merge_path(spark, path, new, keys, partition_col, combine) -> None:
+    """``combine`` the partitions of ``path`` that ``new`` touches (the
+    whole table without ``partition_col``) with ``new``; swap them."""
+
+    def write(staging):
+        merged = new
+        if os.path.exists(path):
+            existing = spark.read.parquet(path)
+            if partition_col is not None:
+                # prune to the partitions `new` touches (tiny distinct on
+                # the new side; the filter prunes the scan at the source)
+                vals = [r[0] for r in new.select(partition_col).distinct().collect()]
+                touched = F.col(partition_col).isin(vals)
+                if None in vals:  # the __HIVE_DEFAULT_PARTITION__ dir
+                    touched = touched | F.col(partition_col).isNull()
+                existing = existing.filter(touched).withColumn(
+                    # partition-dir values read back as strings
+                    partition_col,
+                    F.col(partition_col).cast(new.schema[partition_col].dataType),
+                )
+            merged = combine(existing, new, keys).select(*existing.columns)
+        w = merged.write.mode("overwrite")
+        (w.partitionBy(partition_col) if partition_col else w).parquet(staging)
+
+    _swap(path, write, scoped=partition_col is not None)
+
+
 def merge_tier_additive_path(
     spark, path: str, partial: DataFrame, keys: list[str],
     partition_col: str | None = "source",
 ) -> None:
     """Additive tier merge against a parquet tier table on disk —
     partition-scoped like ``merge_upsert_path``: only partitions present in
-    the incremental batch are read, combined, and swapped."""
-    import os
-
-    prefix = f"{partition_col}=" if partition_col else None
-    if not os.path.exists(path):
-        merge_upsert_path(spark, path, partial, keys, partition_col=partition_col)
-        return
-    partitioned = partition_col is not None and any(
-        d.startswith(prefix) for d in os.listdir(path)
-    )
-    if partitioned:
-        vals = [r[0] for r in partial.select(partition_col).distinct().collect()]
-        existing = (
-            spark.read.parquet(path)
-            .filter(F.col(partition_col).isin(vals))
-            .withColumn(
-                partition_col,
-                F.col(partition_col).cast(partial.schema[partition_col].dataType),
-            )
-            .select(*partial.columns)
-        )
-    else:
-        existing = spark.read.parquet(path)
-    merged = merge_tier_additive(existing, partial, keys)
-    # the combined rows REPLACE the affected buckets (upsert semantics on
-    # already-combined rows) — partition-scoped swap via merge_upsert_path
-    merge_upsert_path(spark, path, merged, keys, partition_col=partition_col)
+    the incremental batch are read, combined, and written over."""
+    _merge_path(spark, path, partial, keys, partition_col, merge_tier_additive)
 
 
 def merge_upsert_path(
@@ -132,66 +205,14 @@ def merge_upsert_path(
     """MERGE against a parquet table on disk (hive-style fallback backend).
 
     With ``partition_col`` (one of ``keys``, e.g. ``source``) the table is
-    laid out hive-partitioned and the merge is PARTITION-SCOPED: only the
+    hive-partitioned and the merge is PARTITION-SCOPED: only the
     partitions present in ``new`` are read, merged, and swapped — untouched
     partition directories are never rewritten (their files keep their
     mtimes), which is the `replaceWhere` shape a 100 TB merge needs instead
-    of staging the whole table. Without ``partition_col`` (or on a legacy
-    unpartitioned layout) it falls back to full read→merge→staging-swap.
-    With an Iceberg catalog configured either shape is a single
-    ``spark.sql("MERGE INTO ...")`` — gated behind the same signature
-    (sources/tableio.py).
+    of staging the whole table. A partitioned merge into a table holding
+    unpartitioned files raises. Without ``partition_col`` the whole table
+    is read, merged and swapped. With an Iceberg catalog configured either
+    shape is a single ``spark.sql("MERGE INTO ...")`` — gated behind the
+    same signature (sources/tableio.py).
     """
-    import os
-    import shutil
-
-    prefix = f"{partition_col}=" if partition_col else None
-    partitioned_layout = (
-        partition_col is not None
-        and partition_col in keys
-        and (
-            not os.path.exists(path)
-            or any(d.startswith(prefix) for d in os.listdir(path))
-        )
-    )
-    if not partitioned_layout:
-        if os.path.exists(path):
-            existing = spark.read.parquet(path)
-            merged = merge_upsert(existing, new, keys)
-        else:
-            merged = new
-        staging = path + ".staging"
-        merged.write.mode("overwrite").parquet(staging)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(staging, path)
-        return
-
-    if os.path.exists(path):
-        # prune to the partitions `new` touches (tiny distinct on the new
-        # side; the filter prunes the existing scan at the source)
-        vals = [r[0] for r in new.select(partition_col).distinct().collect()]
-        existing = (
-            spark.read.parquet(path)
-            .filter(F.col(partition_col).isin(vals))
-            # partition-dir values read back as strings; restore the dtype
-            .withColumn(
-                partition_col,
-                F.col(partition_col).cast(new.schema[partition_col].dataType),
-            )
-            .select(*new.columns)
-        )
-        merged = merge_upsert(existing, new, keys)
-    else:
-        merged = new
-    staging = path + ".staging"
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
-    os.makedirs(path, exist_ok=True)
-    for dname in os.listdir(staging):
-        if not dname.startswith(prefix):
-            continue
-        dst = os.path.join(path, dname)
-        if os.path.exists(dst):
-            shutil.rmtree(dst)
-        os.rename(os.path.join(staging, dname), dst)
-    shutil.rmtree(staging, ignore_errors=True)
+    _merge_path(spark, path, new, keys, partition_col, merge_upsert)

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from workbook_exporter_fe_spark.operators.merge import _rollback, _swap
+
 # TTL per tier, expressed in the tier's own bucket units → interval.
 DEFAULT_TTL = {"1m": "interval 2 days", "1h": "interval 60 days", "1d": "interval 3650 days"}
 
@@ -85,13 +87,14 @@ def expire_tiers(
     FINE tier while a coarser tier still covers its time range, so no
     time range silently vanishes from the store. Enforced, not assumed.
 
-    Each expiry is a staged-swap overwrite of the filtered table (never a
-    row mutation — the per-row invariant that surviving rows are
-    byte-identical holds by construction). At 100 TB, partition tier
-    tables by a day column and this filter becomes partition DELETEs; on
-    the hive-parquet backend here it is a local-filesystem table rewrite
-    of the small tier relations (object stores need the table-format
-    DELETE path instead).
+    Each expiry rewrites the filtered tier through the store's one
+    crash-safe swap (operators/merge._swap), keeping its ``source=``
+    partitions — never a row mutation, so surviving rows are
+    byte-identical by construction. At 100 TB, partition tier tables by a
+    day column and this filter becomes partition DELETEs; on the
+    hive-parquet backend here it is a local-filesystem table rewrite of
+    the small tier relations (object stores need the table-format DELETE
+    path instead).
 
     Every expiry also records its per-tier cutoff in
     ``{out_dir}/_manifest/retention.json`` (max-merged across runs) so
@@ -122,6 +125,8 @@ def expire_tiers(
             f"retention must be non-decreasing with tier coarseness: {policies}"
         )
 
+    for tier in order:  # an interrupted swap must not skew the counts
+        _rollback(f"{out_dir}/{tier}")
     if wm is None:
         wm = watermark(spark.read.parquet(f"{out_dir}/{order[0]}"))
     stats: dict = {}
@@ -132,22 +137,9 @@ def expire_tiers(
         kept = apply_retention(t, policies[tier], wm=wm)
         before, after = t.count(), kept.count()
         if after < before:
-            # Recoverable swap (local-FS assumption, see module docstring):
-            # write staged → rename live aside → promote staged → drop the
-            # aside copy. A crash at any point leaves either the old table
-            # at its canonical path or BOTH copies on disk (path__old
-            # recoverable by hand) — never a missing tier. On an object
-            # store / real table format this whole branch is a partition
-            # DELETE / replaceWhere instead.
-            staged = f"{path}__staged"
-            old = f"{path}__old"
-            kept.write.mode("overwrite").parquet(staged)
-            import shutil
-
-            shutil.rmtree(old, ignore_errors=True)
-            shutil.move(path, old)
-            shutil.move(staged, path)
-            shutil.rmtree(old)
+            # one whole-table swap (rolled back if interrupted); the
+            # staged copy keeps the tier's source= layout
+            _swap(path, lambda staging: kept.write.partitionBy("source").parquet(staging))
         from datetime import timedelta
 
         cutoff_ts = wm - timedelta(seconds=ttl_secs)

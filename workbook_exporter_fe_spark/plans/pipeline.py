@@ -4,20 +4,22 @@ Replaces the reference's output-file-as-state pattern (re-read the YAML,
 anti-join, merge, rewrite — /root/reference/workbook_exporter-fe.py:1732-1767)
 with explicit *table* state:
 
-- every stage writes a partitioned parquet tier table via an idempotent
+- every stage writes a ``source``-partitioned parquet tier table via a
   merge keyed on (source, bucket_ts) — re-running a completed stage is a
-  no-op on the data;
+  no-op on the data. Every write (backfill and expiry too) goes through
+  one crash-safe swap, operators/merge._swap;
 - a JSON-lines **manifest** records per-stage lineage + metrics (rows
   in/out, per-source partition rows, encode ratio, watermark position,
   wall time) — the engine's equivalent of an Iceberg metadata table;
 - **resume**: a stage whose manifest entry is `done` for the same run
-  fingerprint is skipped; a crash mid-stage leaves either no output swap
-  (staging dir) or a completed entry, so re-running converges.
+  fingerprint is skipped. A crash mid-swap leaves ``<table>.old``; the
+  stage's re-run first rolls the table back to its pre-swap state, so
+  re-running converges, additive (non-idempotent) merges included.
 
 Scale: stages communicate only through partitioned tables; the manifest is
 tiny driver-side JSON (one row per stage × source), so no collect() of data
 ever happens. On a real cluster the manifest becomes an Iceberg table and
-the staging-swap becomes a MERGE INTO snapshot commit.
+the swap becomes a MERGE INTO snapshot commit.
 """
 
 from __future__ import annotations
@@ -33,7 +35,7 @@ from pyspark.sql import functions as F
 
 from workbook_exporter_fe_spark.functions.spark_codecs import compress_tier
 from workbook_exporter_fe_spark.operators.eventize import eventize
-from workbook_exporter_fe_spark.operators.merge import merge_upsert_path
+from workbook_exporter_fe_spark.operators.merge import _swap, merge_upsert_path
 from workbook_exporter_fe_spark.operators.tiers import reaggregate, rollup_tier1
 
 
@@ -105,10 +107,6 @@ def _ceil(ts: _dt.datetime, sec: int) -> _dt.datetime:
     return _PY_EPOCH + _dt.timedelta(seconds=e + (-e) % sec)
 
 
-def _per_source_counts(df: DataFrame) -> dict[str, int]:
-    return {r["source"]: r["n"] for r in df.groupBy("source").agg(F.count("*").alias("n")).collect()}
-
-
 class TierPipeline:
     """sequences → tier-0 events → 1m → 1h → 1d → compressed chunks."""
 
@@ -131,89 +129,82 @@ class TierPipeline:
         self.with_anomaly = with_anomaly
         self.manifest = Manifest(os.path.join(out_dir, "_manifest", "manifest.jsonl"))
 
-    def _stage(self, run_fp: str, stage: str, build, out_path: str, keys: list[str]):
-        """Run one stage idempotently: skip if done, else build → merge → log."""
+    def _stage(self, run_fp: str, stage: str, write, out_path: str, keys: list[str]):
+        """Run one stage idempotently: skip if done, else write → log.
+        ``write(out_path, keys)`` merges the stage's rows into its table;
+        one per-source job over the result gives every manifest figure."""
         if self.manifest.done(run_fp, stage):
             return self.spark.read.parquet(out_path)
         t0 = time.perf_counter()
-        df = build()
-        # tier tables are (source, …)-keyed → partition-scoped merge: only
-        # the sources present in this batch are rewritten
-        merge_upsert_path(
-            self.spark, out_path, df, keys,
-            partition_col="source" if "source" in keys else None,
-        )
+        write(out_path, keys)
         result = self.spark.read.parquet(out_path)
-        # one job for both stage metrics (count + watermark), not two scans
-        wm_col = keys[-1] if "bucket_ts" not in keys else "bucket_ts"
-        rows_out, wm = result.agg(F.count("*"), F.max(wm_col)).collect()[0]
+        wm_col = "bucket_ts" if "bucket_ts" in keys else keys[-1]
+        per_source = result.groupBy("source").agg(
+            F.count("*").alias("n"), F.max(wm_col).alias("wm")
+        ).collect()
+        wm = max((r["wm"] for r in per_source if r["wm"] is not None), default=None)
+        # incremental stages keep their lean manifest row
+        extra = {} if stage.endswith("_inc") else {
+            "partitions": {r["source"]: r["n"] for r in per_source}
+        }
         self.manifest.record(
             run_fp=run_fp,
             stage=stage,
             status="done",
-            rows_out=rows_out,
-            partitions=_per_source_counts(result) if "source" in result.columns else {},
+            rows_out=sum(r["n"] for r in per_source),
+            **extra,
             watermark=str(wm),
             wall_sec=round(time.perf_counter() - t0, 3),
         )
         return result
 
+    def _bound_late(self, events: DataFrame, run_fp: str) -> DataFrame:
+        """Apply the late-event watermark when ``late_delay`` is set.
+
+        Events behind (high-water - delay) never reach the rollup, so
+        finalized buckets stay finalized under out-of-order re-deliveries
+        (operators/retention.py). The frontier is monotone ACROSS runs: the
+        last manifest-recorded watermark is fed back in, so replaying old
+        data can never lower the cutoff and reopen finalized buckets."""
+        if not self.late_delay:
+            return events
+        from workbook_exporter_fe_spark.operators.retention import (
+            bound_late_events,
+        )
+
+        prior_wm = self.manifest.last_watermark("late_bound")
+        events, wm = bound_late_events(events, self.late_delay, prior_wm=prior_wm)
+        if not self.manifest.done(run_fp, "late_bound"):
+            self.manifest.record(
+                run_fp=run_fp, stage="late_bound", status="done",
+                rows_out=events.count(), watermark=str(wm), wall_sec=0.0,
+            )
+        return events
+
     def run(self, sequences: DataFrame, run_fp: str) -> dict[str, DataFrame]:
         """Execute (or resume) the full cascade; returns the tier tables."""
         out: dict[str, DataFrame] = {}
 
-        events = self._stage(
-            run_fp,
-            "t0_eventize",
-            lambda: eventize(sequences).select("source", "event_ts", "v", "doc_id"),
-            f"{self.out}/events",
-            ["source", "doc_id"],
-        )
-        out["events"] = events
-
-        if self.late_delay:
-            # batch watermark: events behind (high-water - delay) never
-            # reach the rollup, so finalized buckets stay finalized under
-            # out-of-order re-deliveries (operators/retention.py). The
-            # frontier is monotone ACROSS runs: the last manifest-recorded
-            # watermark is fed back in, so replaying old data can never
-            # lower the cutoff and reopen finalized buckets.
-            from workbook_exporter_fe_spark.operators.retention import (
-                bound_late_events,
+        def stage(name, build, table, keys=("source", "bucket_ts")):
+            return self._stage(
+                run_fp, name,
+                lambda p, k: merge_upsert_path(
+                    self.spark, p, build(), k, partition_col="source"
+                ),
+                f"{self.out}/{table}", list(keys),
             )
 
-            prior_wm = self.manifest.last_watermark("late_bound")
-            events, wm = bound_late_events(events, self.late_delay, prior_wm=prior_wm)
-            if not self.manifest.done(run_fp, "late_bound"):
-                self.manifest.record(
-                    run_fp=run_fp,
-                    stage="late_bound",
-                    status="done",
-                    rows_out=events.count(),
-                    watermark=str(wm),
-                    wall_sec=0.0,
-                )
-
-        t1 = self._stage(
-            run_fp,
-            "tier1_1m",
-            lambda: rollup_tier1(events, salt_buckets=self.salt_buckets),
-            f"{self.out}/tier1",
-            ["source", "bucket_ts"],
+        out["events"] = events = stage(
+            "t0_eventize",
+            lambda: eventize(sequences).select("source", "event_ts", "v", "doc_id"),
+            "events", ("source", "doc_id"),
         )
-        out["tier1"] = t1
-
-        t2 = self._stage(
-            run_fp, "tier2_1h", lambda: reaggregate(t1, "1h"), f"{self.out}/tier2",
-            ["source", "bucket_ts"],
+        events = self._bound_late(events, run_fp)
+        out["tier1"] = t1 = stage(
+            "tier1_1m", lambda: rollup_tier1(events, salt_buckets=self.salt_buckets), "tier1"
         )
-        out["tier2"] = t2
-
-        t3 = self._stage(
-            run_fp, "tier3_1d", lambda: reaggregate(t2, "1d"), f"{self.out}/tier3",
-            ["source", "bucket_ts"],
-        )
-        out["tier3"] = t3
+        out["tier2"] = t2 = stage("tier2_1h", lambda: reaggregate(t1, "1h"), "tier2")
+        out["tier3"] = stage("tier3_1d", lambda: reaggregate(t2, "1d"), "tier3")
 
         if self.with_sketches:
             # Non-decomposable aggregates (distinct keys, percentiles) ride
@@ -224,28 +215,12 @@ class TierPipeline:
                 sketch_tier1,
             )
 
-            s1 = self._stage(
-                run_fp,
-                "sketch1_1m",
-                lambda: sketch_tier1(events),
-                f"{self.out}/sketch1",
-                ["source", "bucket_ts"],
+            out["sketch1"] = s1 = stage("sketch1_1m", lambda: sketch_tier1(events), "sketch1")
+            out["sketch2"] = s2 = stage(
+                "sketch2_1h", lambda: sketch_reaggregate(s1, "1h"), "sketch2"
             )
-            out["sketch1"] = s1
-            s2 = self._stage(
-                run_fp,
-                "sketch2_1h",
-                lambda: sketch_reaggregate(s1, "1h"),
-                f"{self.out}/sketch2",
-                ["source", "bucket_ts"],
-            )
-            out["sketch2"] = s2
-            out["sketch3"] = self._stage(
-                run_fp,
-                "sketch3_1d",
-                lambda: sketch_reaggregate(s2, "1d"),
-                f"{self.out}/sketch3",
-                ["source", "bucket_ts"],
+            out["sketch3"] = stage(
+                "sketch3_1d", lambda: sketch_reaggregate(s2, "1d"), "sketch3"
             )
 
         if self.with_anomaly:
@@ -254,14 +229,12 @@ class TierPipeline:
             # the tier table — tier-sized input, one window pass.
             from workbook_exporter_fe_spark.operators.rates import anomaly_zscore
 
-            out["anomaly1"] = self._stage(
-                run_fp,
+            out["anomaly1"] = stage(
                 "anomaly_1m",
                 lambda: anomaly_zscore(
                     t1.select("source", "bucket_ts", "avg_v"), n=30, threshold=3.0
                 ),
-                f"{self.out}/anomaly1",
-                ["source", "bucket_ts"],
+                "anomaly1",
             )
 
         chunks_path = f"{self.out}/chunks"
@@ -315,9 +288,11 @@ class TierPipeline:
         (source, day) chunk segments overlapping the window are
         re-encoded the same way. Outside the window nothing changes, and
         backfilling with identical data is a bit-exact no-op (pinned in
-        tests). Each table swap is the recoverable staged pattern; at
-        100 TB with day-partitioned tiers every window replace becomes a
-        partition DELETE+INSERT instead of the table rewrite here.
+        tests). Each table is rewritten whole, keeping its ``source=``
+        partitions, through the store's crash-safe swap (an interrupted
+        backfill rolls back on the next write); at 100 TB with
+        day-partitioned tiers every window replace becomes a partition
+        DELETE+INSERT instead of the table rewrite here.
 
         ``start``/``end``: ISO strings or datetimes, inclusive/exclusive.
         Returns per-table replaced-row counts for the manifest.
@@ -333,25 +308,18 @@ class TierPipeline:
 
         def _replace_window(path: str, new_rows: DataFrame, ts_col: str,
                             a, b) -> int:
-            import shutil
-
-            if os.path.exists(path):
-                c = F.col(ts_col).cast("timestamp")
-                keep = self.spark.read.parquet(path).filter(
-                    ~((c >= F.lit(a)) & (c < F.lit(b)))
-                )
-                merged = keep.unionByName(new_rows.select(*keep.columns))
-            else:
+            def write(staging):
                 merged = new_rows
+                if os.path.exists(path):
+                    c = F.col(ts_col).cast("timestamp")
+                    keep = self.spark.read.parquet(path).filter(
+                        ~((c >= F.lit(a)) & (c < F.lit(b)))
+                    )
+                    merged = keep.unionByName(new_rows.select(*keep.columns))
+                merged.write.partitionBy("source").parquet(staging)
+
             n_new = new_rows.count()
-            staging = path + ".staging"
-            merged.write.mode("overwrite").parquet(staging)
-            if os.path.exists(path):
-                os.rename(path, path + "__old")
-                os.rename(staging, path)
-                shutil.rmtree(path + "__old")
-            else:
-                os.rename(staging, path)
+            _swap(path, write)
             return n_new
 
         stats: dict = {}
@@ -518,69 +486,41 @@ class TierPipeline:
         - chunks: only the (source, day) segments the batch touched are
           re-encoded from the merged tier-1 and upserted.
         """
-        import time as _time
+        # looked up per call, like merge_upsert_path, so a wrapped
+        # merge.merge_tier_additive_path is the one that runs
+        from workbook_exporter_fe_spark.operators import merge
 
-        from workbook_exporter_fe_spark.operators.merge import (
-            merge_tier_additive_path,
-        )
+        def add(partial):
+            return lambda path, keys: merge.merge_tier_additive_path(
+                self.spark, path, partial, keys
+            )
 
         out: dict[str, DataFrame] = {}
-        if self.late_delay:
-            from workbook_exporter_fe_spark.operators.retention import (
-                bound_late_events,
-            )
-
-            prior_wm = self.manifest.last_watermark("late_bound")
-            events, wm = bound_late_events(events, self.late_delay, prior_wm=prior_wm)
-            if not self.manifest.done(run_fp, "late_bound"):
-                self.manifest.record(
-                    run_fp=run_fp, stage="late_bound", status="done",
-                    rows_out=events.count(), watermark=str(wm), wall_sec=0.0,
-                )
-
-        def _stage_inc(stage: str, path: str, keys: list[str], apply):
-            if self.manifest.done(run_fp, stage):
-                return self.spark.read.parquet(path)
-            t0 = _time.perf_counter()
-            apply(path, keys)
-            result = self.spark.read.parquet(path)
-            wm_col = "bucket_ts" if "bucket_ts" in keys else keys[-1]
-            rows_out, wm = result.agg(F.count("*"), F.max(wm_col)).collect()[0]
-            self.manifest.record(
-                run_fp=run_fp, stage=stage, status="done", rows_out=rows_out,
-                watermark=str(wm),
-                wall_sec=round(_time.perf_counter() - t0, 3),
-            )
-            return result
-
-        out["events"] = _stage_inc(
-            "t0_events_inc", f"{self.out}/events", ["source", "doc_id"],
-            lambda p, k: merge_upsert_path(
-                self.spark, p, events, k, partition_col="source"
-            ),
+        events = self._bound_late(events, run_fp)
+        out["events"] = self._stage(
+            run_fp, "t0_events_inc",
+            lambda p, k: merge_upsert_path(self.spark, p, events, k, partition_col="source"),
+            f"{self.out}/events", ["source", "doc_id"],
         )
-
+        keys = ["source", "bucket_ts"]
         partial1 = rollup_tier1(events, salt_buckets=self.salt_buckets)
-        out["tier1"] = _stage_inc(
-            "tier1_inc", f"{self.out}/tier1", ["source", "bucket_ts"],
-            lambda p, k: merge_tier_additive_path(self.spark, p, partial1, k),
+        out["tier1"] = self._stage(
+            run_fp, "tier1_inc", add(partial1), f"{self.out}/tier1", keys
         )
         partial2 = reaggregate(partial1, "1h")
-        out["tier2"] = _stage_inc(
-            "tier2_inc", f"{self.out}/tier2", ["source", "bucket_ts"],
-            lambda p, k: merge_tier_additive_path(self.spark, p, partial2, k),
+        out["tier2"] = self._stage(
+            run_fp, "tier2_inc", add(partial2), f"{self.out}/tier2", keys
         )
         partial3 = reaggregate(partial2, "1d")
-        out["tier3"] = _stage_inc(
-            "tier3_inc", f"{self.out}/tier3", ["source", "bucket_ts"],
-            lambda p, k: merge_tier_additive_path(self.spark, p, partial3, k),
+        out["tier3"] = self._stage(
+            run_fp, "tier3_inc", add(partial3), f"{self.out}/tier3", keys
         )
 
         # re-encode ONLY the (source, day) segments this batch touched,
         # reading exact merged values from tier-1
         chunks_path = f"{self.out}/chunks"
         if not self.manifest.done(run_fp, "compress_inc"):
-            t0c = _time.perf_counter()
+            t0c = time.perf_counter()
             affected = partial1.select(
                 "source", F.date_trunc("day", "bucket_ts").alias("_seg")
             ).distinct()
@@ -596,7 +536,7 @@ class TierPipeline:
             self.manifest.record(
                 run_fp=run_fp, stage="compress_inc", status="done",
                 rows_out=self.spark.read.parquet(chunks_path).count(),
-                wall_sec=round(_time.perf_counter() - t0c, 3),
+                wall_sec=round(time.perf_counter() - t0c, 3),
             )
         # rolling-anomaly tier: windows are NOT additive (trailing 30-row
         # frames), so recompute — but only the SOURCES this batch touched,
@@ -605,7 +545,7 @@ class TierPipeline:
         if self.with_anomaly and not self.manifest.done(run_fp, "anomaly_inc"):
             from workbook_exporter_fe_spark.operators.rates import anomaly_zscore
 
-            t0a = _time.perf_counter()
+            t0a = time.perf_counter()
             touched = partial1.select("source").distinct()
             recomputed = anomaly_zscore(
                 out["tier1"]
@@ -621,7 +561,7 @@ class TierPipeline:
             self.manifest.record(
                 run_fp=run_fp, stage="anomaly_inc", status="done",
                 rows_out=self.spark.read.parquet(f"{self.out}/anomaly1").count(),
-                wall_sec=round(_time.perf_counter() - t0a, 3),
+                wall_sec=round(time.perf_counter() - t0a, 3),
             )
         if self.with_anomaly:
             out["anomaly1"] = self.spark.read.parquet(f"{self.out}/anomaly1")
@@ -741,8 +681,11 @@ def publish_snapshot_tiers(
     whole partitions, so the delta must carry the untouched
     bucket-mates' rows too (pinned in tests). day()/month() scoping is
     sound for every tier granularity because 1m/1h/1d buckets truncate
-    WITHIN the event's calendar unit; an hour() spec field would not
-    cover tier-3's day-floored buckets, so it forces a full republish.
+    WITHIN the event's calendar unit. Any other field of ``bucket_ts``
+    — hour(), identity, a truncate — would not cover the coarser tiers'
+    floored buckets (the proxies carry raw event times), so it forces a
+    full republish. Tuples match null-safely, so a batch touching the
+    null-source partition republishes it.
 
     ``spec`` sets the partition layout at FIRST publish (an existing
     store keeps its own spec property). At bounded source cardinality
@@ -781,18 +724,20 @@ def publish_snapshot_tiers(
             proxy is not None
             and table.current_sequence() > 0
             and fields
-            and all(f.transform != "hour" for f in fields)
+            and all(f.transform in ("day", "month")
+                    for f in fields if f.source == "bucket_ts")
         )
         if scoped:
             pcols = [PCOL_PREFIX + f.name for f in fields]
             tuples = (
                 proxy.select(*partition_columns(proxy, fields)).distinct()
             )
-            delta = (
-                df.select("*", *partition_columns(df, fields))
-                .join(F.broadcast(tuples), pcols, "left_semi")
-                .drop(*pcols)
-            )
+            rows = df.select("*", *partition_columns(df, fields))
+            delta = rows.join(
+                F.broadcast(tuples),
+                [rows[c].eqNullSafe(tuples[c]) for c in pcols],
+                "left_semi",
+            ).drop(*pcols)
             rep = table.overwrite_partitions(
                 delta, summary={"published_from": src}
             )

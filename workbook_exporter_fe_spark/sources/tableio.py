@@ -5,7 +5,8 @@ programs against this seam. With an Iceberg catalog configured
 (`spark.sql.catalog.<name>` + runtime jar), reads/writes/merges go through
 the Iceberg SQL surface (snapshot isolation, hidden partitioning, real
 MERGE INTO); otherwise the parquet backend provides the same call shapes
-with partitioned directories + staged-swap merges.
+with partitioned directories + one crash-safe staged swap
+(operators/merge._swap).
 """
 
 from __future__ import annotations
@@ -132,35 +133,38 @@ def compact_partitions(
     one more file per merge; at 100 TB the accumulated small files dominate
     scan open/seek cost ("small files problem"). This rewrites ONLY
     partitions holding ≥ ``min_files`` files down to
-    ``ceil(rows / target_rows_per_file)`` files, via the same staging-swap
-    the merges use — untouched partitions keep their files byte-for-byte.
+    ``ceil(rows / target_rows_per_file)`` files. All of them are replaced
+    in one partition-scoped swap (operators/merge._swap), the crash-safe
+    swap the merges use: an interrupted compaction rolls back on the next
+    write, and untouched partitions keep their files byte-for-byte.
     On Iceberg this is `rewrite_data_files`; this is the hive-parquet
     fallback with the same contract. Returns
     {partition_value: (files_before, files_after)} for the log/manifest.
     """
     import math
     import os
-    import shutil
+
+    from workbook_exporter_fe_spark.operators.merge import _swap
 
     prefix = f"{partition_col}="
     report: dict[str, tuple[int, int]] = {}
-    for dname in sorted(os.listdir(path)):
-        if not dname.startswith(prefix):
-            continue
-        pdir = os.path.join(path, dname)
-        files = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
-        if len(files) < min_files:
-            continue
-        part = spark.read.parquet(pdir)
-        n = part.count()
-        n_files = max(1, math.ceil(n / target_rows_per_file))
-        if n_files >= len(files):
-            continue
-        staging = pdir + ".compact"
-        part.repartition(n_files).write.mode("overwrite").parquet(staging)
-        shutil.rmtree(pdir)
-        os.rename(staging, pdir)
-        report[dname[len(prefix):]] = (len(files), n_files)
+
+    def write(staging):
+        for dname in sorted(os.listdir(path)):
+            if not dname.startswith(prefix):
+                continue
+            pdir = os.path.join(path, dname)
+            files = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
+            if len(files) < min_files:
+                continue
+            part = spark.read.parquet(pdir)
+            n_files = max(1, math.ceil(part.count() / target_rows_per_file))
+            if n_files >= len(files):
+                continue
+            part.repartition(n_files).write.parquet(os.path.join(staging, dname))
+            report[dname[len(prefix):]] = (len(files), n_files)
+
+    _swap(path, write, scoped=True)
     return report
 
 
