@@ -127,13 +127,28 @@ def test_high_ndv_shuffles(spark):
 
 
 def test_salt_bucket_clamps():
-    small = TableStats(rows=10**6, bytes=10 << 30, ndv=None)
+    # 100 MB replicated ×64 stays inside the replication budget
+    small = TableStats(rows=10**6, bytes=100 << 20, ndv=None)
     big = TableStats(rows=10**9, bytes=100 << 30, ndv=3.0)
     plan = plan_join_strategy(big, small, max_salt_buckets=64)
     assert plan["strategy"] == "salt" and plan["salt_buckets"] == 64
     big2 = TableStats(rows=10**9, bytes=100 << 30, ndv=500.0)
     plan2 = plan_join_strategy(big2, small, parallelism=200)
     assert plan2["strategy"] == "salt" and plan2["salt_buckets"] == 2
+
+
+def test_salt_over_replication_budget_shuffles():
+    """Salting replicates the smaller side ×buckets: a multi-GB side
+    would be copied 64 times, more than a plain shuffle moves, so the
+    planner falls back to shuffle once the copies pass the budget."""
+    big = TableStats(rows=10**9, bytes=100 << 30, ndv=3.0)
+    small = TableStats(rows=10**6, bytes=4 << 30, ndv=None)
+    plan = plan_join_strategy(big, small)
+    assert plan["strategy"] == "shuffle" and plan["salt_buckets"] is None
+    assert "budget" in plan["why"]
+    # fewer buckets bring the same side's copies inside the budget
+    plan = plan_join_strategy(big, small, max_salt_buckets=2)
+    assert plan["strategy"] == "salt" and plan["salt_buckets"] == 2
 
 
 def test_salt_swaps_when_big_side_is_right(spark, tables):

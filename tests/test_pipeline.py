@@ -608,3 +608,106 @@ def test_swap_crash_recovery_incremental_stage(spark, tmp_path, monkeypatch,
         "tier1", ["events", "tier1", "tier2", "tier3", "chunks"],
         steps=[n_sources + 1],
     )
+
+
+def _two_batches(ev):
+    """Two new-doc batches over the small store: the first ends before
+    the store's frontier, the second is a day past it."""
+    lo, hi = ev.agg(F.min("event_ts"), F.max("event_ts")).first()
+    early = ev.filter(F.col("event_ts") < F.lit(lo + (hi - lo) / 2))
+    late = ev.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 0).withColumn(
+        "event_ts", F.col("event_ts") + F.expr("interval 1 day")
+    )
+    return [
+        b.withColumn("doc_id", F.concat("doc_id", F.lit(f"-b{i}")))
+        for i, b in enumerate((early, late))
+    ]
+
+
+#: jobs one run_incremental may run on the small store: it runs 31 —
+#: the batch probe, then per merge a schema read, its query stages and
+#: the write, and the chunk table's read-back. A listing job per read or
+#: a touched-partition probe per merge would pass it.
+_BATCH_JOB_CEILING = 34
+
+
+def test_incremental_batch_job_budget(spark, tmp_path, small_store):
+    """run_incremental works out what a batch touches once: over more
+    than 32 source partitions it runs no file-listing job and at most a
+    pinned number of jobs, and after each of two batches (one behind the
+    store's frontier, one past it) every stage's manifest row still
+    equals count() and max() of its table."""
+    pre, ev = small_store
+    root = str(tmp_path / "store")
+    shutil.copytree(pre, root)
+    assert len([d for d in os.listdir(f"{root}/tier1") if "=" in d]) > 32
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    jobs = sc._jsc.sc().statusStore()
+    for i, batch in enumerate(_two_batches(ev)):
+        group = f"budget-{i}-{os.getpid()}"
+        sc.setJobGroup(group, group)
+        try:
+            pipe = TierPipeline(spark, root)
+            pipe.run_incremental(batch, f"b{i}")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        ids = tracker.getJobIdsForGroup(group)
+        descs = [jobs.job(j).description() for j in ids]
+        assert not [d.get() for d in descs
+                    if d.isDefined() and d.get().startswith("Listing")]
+        assert 0 < len(ids) <= _BATCH_JOB_CEILING, len(ids)
+
+        for stage, table, col in (
+            ("t0_events_inc", "events", "doc_id"),
+            ("tier1_inc", "tier1", "bucket_ts"),
+            ("tier2_inc", "tier2", "bucket_ts"),
+            ("tier3_inc", "tier3", "bucket_ts"),
+            ("compress_inc", "chunks", None),
+        ):
+            rec = [e for e in pipe.manifest.entries if e["stage"] == stage]
+            assert [e["run_fp"] for e in rec] == [f"b{k}" for k in range(i + 1)]
+            t = spark.read.parquet(f"{root}/{table}")
+            assert rec[-1]["rows_out"] == t.count(), stage
+            if col:
+                assert rec[-1]["watermark"] == str(t.agg(F.max(col)).first()[0]), stage
+
+
+def test_metrics_table_is_append_only(spark, tmp_path, small_store):
+    """Each flush appends only the manifest entries the metrics table
+    lacks: files already there (a Spark-written mirror from an older
+    store included) keep their mtimes, and an entry recorded before a
+    crash skipped its flush is appended by the next run."""
+    pre, ev = small_store
+    root = str(tmp_path / "store")
+    shutil.copytree(pre, root)
+    mpath = f"{root}/_manifest/metrics"
+    # the mirror as older stores hold it: written whole by Spark
+    spark.read.parquet(mpath).write.parquet(f"{root}/spark_mirror")
+    shutil.rmtree(mpath)
+    os.rename(f"{root}/spark_mirror", mpath)
+
+    def files():
+        return {f: os.path.getmtime(os.path.join(mpath, f))
+                for f in os.listdir(mpath) if f.endswith(".parquet")}
+
+    b0, b1 = _two_batches(ev)
+    before = files()
+    pipe = TierPipeline(spark, root)
+    pipe.run_incremental(b0, "b0")
+    pipe.manifest.record(run_fp="b0", stage="crashed_before_flush", status="done")
+    mid = files()
+    assert len(mid) == len(before) + 1
+    TierPipeline(spark, root).run_incremental(b1, "b1")
+    after = files()
+    assert len(after) == len(mid) + 1
+    assert {f: after[f] for f in mid} == mid
+    got = sorted(
+        (r.run_fp, r.stage, r.ts) for r in spark.read.parquet(mpath).collect()
+    )
+    want = sorted(
+        (e["run_fp"], e["stage"], e["ts"])
+        for e in TierPipeline(spark, root).manifest.entries
+    )
+    assert got == want

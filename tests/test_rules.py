@@ -392,3 +392,37 @@ def test_rule_materializer_snapshot_backed_store(spark, tmp_path):
         got = sorted(map(tuple, mat._table(name).read().collect()))
         want = sorted(map(tuple, full[name].collect()))
         assert got == want, name
+
+
+def test_restricted_lazy_store_keeps_query_range_prune_window(spark):
+    """A query_range over a _restrict'ed store hands its lazy loaders the
+    intersection of its own prune window with the refresh window, not
+    the unbounded (min_ts, far future) one; results equal the eager
+    store's."""
+    from workbook_exporter_fe_spark.plans.promql import query_range
+    from workbook_exporter_fe_spark.plans.rules import _restrict
+
+    rows = [(s, t, v) for s in ("s0", "s1") for t, v in sorted(_vals(s).items())]
+    df = spark.createDataFrame(
+        rows, "source string, tsec long, value double"
+    ).select("source", F.timestamp_seconds("tsec").alias("bucket_ts"), "value")
+    seen = []
+
+    def loader(bounds):
+        seen.append(bounds)
+        return df
+
+    min_ts = T0 + 5 * 60
+    lazy = _restrict(MetricStore().register_lazy("mem_bytes", loader), min_ts)
+    eager = _restrict(MetricStore().register("mem_bytes", df), min_ts)
+    start, end = T0 + 40 * 60, T0 + 50 * 60
+    q = "avg_over_time(mem_bytes[5m])"
+    got = query_range(lazy, q, start, end, step="1m")
+    assert seen == [(start - 300 - 300, end + 300)]
+    want = query_range(eager, q, start, end, step="1m")
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+    # a prune window reaching before min_ts is clipped to the refresh window
+    seen.clear()
+    query_range(lazy, q, T0 + 6 * 60, T0 + 8 * 60, step="1m").collect()
+    assert seen == [(min_ts, T0 + 8 * 60 + 300)]

@@ -23,10 +23,14 @@ Decision rules (the same order Spark's own CBO applies, made explicit):
    oversized partitions of ONE side; it cannot manufacture key
    parallelism for both). Salt buckets are sized so hot keys split into
    enough sub-keys to occupy the cluster: ``ceil(parallelism ×
-   min_keys_per_slot / ndv)``, clamped to [2, 64].
+   min_keys_per_slot / ndv)``, clamped to [2, 64]. Salting replicates
+   the smaller side ×buckets, and that side is above the broadcast
+   threshold by construction, so salt is taken only while
+   ``small.bytes × buckets`` fits a replication budget (8 GB).
 3. **shuffle** — plenty of keys, both sides big: the standard
    sort-merge/hash exchange is already the right plan; emitting hints
-   would only fight AQE.
+   would only fight AQE. Also the fallback when salting would replicate
+   more than its budget.
 
 NDV is an estimate (theta sketch, ~2% at the default lg_k); every
 threshold here is an order-of-magnitude decision, so estimate error is
@@ -44,6 +48,11 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+#: most bytes a salted join may copy its replicated side into; past it a
+#: plain shuffle, which moves each side once, is cheaper
+REPLICATION_BUDGET_BYTES = 8 << 30
 
 
 @dataclass(frozen=True)
@@ -138,25 +147,34 @@ def plan_join_strategy(
     need_keys = parallelism * min_keys_per_slot
     if ndv is not None and ndv < need_keys:
         buckets = max(2, min(max_salt_buckets, -(-int(need_keys) // max(int(ndv), 1))))
-        return {
-            "strategy": "salt",
-            "build_side": None,
-            "salt_buckets": buckets,
-            "why": (
-                f"big side ndv≈{ndv:.0f} < {need_keys:.0f} "
-                f"(parallelism {parallelism} × {min_keys_per_slot}/slot): "
-                f"too few keys to fill the cluster — salt ×{buckets}"
-            ),
-        }
+        replicated = small.bytes * buckets
+        if replicated <= REPLICATION_BUDGET_BYTES:
+            return {
+                "strategy": "salt",
+                "build_side": None,
+                "salt_buckets": buckets,
+                "why": (
+                    f"big side ndv≈{ndv:.0f} < {need_keys:.0f} "
+                    f"(parallelism {parallelism} × {min_keys_per_slot}/slot): "
+                    f"too few keys to fill the cluster — salt ×{buckets}"
+                ),
+            }
+        why = (
+            f"big side ndv≈{ndv:.0f} is low, but salting ×{buckets} would "
+            f"replicate {replicated >> 20} MB "
+            f"(> {REPLICATION_BUDGET_BYTES >> 20} MB budget)"
+        )
+    else:
+        why = (
+            "both sides above broadcast threshold and key NDV "
+            f"({'unknown' if ndv is None else format(ndv, '.0f')}) "
+            "spreads a plain exchange"
+        )
     return {
         "strategy": "shuffle",
         "build_side": None,
         "salt_buckets": None,
-        "why": (
-            "both sides above broadcast threshold and key NDV "
-            f"({'unknown' if ndv is None else format(ndv, '.0f')}) "
-            "spreads a plain exchange"
-        ),
+        "why": why,
     }
 
 

@@ -162,22 +162,40 @@ def _swap(path: str, write, scoped: bool = False) -> None:
     shutil.rmtree(staging, ignore_errors=True)
 
 
-def _merge_path(spark, path, new, keys, partition_col, combine) -> None:
+def in_partitions(col: str, vals) -> F.Column:
+    """``col`` is one of ``vals``; a None in ``vals`` matches the null
+    partition (the ``__HIVE_DEFAULT_PARTITION__`` dir) too."""
+    cond = F.col(col).isin([v for v in vals if v is not None])
+    return cond | F.col(col).isNull() if None in vals else cond
+
+
+def _merge_path(spark, path, new, keys, partition_col, combine,
+                touched=None) -> DataFrame | None:
     """``combine`` the partitions of ``path`` that ``new`` touches (the
-    whole table without ``partition_col``) with ``new``; swap them."""
+    whole table without ``partition_col``) with ``new``; swap them.
+    ``touched`` lists those partition values when the caller knows them;
+    it must hold every value in ``new`` (a missing one would be swapped
+    out with only its new rows). Without it one job finds them.
+
+    Returns the merged table, read with the schema the merge already
+    inferred (one schema job fewer), or None if the table is new."""
+    schema = None
 
     def write(staging):
+        nonlocal schema
         merged = new
         if os.path.exists(path):
             existing = spark.read.parquet(path)
+            schema = existing.schema
             if partition_col is not None:
-                # prune to the partitions `new` touches (tiny distinct on
-                # the new side; the filter prunes the scan at the source)
-                vals = [r[0] for r in new.select(partition_col).distinct().collect()]
-                touched = F.col(partition_col).isin(vals)
-                if None in vals:  # the __HIVE_DEFAULT_PARTITION__ dir
-                    touched = touched | F.col(partition_col).isNull()
-                existing = existing.filter(touched).withColumn(
+                # prune to the partitions `new` touches; the filter prunes
+                # the scan at the source
+                vals = touched
+                if vals is None:
+                    vals = [r[0] for r in new.select(partition_col).distinct().collect()]
+                existing = existing.filter(
+                    in_partitions(partition_col, vals)
+                ).withColumn(
                     # partition-dir values read back as strings
                     partition_col,
                     F.col(partition_col).cast(new.schema[partition_col].dataType),
@@ -187,21 +205,24 @@ def _merge_path(spark, path, new, keys, partition_col, combine) -> None:
         (w.partitionBy(partition_col) if partition_col else w).parquet(staging)
 
     _swap(path, write, scoped=partition_col is not None)
+    return None if schema is None else spark.read.schema(schema).parquet(path)
 
 
 def merge_tier_additive_path(
     spark, path: str, partial: DataFrame, keys: list[str],
-    partition_col: str | None = "source",
-) -> None:
+    partition_col: str | None = "source", touched: list | None = None,
+) -> DataFrame | None:
     """Additive tier merge against a parquet tier table on disk —
     partition-scoped like ``merge_upsert_path``: only partitions present in
     the incremental batch are read, combined, and written over."""
-    _merge_path(spark, path, partial, keys, partition_col, merge_tier_additive)
+    return _merge_path(spark, path, partial, keys, partition_col,
+                       merge_tier_additive, touched)
 
 
 def merge_upsert_path(
-    spark, path: str, new: DataFrame, keys: list[str], partition_col: str | None = None
-) -> None:
+    spark, path: str, new: DataFrame, keys: list[str],
+    partition_col: str | None = None, touched: list | None = None,
+) -> DataFrame | None:
     """MERGE against a parquet table on disk (hive-style fallback backend).
 
     With ``partition_col`` (one of ``keys``, e.g. ``source``) the table is
@@ -211,8 +232,12 @@ def merge_upsert_path(
     mtimes), which is the `replaceWhere` shape a 100 TB merge needs instead
     of staging the whole table. A partitioned merge into a table holding
     unpartitioned files raises. Without ``partition_col`` the whole table
-    is read, merged and swapped. With an Iceberg catalog configured either
+    is read, merged and swapped. ``touched``, when given, lists the
+    partition values ``new`` holds (a superset is fine) and saves the job
+    that would find them. With an Iceberg catalog configured either
     shape is a single ``spark.sql("MERGE INTO ...")`` — gated behind the
-    same signature (sources/tableio.py).
+    same signature (sources/tableio.py). Returns the merged table like
+    ``_merge_path``.
     """
-    _merge_path(spark, path, new, keys, partition_col, merge_upsert)
+    return _merge_path(spark, path, new, keys, partition_col, merge_upsert,
+                       touched)

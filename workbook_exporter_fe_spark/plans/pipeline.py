@@ -10,7 +10,15 @@ with explicit *table* state:
   one crash-safe swap, operators/merge._swap;
 - a JSON-lines **manifest** records per-stage lineage + metrics (rows
   in/out, per-source partition rows, encode ratio, watermark position,
-  wall time) — the engine's equivalent of an Iceberg metadata table;
+  wall time) — the engine's equivalent of an Iceberg metadata table.
+  Row counts (``rows_out``, per-source ``partitions``) are summed from the
+  written table's parquet footers on the driver. In ``run_incremental``
+  one aggregate job over the batch (``_probe``) gives the batch's row
+  count, touched sources and watermarks; an ``_inc`` stage's watermark
+  is the larger of the batch's and the highest one recorded for its
+  table, so no stage re-reads its table for bookkeeping. ``_manifest/metrics``
+  mirrors the manifest as an append-only parquet table, one driver-side
+  file per flush;
 - **resume**: a stage whose manifest entry is `done` for the same run
   fingerprint is skipped. A crash mid-swap leaves ``<table>.old``; the
   stage's re-run first rolls the table back to its pre-swap state, so
@@ -28,15 +36,22 @@ import datetime as _dt
 import json
 import os
 import time
+import uuid
 from dataclasses import dataclass, field
+from urllib.parse import unquote
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from workbook_exporter_fe_spark.functions.spark_codecs import compress_tier
 from workbook_exporter_fe_spark.operators.eventize import eventize
 from workbook_exporter_fe_spark.operators.merge import _swap, merge_upsert_path
-from workbook_exporter_fe_spark.operators.tiers import reaggregate, rollup_tier1
+from workbook_exporter_fe_spark.operators.tiers import (
+    TIER_TRUNC,
+    reaggregate,
+    rollup_tier1,
+)
 
 
 @dataclass
@@ -57,24 +72,23 @@ class Manifest:
             for e in self.entries
         )
 
-    def last_watermark(self, stage: str):
-        """Most recent recorded watermark for a stage (any run), parsed back
-        to a datetime — the cross-run frontier for the late-event bound."""
-        from datetime import datetime
-
+    def last_watermark(self, *stages: str, parse=_dt.datetime.fromisoformat):
+        """Highest watermark recorded for any of ``stages`` (any run),
+        parsed back by ``parse`` (to a datetime by default) — the
+        cross-run frontier for the late-event bound."""
         best = None
         for e in self.entries:
-            if e.get("stage") != stage or e.get("status") != "done":
+            if e.get("stage") not in stages or e.get("status") != "done":
                 continue
             raw = e.get("watermark")
             if not raw or raw == "None":
                 continue
             try:
-                ts = datetime.fromisoformat(str(raw))
+                wm = parse(str(raw))
             except ValueError:
                 continue
-            if best is None or ts > best:
-                best = ts
+            if best is None or wm > best:
+                best = wm
         return best
 
     def record(self, **entry) -> None:
@@ -86,6 +100,38 @@ class Manifest:
 
 
 _PY_EPOCH = _dt.datetime(1970, 1, 1)
+
+#: how a recorded watermark string parses back, by the key's Spark type
+_PARSE = {
+    "timestamp": _dt.datetime.fromisoformat,
+    "timestamp_ntz": _dt.datetime.fromisoformat,
+    "bigint": int,
+    "int": int,
+}
+
+
+def _parquet_rows(d: str) -> int:
+    """Rows of the parquet files directly in ``d``, from their footers."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(os.path.join(d, f)).num_rows
+        for f in os.listdir(d)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+
+
+def _partition_rows(path: str, col: str = "source") -> dict:
+    """Rows per ``col=`` partition of a hive parquet table, read from the
+    parquet footers on the driver — no Spark job, no data page. The
+    ``__HIVE_DEFAULT_PARTITION__`` dir maps to None."""
+    out = {}
+    for d in sorted(os.listdir(path)):
+        if d.startswith(col + "="):
+            v = unquote(d[len(col) + 1:])
+            key = None if v == "__HIVE_DEFAULT_PARTITION__" else v
+            out[key] = _parquet_rows(os.path.join(path, d))
+    return out
 
 
 def _parse_ts(x) -> _dt.datetime:
@@ -129,37 +175,40 @@ class TierPipeline:
         self.with_anomaly = with_anomaly
         self.manifest = Manifest(os.path.join(out_dir, "_manifest", "manifest.jsonl"))
 
-    def _stage(self, run_fp: str, stage: str, write, out_path: str, keys: list[str]):
+    def _stage(self, run_fp: str, stage: str, write, out_path: str,
+               keys: list[str], watermark=None):
         """Run one stage idempotently: skip if done, else write → log.
-        ``write(out_path, keys)`` merges the stage's rows into its table;
-        one per-source job over the result gives every manifest figure."""
+        ``write(out_path, keys)`` merges the stage's rows into its table
+        and may return the merged table. Row counts come from the table's
+        parquet footers. ``watermark`` is the table's max key
+        (``bucket_ts``, else the last key) when the caller knows it; by
+        default one job reads it."""
         if self.manifest.done(run_fp, stage):
             return self.spark.read.parquet(out_path)
         t0 = time.perf_counter()
-        write(out_path, keys)
-        result = self.spark.read.parquet(out_path)
-        wm_col = "bucket_ts" if "bucket_ts" in keys else keys[-1]
-        per_source = result.groupBy("source").agg(
-            F.count("*").alias("n"), F.max(wm_col).alias("wm")
-        ).collect()
-        wm = max((r["wm"] for r in per_source if r["wm"] is not None), default=None)
+        result = write(out_path, keys)
+        if result is None:
+            result = self.spark.read.parquet(out_path)
+        if watermark is None:
+            wm_col = "bucket_ts" if "bucket_ts" in keys else keys[-1]
+            watermark = result.agg(F.max(wm_col)).first()[0]
+        per_source = _partition_rows(out_path)
         # incremental stages keep their lean manifest row
-        extra = {} if stage.endswith("_inc") else {
-            "partitions": {r["source"]: r["n"] for r in per_source}
-        }
+        extra = {} if stage.endswith("_inc") else {"partitions": per_source}
         self.manifest.record(
             run_fp=run_fp,
             stage=stage,
             status="done",
-            rows_out=sum(r["n"] for r in per_source),
+            rows_out=sum(per_source.values()),
             **extra,
-            watermark=str(wm),
+            watermark=str(watermark),
             wall_sec=round(time.perf_counter() - t0, 3),
         )
         return result
 
-    def _bound_late(self, events: DataFrame, run_fp: str) -> DataFrame:
-        """Apply the late-event watermark when ``late_delay`` is set.
+    def _bound_late(self, events: DataFrame):
+        """Apply the late-event watermark when ``late_delay`` is set;
+        returns the bounded events and the frontier.
 
         Events behind (high-water - delay) never reach the rollup, so
         finalized buckets stay finalized under out-of-order re-deliveries
@@ -167,19 +216,42 @@ class TierPipeline:
         last manifest-recorded watermark is fed back in, so replaying old
         data can never lower the cutoff and reopen finalized buckets."""
         if not self.late_delay:
-            return events
+            return events, None
         from workbook_exporter_fe_spark.operators.retention import (
             bound_late_events,
         )
 
         prior_wm = self.manifest.last_watermark("late_bound")
-        events, wm = bound_late_events(events, self.late_delay, prior_wm=prior_wm)
-        if not self.manifest.done(run_fp, "late_bound"):
+        return bound_late_events(events, self.late_delay, prior_wm=prior_wm)
+
+    def _log_late(self, run_fp: str, wm, rows_out) -> None:
+        """Record the run's ``late_bound`` row once; ``rows_out()`` counts
+        the events the bound kept."""
+        if self.late_delay and not self.manifest.done(run_fp, "late_bound"):
             self.manifest.record(
                 run_fp=run_fp, stage="late_bound", status="done",
-                rows_out=events.count(), watermark=str(wm), wall_sec=0.0,
+                rows_out=rows_out(), watermark=str(wm), wall_sec=0.0,
             )
-        return events
+
+    def _probe(self, events: DataFrame) -> dict:
+        """One aggregate job over a batch for everything the incremental
+        stages need to know of it: ``rows``; the touched ``sources``, a
+        null source included (every merge takes them instead of finding
+        them itself); the max ``doc_id``, the events table's watermark
+        key; and the max 1m/1h/1d bucket, each tier's batch watermark."""
+        grains = ("1m", "1h", "1d")
+        row = events.agg(
+            F.count("*").alias("rows"),
+            # a struct keeps the null source that collect_set would drop
+            F.collect_set(F.struct("source")).alias("sources"),
+            F.max("doc_id").alias("doc_id"),
+            *[F.max(F.date_trunc(TIER_TRUNC[g], "event_ts")).alias(g) for g in grains],
+        ).first()
+        return {
+            "rows": row["rows"],
+            "sources": [r["source"] for r in row["sources"]],
+            **{k: row[k] for k in ("doc_id", *grains)},
+        }
 
     def run(self, sequences: DataFrame, run_fp: str) -> dict[str, DataFrame]:
         """Execute (or resume) the full cascade; returns the tier tables."""
@@ -199,7 +271,8 @@ class TierPipeline:
             lambda: eventize(sequences).select("source", "event_ts", "v", "doc_id"),
             "events", ("source", "doc_id"),
         )
-        events = self._bound_late(events, run_fp)
+        events, late_wm = self._bound_late(events)
+        self._log_late(run_fp, late_wm, events.count)
         out["tier1"] = t1 = stage(
             "tier1_1m", lambda: rollup_tier1(events, salt_buckets=self.salt_buckets), "tier1"
         )
@@ -485,86 +558,105 @@ class TierPipeline:
           cascade never reads the merged tier below);
         - chunks: only the (source, day) segments the batch touched are
           re-encoded from the merged tier-1 and upserted.
+
+        One aggregate job (``_probe``) over the batch gives its row count,
+        touched sources and watermarks; no stage re-reads a table for its
+        manifest row. The batch's tier-1 partials are built once and read
+        by tier-2/3 and the chunk segments from disk-persisted blocks.
         """
         # looked up per call, like merge_upsert_path, so a wrapped
         # merge.merge_tier_additive_path is the one that runs
         from workbook_exporter_fe_spark.operators import merge
 
+        out: dict[str, DataFrame] = {}
+        events, late_wm = self._bound_late(events)
+        batch = self._probe(events)
+        self._log_late(run_fp, late_wm, lambda: batch["rows"])
+        touched = batch["sources"]
+        in_touched = merge.in_partitions("source", touched)
+
+        def watermark(key, stages):
+            """The table's max ``key``: the batch's, or the highest one a
+            stage writing the table recorded before."""
+            col = "doc_id" if key == "doc_id" else "event_ts"
+            parse = _PARSE.get(dict(events.dtypes)[col], str)
+            prior = self.manifest.last_watermark(*stages, parse=parse)
+            return max((w for w in (batch[key], prior) if w is not None), default=None)
+
+        def upsert(new):
+            return lambda path, keys: merge_upsert_path(
+                self.spark, path, new, keys, partition_col="source", touched=touched
+            )
+
         def add(partial):
             return lambda path, keys: merge.merge_tier_additive_path(
-                self.spark, path, partial, keys
+                self.spark, path, partial, keys, touched=touched
             )
 
-        out: dict[str, DataFrame] = {}
-        events = self._bound_late(events, run_fp)
         out["events"] = self._stage(
-            run_fp, "t0_events_inc",
-            lambda p, k: merge_upsert_path(self.spark, p, events, k, partition_col="source"),
-            f"{self.out}/events", ["source", "doc_id"],
+            run_fp, "t0_events_inc", upsert(events), f"{self.out}/events",
+            ["source", "doc_id"],
+            watermark("doc_id", ("t0_eventize", "t0_events_inc")),
         )
         keys = ["source", "bucket_ts"]
-        partial1 = rollup_tier1(events, salt_buckets=self.salt_buckets)
-        out["tier1"] = self._stage(
-            run_fp, "tier1_inc", add(partial1), f"{self.out}/tier1", keys
+        partial1 = rollup_tier1(events, salt_buckets=self.salt_buckets).persist(
+            StorageLevel.DISK_ONLY
         )
-        partial2 = reaggregate(partial1, "1h")
-        out["tier2"] = self._stage(
-            run_fp, "tier2_inc", add(partial2), f"{self.out}/tier2", keys
-        )
-        partial3 = reaggregate(partial2, "1d")
-        out["tier3"] = self._stage(
-            run_fp, "tier3_inc", add(partial3), f"{self.out}/tier3", keys
-        )
+        try:
+            partial2 = reaggregate(partial1, "1h")
+            for tier, grain, name, partial in (
+                ("tier1", "1m", "tier1_1m", partial1),
+                ("tier2", "1h", "tier2_1h", partial2),
+                ("tier3", "1d", "tier3_1d", reaggregate(partial2, "1d")),
+            ):
+                out[tier] = self._stage(
+                    run_fp, f"{tier}_inc", add(partial), f"{self.out}/{tier}", keys,
+                    watermark(grain, (name, f"{tier}_inc")),
+                )
 
-        # re-encode ONLY the (source, day) segments this batch touched,
-        # reading exact merged values from tier-1
-        chunks_path = f"{self.out}/chunks"
-        if not self.manifest.done(run_fp, "compress_inc"):
-            t0c = time.perf_counter()
-            affected = partial1.select(
-                "source", F.date_trunc("day", "bucket_ts").alias("_seg")
-            ).distinct()
-            t1 = out["tier1"].withColumn(
-                "_seg", F.date_trunc("day", "bucket_ts")
-            )
-            sliced = t1.join(F.broadcast(affected), ["source", "_seg"]).drop("_seg")
-            chunks = compress_tier(sliced, value_col=self.value_col)
-            merge_upsert_path(
-                self.spark, chunks_path, chunks, ["source", "segment_start"],
-                partition_col="source",
-            )
-            self.manifest.record(
-                run_fp=run_fp, stage="compress_inc", status="done",
-                rows_out=self.spark.read.parquet(chunks_path).count(),
-                wall_sec=round(time.perf_counter() - t0c, 3),
-            )
+            # re-encode ONLY the (source, day) segments this batch touched,
+            # reading exact merged values from tier-1
+            chunks_path = f"{self.out}/chunks"
+            if not self.manifest.done(run_fp, "compress_inc"):
+                t0c = time.perf_counter()
+                affected = partial1.select(
+                    "source", F.date_trunc("day", "bucket_ts").alias("_seg")
+                ).distinct()
+                t1 = out["tier1"].filter(in_touched).withColumn(
+                    "_seg", F.date_trunc("day", "bucket_ts")
+                )
+                sliced = t1.join(F.broadcast(affected), ["source", "_seg"]).drop("_seg")
+                chunks = compress_tier(sliced, value_col=self.value_col)
+                upsert(chunks)(chunks_path, ["source", "segment_start"])
+                self.manifest.record(
+                    run_fp=run_fp, stage="compress_inc", status="done",
+                    rows_out=sum(_partition_rows(chunks_path).values()),
+                    wall_sec=round(time.perf_counter() - t0c, 3),
+                )
+        finally:
+            partial1.unpersist()
         # rolling-anomaly tier: windows are NOT additive (trailing 30-row
         # frames), so recompute — but only the SOURCES this batch touched,
         # reading the merged tier-1 (partition-scoped upsert keeps every
         # untouched source's files in place).
+        anomaly_path = f"{self.out}/anomaly1"
         if self.with_anomaly and not self.manifest.done(run_fp, "anomaly_inc"):
             from workbook_exporter_fe_spark.operators.rates import anomaly_zscore
 
             t0a = time.perf_counter()
-            touched = partial1.select("source").distinct()
             recomputed = anomaly_zscore(
-                out["tier1"]
-                .join(F.broadcast(touched), "source")
-                .select("source", "bucket_ts", "avg_v"),
+                out["tier1"].filter(in_touched).select("source", "bucket_ts", "avg_v"),
                 n=30,
                 threshold=3.0,
             )
-            merge_upsert_path(
-                self.spark, f"{self.out}/anomaly1", recomputed,
-                ["source", "bucket_ts"], partition_col="source",
-            )
+            upsert(recomputed)(anomaly_path, ["source", "bucket_ts"])
             self.manifest.record(
                 run_fp=run_fp, stage="anomaly_inc", status="done",
-                rows_out=self.spark.read.parquet(f"{self.out}/anomaly1").count(),
+                rows_out=sum(_partition_rows(anomaly_path).values()),
                 wall_sec=round(time.perf_counter() - t0a, 3),
             )
         if self.with_anomaly:
-            out["anomaly1"] = self.spark.read.parquet(f"{self.out}/anomaly1")
+            out["anomaly1"] = self.spark.read.parquet(anomaly_path)
 
         out["chunks"] = self.spark.read.parquet(chunks_path)
         self._write_metrics_table()
@@ -615,7 +707,20 @@ class TierPipeline:
     def _write_metrics_table(self) -> None:
         """Mirror the JSONL manifest as a queryable parquet metrics table —
         the hive-fallback analog of the north rule's Iceberg metadata
-        table (on Iceberg, this becomes an append to a metadata table)."""
+        table. Append-only and driver-side: the manifest entries past the
+        table's footer row count go into one new parquet file (written
+        under a hidden name, then renamed), so an entry recorded just
+        before a crash is appended by the next run, and earlier files —
+        a Spark-written mirror from an older store too — stay as they
+        are."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        path = f"{self.out}/_manifest/metrics"
+        os.makedirs(path, exist_ok=True)
+        new = self.manifest.entries[_parquet_rows(path):]
+        if not new:
+            return
         rows = [
             {
                 "run_fp": e.get("run_fp"),
@@ -628,18 +733,20 @@ class TierPipeline:
                 "partitions_json": json.dumps(e.get("partitions", {})),
                 "ts": float(e.get("ts", 0.0)),
             }
-            for e in self.manifest.entries
+            for e in new
         ]
-        if not rows:
-            return
-        schema = (
-            "run_fp string, stage string, status string, rows_out long, "
-            "watermark string, wall_sec double, encode_ratio double, "
-            "partitions_json string, ts double"
-        )
-        self.spark.createDataFrame(rows, schema=schema).write.mode(
-            "overwrite"
-        ).parquet(f"{self.out}/_manifest/metrics")
+        # the column types Spark wrote the mirror with
+        schema = pa.schema([
+            ("run_fp", pa.string()), ("stage", pa.string()), ("status", pa.string()),
+            ("rows_out", pa.int64()), ("watermark", pa.string()),
+            ("wall_sec", pa.float64()), ("encode_ratio", pa.float64()),
+            ("partitions_json", pa.string()), ("ts", pa.float64()),
+        ])
+        table = pa.Table.from_pylist(rows, schema=schema)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(path, f".{name}.tmp")
+        pq.write_table(table, tmp, compression="zstd")
+        os.rename(tmp, os.path.join(path, name))
 
 
 def publish_snapshot_tiers(

@@ -292,7 +292,10 @@ def _restrict(store: MetricStore, min_ts: float) -> MetricStore:
     the metric pay its manifest work — at 100 TB a day's rule refresh
     opens a day-plus-lookback of tier files, never the table (r5; also
     the fix for lazy metrics simply VANISHING from the restricted view,
-    since they live in ``_lazy``, not ``_metrics``, until first load)."""
+    since they live in ``_lazy``, not ``_metrics``, until first load).
+    A caller's own prune window (``query_range`` through
+    ``MetricStore.bounded``) is intersected with the refresh window, not
+    replaced by it."""
     sub = MetricStore()
     sub.pruning_stats = store.pruning_stats
     for name, (df, labels) in store._metrics.items():
@@ -307,7 +310,10 @@ def _restrict(store: MetricStore, min_ts: float) -> MetricStore:
     for name, (loader, labels, ts_col, value_col) in store._lazy.items():
 
         def _bounded_loader(bounds, _l=loader, _ts=ts_col):
-            raw = _l((int(min_ts), _FAR_FUTURE))
+            lo, hi = int(min_ts), _FAR_FUTURE
+            if bounds is not None:
+                lo, hi = max(lo, int(bounds[0])), min(hi, int(bounds[1]))
+            raw = _l((lo, max(lo, hi)))
             return raw.filter(
                 F.col(_ts).cast("timestamp").cast("double")
                 > F.lit(float(min_ts))

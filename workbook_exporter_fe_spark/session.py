@@ -52,6 +52,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # a hive table with more than 32 partition dirs (the default
+        # threshold) is listed by a Spark job on every read — a second
+        # or so of scheduling for what the driver lists in milliseconds.
+        # Keep the listing of a few hundred source= dirs on the driver.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         # saveAsTable (bucketed tables) must not drop spark-warehouse/
         # into whatever cwd the session was built from
         .config(
