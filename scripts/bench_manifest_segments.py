@@ -4,9 +4,9 @@ inline file lists vs file-list segments (sources/snapshots.py).
 
 The quantity under test is pure METADATA work — no Spark session. Each
 "commit" publishes 2 pre-written tiny parquet files through
-``commit_files`` (the same free-function path the Python Data Source
-writer and SnapshotTable.commit use), staged into ``c{seq}-`` dirs so
-data-sequence parsing holds. Two modes over the same N commits:
+``commit_files`` — the one manifest writer every commit goes through
+(every SnapshotTable operation and the snapshot_log data source) —
+staged into ``c{seq}-`` dirs so data-sequence parsing holds. Two modes over the same N commits:
 
 - inline:    MANIFEST_INLINE_MAX = 10**9 (every manifest carries the
              whole file list — the pre-segments behavior)
@@ -69,7 +69,7 @@ def run_mode(root: str, commits: int, files_per: int, tmpl: str) -> dict:
             shutil.copyfile(tmpl, p)
             paths.append(p)
         t1 = time.perf_counter()
-        S.commit_files(root, paths, SCHEMA_JSON, check_schema=False)
+        S.commit_files(root, paths, SCHEMA_JSON)
         per_commit.append(time.perf_counter() - t1)
     wall = time.perf_counter() - t0
     meta = os.path.join(root, "metadata")

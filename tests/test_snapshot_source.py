@@ -3,6 +3,8 @@ schema evolution through the source, and exactly-once streaming tail."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -133,6 +135,37 @@ def test_stream_rejects_history_rewrite(spark, table, tmp_path):
     table.commit(_mk(spark, 0, 10), mode="overwrite")
     with pytest.raises(Exception, match="not append"):
         _run_available_now(spark, table.root, out, ckpt)
+
+
+def test_stream_lagging_behind_expiry_breaks_at_planning(
+    spark, table, tmp_path
+):
+    """A stream whose checkpointed offset fell behind expire_snapshots
+    fails when it plans the next batch, with the same
+    IncrementalScanBreak as changes(), naming the expired snapshot."""
+    from workbook_exporter_fe_spark.sources import snapshots
+
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    _run_available_now(spark, table.root, out, ckpt)  # offset 2
+    table.commit(_mk(spark, 200, 210))  # 3
+    table.commit(_mk(spark, 210, 220))  # 4
+    table.compact(target_file_bytes=1 << 30)  # 5
+    table.expire_snapshots(keep_last=1)
+    with pytest.raises(
+        Exception, match=r"(?s)IncrementalScanBreak.*snapshot 4 was expired"
+    ):
+        _run_available_now(spark, table.root, out, ckpt)
+    assert spark.read.parquet(out).count() == 200  # nothing half-read
+    # appended files gone while their manifest survives: same break,
+    # naming the snapshot that appended them
+    table.commit(_mk(spark, 300, 310))  # 6
+    table.commit(_mk(spark, 310, 320))  # 7
+    gone = table.snapshot(7)["files"][-1]["path"]
+    os.remove(gone)
+    with pytest.raises(
+        snapshots.IncrementalScanBreak, match="appended by snapshot 7"
+    ):
+        snapshots.appended_files(table.root, 5, 7)
 
 
 def test_stream_starting_latest(spark, table, tmp_path):

@@ -277,16 +277,62 @@ def test_compact_loses_race_with_concurrent_append(spark, table):
     concurrent append's rows from the current snapshot."""
     table.commit(_df(spark, 0, 10, "a"))
     table.commit(_df(spark, 10, 20, "b"))
-    stale = table.snapshot()
-    table.commit(_df(spark, 20, 25, "c"))  # the race winner
+    write_data = table._write_data
+
+    def racing_write(df, commit_dir, distribute=True):
+        write_data(df, commit_dir, distribute)  # the compaction output
+        table._write_data = write_data
+        table.commit(_df(spark, 20, 25, "c"))  # the race winner
+
+    table._write_data = racing_write
     with pytest.raises(SnapshotConflict):
-        table._commit_manifest(
-            operation="replace",
-            files=stale["files"],
-            schema=stale["schema"],
-            expected_parent=2,
-        )
+        table.compact(target_file_bytes=1 << 30)
     assert table.read().count() == 25  # nothing was erased
+    assert table.snapshot()["operation"] == "append"
+
+
+def test_manifest_creation_is_exclusive(spark, table, monkeypatch):
+    """A manifest that lands under the allocated sequence between
+    allocation and publication wins: the late writer raises
+    SnapshotConflict, removes its data dir, leaves the winner's bytes
+    alone and does not move the hint."""
+    import workbook_exporter_fe_spark.sources.snapshots as S
+
+    table.commit(_df(spark, 0, 10, "a"))
+    d = str(table.data) + "/c_race"
+    _df(spark, 10, 20, "b").write.parquet(d)
+    paths = [os.path.join(d, n) for n in os.listdir(d) if n.endswith(".parquet")]
+    winner = b'{"sequence": 2, "written_by": "competitor"}'
+    allocated: list[str] = []
+    max_sequence, current_sequence = S.max_sequence, S.current_sequence
+
+    def allocate(root):
+        n = max_sequence(root)
+        allocated.append(os.path.join(root, "metadata", f"snap-{n + 1:08d}.json"))
+        return n
+
+    def racing_head(root):
+        if allocated and not os.path.exists(allocated[0]):
+            with open(allocated[0], "wb") as f:
+                f.write(winner)
+        return current_sequence(root)
+
+    monkeypatch.setattr(S, "max_sequence", allocate)
+    monkeypatch.setattr(S, "current_sequence", racing_head)
+    with pytest.raises(SnapshotConflict):
+        S.commit_files(
+            table.root,
+            paths,
+            _df(spark, 10, 20, "b").schema.jsonValue(),
+            parent=1,
+            cleanup_dir=d,
+        )
+    monkeypatch.undo()
+    with open(allocated[0], "rb") as f:
+        assert f.read() == winner
+    assert table.current_sequence() == 1
+    assert not os.path.exists(d)
+    assert table.read().count() == 10
 
 
 def test_changes_breaks_on_expired_files(spark, table):

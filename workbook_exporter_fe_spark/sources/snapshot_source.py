@@ -21,7 +21,8 @@ Design (all of it is the 100 TB story):
 - **Filter pushdown prunes whole files.** ``pushFilters`` keeps every
   comparison filter on a top-level column and intersects it with the
   manifest's per-file min/max footer stats — the same superset-guard
-  pruning as ``SnapshotTable.scan(col_between=...)``. All filters are
+  file selection as ``SnapshotTable.read(col_between=...)`` /
+  ``scan_files`` (``snapshots.select_files``). All filters are
   returned to Spark (pruning is a superset guard, like partition
   pruning), so correctness never depends on the stats.
 - **Reads are Arrow batches.** ``read()`` yields pyarrow RecordBatches
@@ -31,10 +32,11 @@ Design (all of it is the 100 TB story):
   ``SnapshotTable.read``.
 - **Streaming offsets are snapshot sequences.** The micro-batch stream
   reader's offset is ``{"sequence": N}``; each batch reads the files
-  APPENDED in ``(start, end]`` via the same manifest diff as
-  ``SnapshotTable.changes`` — ``replace`` (compaction) and ``evolve``
-  snapshots are skipped, an ``overwrite``/``rollback`` in the range
-  fails the stream loudly (history rewrites cannot be streamed).
+  APPENDED in ``(start, end]`` via the same parent-chain walk as
+  ``SnapshotTable.changes`` (``snapshots.appended_files``) — ``replace``
+  (compaction) and ``evolve`` snapshots are skipped; an
+  ``overwrite``/``rollback`` in the range, or a range already expired,
+  fails the stream at planning with ``IncrementalScanBreak``.
   Spark's own checkpoint/offset log makes consumption exactly-once;
   a restart resumes from the checkpointed sequence.
 
@@ -87,16 +89,16 @@ def register(spark) -> None:
 # snapshots.py instead of going through SnapshotTable (which wants a
 # session for its DataFrame helpers).
 
-from workbook_exporter_fe_spark.sources.partitioning import (  # noqa: E402
-    file_survives_partition as _file_survives_partition,
-)
 from workbook_exporter_fe_spark.sources.snapshots import (  # noqa: E402
+    _check_append_schema,
+    appended_files as _appended_files,
     commit_files as _commit_files,
     current_sequence as _current_sequence,
-    file_survives_eq as _file_survives_eq,
+    file_deletes as _file_deletes,
     load_manifest as _load_manifest,
-    max_sequence as _max_sequence,
-    path_dseq as _path_dseq,
+    load_manifest_raw as _load_manifest_raw,
+    new_commit_dir as _new_commit_dir,
+    select_files as _select_files,
 )
 
 
@@ -104,39 +106,6 @@ def _norm(value):
     """Normalize a filter value to the manifest-stats domain (stats store
     timestamps/dates as isoformat strings; everything else raw)."""
     return value.isoformat() if hasattr(value, "isoformat") else value
-
-
-def _partition_fields_of(root: str):
-    """Parsed hidden-partitioning spec from the table's properties file
-    (sources/partitioning.py) — [] when unpartitioned or unreadable."""
-    import json
-    import os
-
-    from workbook_exporter_fe_spark.sources.partitioning import parse_spec
-
-    try:
-        with open(os.path.join(root, "metadata", "properties.json")) as f:
-            return parse_spec(list(json.load(f).get("partition.spec") or []))
-    except (OSError, ValueError):
-        return []
-
-
-def _file_survives(f: dict, bounds: dict) -> bool:
-    """Manifest min/max check; missing stats or incomparable types keep
-    the file (superset guard, same contract as SnapshotTable.scan)."""
-    for col, (lo, hi) in bounds.items():
-        fmin = f["min"].get(col)
-        fmax = f["max"].get(col)
-        if fmin is None or fmax is None:
-            continue
-        try:
-            if (hi is not None and fmin > hi) or (
-                lo is not None and fmax < lo
-            ):
-                return False
-        except TypeError:  # e.g. string stats vs numeric filter
-            continue
-    return True
 
 
 def _bounds_from_filters(filters: list) -> dict:
@@ -330,32 +299,11 @@ class SnapshotLogBatchReader(DataSourceReader):
         if seq == 0:
             return []
         manifest = _load_manifest(self.root, seq)
-        files = manifest["files"]
-        pfields = _partition_fields_of(self.root)
-        deletes = manifest.get("deletes") or []
+        files, _ = _select_files(self.root, manifest, self.bounds, self.eq)
         return [
-            FilePartition(
-                f["path"],
-                f["rows"],
-                tuple(sorted({
-                    p
-                    for d in deletes
-                    if f["path"] in (d.get("data_files") or {})
-                    for p in d["paths"]
-                })),
-                tuple(
-                    (tuple(d["paths"]), tuple(d["eq_cols"]))
-                    for d in deletes
-                    if "eq_cols" in d
-                    and _path_dseq(f["path"]) <= d["seq"]
-                ),
-            )
+            FilePartition(f["path"], f["rows"],
+                          *_file_deletes(manifest, f["path"]))
             for f in files
-            if _file_survives(f, self.bounds)
-            and _file_survives_eq(f, self.eq)
-            and _file_survives_partition(
-                f.get("partition"), pfields, self.eq, self.bounds
-            )
         ]
 
     def read(self, partition: FilePartition) -> Iterator:
@@ -412,44 +360,12 @@ class SnapshotLogStreamReader(DataSourceStreamReader):
         return {"sequence": _current_sequence(self.root)}
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        lo, hi = start["sequence"], end["sequence"]
-        # walk the PARENT chain, not the sequence range: branch commits
-        # (write-audit-publish staging) allocate global sequence numbers
-        # without being on main's history — a range walk would stream a
-        # foreign branch's unpublished files into this consumer
-        chain: list[dict] = []
-        seq = hi
-        while seq > lo:
-            m = _load_manifest(self.root, seq)
-            chain.append(m)
-            seq = int(m["parent"])
-        if seq != lo:
-            raise RuntimeError(
-                f"offset {lo} is not an ancestor of {hi} — the checkpoint "
-                "points into another branch's history; restart the query "
-                "from a fresh checkpoint"
+        return [
+            FilePartition(f["path"], f["rows"])
+            for f in _appended_files(
+                self.root, start["sequence"], end["sequence"]
             )
-        new: list[FilePartition] = []
-        prev = (
-            {f["path"] for f in _load_manifest(self.root, lo)["files"]}
-            if lo > 0
-            else set()
-        )
-        for m in reversed(chain):
-            paths = {f["path"]: f for f in m["files"]}
-            if m["operation"] == "append":
-                new.extend(
-                    FilePartition(p, paths[p]["rows"])
-                    for p in sorted(set(paths) - prev)
-                )
-            elif m["operation"] not in ("replace", "evolve"):
-                raise RuntimeError(
-                    f"snapshot {m['sequence']} is '{m['operation']}', not "
-                    "append — history rewrites cannot be streamed; restart "
-                    "the query from a fresh checkpoint"
-                )
-            prev = set(paths)
-        return new
+        ]
 
     def read(self, partition: FilePartition) -> Iterator:
         yield from _read_file_batches(
@@ -510,10 +426,7 @@ def _stage_commit_dir(root: str, paths: list) -> tuple:
     the directions that matter. Returns (new paths, commit dir)."""
     if not paths:
         return [], None
-    dst = os.path.join(
-        root, "data",
-        f"c{_max_sequence(root) + 1:08d}-{uuid.uuid4().hex[:8]}",
-    )
+    dst = _new_commit_dir(root)
     os.makedirs(dst, exist_ok=True)
     out = []
     for p in paths:
@@ -536,10 +449,7 @@ def _eq_entry_from_files(root: str, paths: list, eq_cols: list) -> dict:
     if missing:
         raise ValueError(f"upsertKeys column(s) {missing} not in batch")
     distinct = t.group_by(list(eq_cols)).aggregate([])
-    kdir = os.path.join(
-        root, "data",
-        f"c{_max_sequence(root) + 1:08d}-eqdv-{uuid.uuid4().hex[:8]}",
-    )
+    kdir = _new_commit_dir(root, "eqdv-")
     os.makedirs(kdir, exist_ok=True)
     kpath = os.path.join(kdir, "keys.parquet")
     pq.write_table(distinct, kpath)
@@ -578,9 +488,10 @@ class SnapshotLogBatchWriter(DataSourceArrowWriter):
                 self.root,
                 staged,
                 self.schema.jsonValue(),
-                mode=self.mode,
+                operation=self.mode,
                 summary={"writer": "snapshot_log", "tasks": len(staged)},
                 cleanup_dir=dst,
+                base=0 if self.mode == "overwrite" else None,
             )
         finally:
             # staging dir now holds only failed-attempt garbage (if any)
@@ -666,7 +577,7 @@ class SnapshotLogStreamWriter(DataSourceStreamArrowWriter):
             self.root,
             staged,
             self.schema.jsonValue(),
-            mode="append",
+            operation="upsert" if eq else "append",
             cleanup_dir=dst,
             summary={
                 "writer": "snapshot_log_stream",
@@ -674,7 +585,7 @@ class SnapshotLogStreamWriter(DataSourceStreamArrowWriter):
                 "stream_id": self.stream_id,
                 **({"mode": "upsert"} if eq else {}),
             },
-            eq_delete=eq,
+            new_deletes=[eq] if eq else None,
         )
 
     def abort(self, messages, batchId: int) -> None:
@@ -757,15 +668,15 @@ class SnapshotLogDataSource(DataSource):
         )
 
     def writer(self, schema: StructType, overwrite: bool) -> SnapshotLogBatchWriter:
-        from workbook_exporter_fe_spark.sources.snapshots import (
-            _check_append_schema_json,
-        )
-
         # fail an incompatible append at PLANNING time — before any task
         # writes data; the commit-time check remains authoritative under
         # concurrent evolve/overwrite races
-        if not overwrite and _current_sequence(self._root()) > 0:
-            _check_append_schema_json(self._root(), schema.jsonValue())
+        seq = _current_sequence(self._root())
+        if not overwrite and seq > 0:
+            _check_append_schema(
+                _load_manifest_raw(self._root(), seq)["schema"],
+                schema.jsonValue(),
+            )
         return SnapshotLogBatchWriter(self._root(), schema, overwrite)
 
     def streamWriter(self, schema: StructType, overwrite: bool) -> SnapshotLogStreamWriter:

@@ -13,17 +13,18 @@ as a from-scratch snapshot log over immutable parquet files:
   time travel until `expire_snapshots`);
 - the manifest records per-file row counts and per-column min/max taken
   from the parquet FOOTERS (pyarrow, driver-side, new files only — no
-  extra Spark action), which `scan(col_between=...)` uses to prune whole
-  files before Spark ever lists them: the manifest-stats analogue of
-  Iceberg's metadata-based split planning. At 100 TB this is the
+  extra Spark action), which `read(col_between=...)` / `scan_files` use
+  to prune whole files before Spark ever lists them: the manifest-stats
+  analogue of Iceberg's metadata-based split planning. At 100 TB this is the
   difference between listing/opening every file and opening only the
   time-range you asked for — row-group pruning inside Spark's reader
   then narrows further;
 - `version-hint.text` points at the current sequence (the only mutable
   byte on disk); it is swapped with ``os.replace`` (atomic on POSIX) and
-  commits are optimistic — a concurrent writer racing the same sequence
-  number loses with ``SnapshotConflict`` instead of corrupting the log
-  (Iceberg's optimistic-concurrency model; like
+  commits are optimistic — every commit goes through ``commit_files``,
+  which creates its manifest exclusively, so a concurrent writer racing
+  the same sequence number loses with ``SnapshotConflict`` instead of
+  corrupting the log (Iceberg's optimistic-concurrency model; like
   operators/retention.expire_tiers this assumes a local/posix-rename
   filesystem — object stores need a real catalog for the pointer swap);
 - `read(sequence=...)` is time travel, `rollback(sequence)` commits a
@@ -156,11 +157,11 @@ def _atomic_write(path: str, text: str) -> None:
 
 
 # ------------------------------------------------- session-free commit path
-# The snapshot_log DataSource writer (sources/snapshot_source.py) commits
-# from Spark's data-source commit hook, where no SparkSession exists: the
-# executors have already written parquet files, and publishing them is
-# pure metadata work. These free functions are that path; SnapshotTable
-# delegates to them so there is exactly one manifest-assembly code path.
+# Publishing a snapshot is pure metadata work, so it needs no SparkSession:
+# ``commit_files`` is the one manifest writer, called by every
+# SnapshotTable operation and by the snapshot_log data source
+# (sources/snapshot_source.py), which commits from Spark's data-source
+# commit hook where no session exists.
 
 
 def current_sequence(root: str) -> int:
@@ -267,22 +268,6 @@ def _write_segment(meta: str, seq: int, entries: list[dict]) -> dict:
     }
 
 
-def _merge_tail_segments(
-    meta: str, seq: int, segs: list[dict]
-) -> tuple[list[dict], list[str]]:
-    """Binary-counter merge: while the second-to-last segment is no
-    bigger than the last, fold them into one new segment. Keeps the ref
-    list O(log files) with amortized O(1)·log writes per file entry."""
-    segs = list(segs)
-    created: list[str] = []
-    while len(segs) >= 2 and segs[-2]["entries"] <= segs[-1]["entries"]:
-        merged = _load_segment(meta, segs[-2]) + _load_segment(meta, segs[-1])
-        ref = _write_segment(meta, seq, merged)
-        created.append(os.path.join(meta, ref["path"]))
-        segs = segs[:-2] + [ref]
-    return segs, created
-
-
 def _segments_footer_rows(raw: dict) -> int:
     """Total FOOTER rows of a raw manifest without resolving segments."""
     if raw.get("file_segments"):
@@ -307,6 +292,44 @@ def max_sequence(root: str) -> int:
                 except ValueError:
                     pass
     return best
+
+
+def new_commit_dir(root: str, kind: str = "") -> str:
+    """A fresh ``data/c{seq:08d}-{kind}{hex8}`` directory name, where seq
+    is ``max_sequence + 1`` — the sequence the commit will get unless a
+    racing writer publishes first. Data files take their data sequence
+    from it (``path_dseq``); ``kind`` ('dv-', 'eqdv-') marks delete
+    files, which never parse as data."""
+    return os.path.join(
+        root, "data",
+        f"c{max_sequence(root) + 1:08d}-{kind}{uuid.uuid4().hex[:8]}",
+    )
+
+
+def table_properties(root: str) -> dict:
+    """The table's ``metadata/properties.json`` ({} when unset)."""
+    p = os.path.join(root, "metadata", "properties.json")
+    if not os.path.exists(p):
+        return {}
+    with open(p) as f:
+        return json.load(f)
+
+
+def partition_fields(root: str) -> list:
+    """Parsed ``partition.spec`` table property (see
+    sources/partitioning.py) — empty list = unpartitioned writes."""
+    from workbook_exporter_fe_spark.sources.partitioning import parse_spec
+
+    return parse_spec(list(table_properties(root).get("partition.spec") or []))
+
+
+def branch_heads(root: str) -> dict[str, int]:
+    """Branch name → head sequence (``metadata/branches.json``)."""
+    p = os.path.join(root, "metadata", "branches.json")
+    if not os.path.exists(p):
+        return {}
+    with open(p) as f:
+        return {k: int(v) for k, v in json.load(f).items()}
 
 
 def file_stats_for_paths(paths: list[str]) -> list[dict]:
@@ -643,19 +666,73 @@ def file_survives_eq(f: dict, col_eq: dict) -> bool:
     return True
 
 
-def _check_append_schema_json(
-    root: str, incoming_json: dict, against: int | None = None
-) -> None:
+def select_files(
+    root: str,
+    manifest: dict,
+    col_between: dict | None = None,
+    col_eq: dict | None = None,
+) -> tuple[list[dict], int]:
+    """File entries surviving manifest-stats pruning + pruned count.
+    ``col_between`` ({col: (lo, hi)}) prunes on per-file min/max and the
+    partition tuple; ``col_eq`` ({col: value}) additionally probes the
+    per-file blooms (equality is the predicate min/max can't help with on
+    hash-distributed columns — every file spans the whole range, but a
+    bloom miss is a proof of absence). Missing stats or incomparable
+    types keep the file: pruning is a superset guard."""
+    files = manifest["files"]
+    if not col_between and not col_eq:
+        return list(files), 0
+    from workbook_exporter_fe_spark.sources.partitioning import (
+        file_survives_partition,
+    )
+
+    pfields = partition_fields(root)
+    keep = []
+    for f in files:
+        ok = file_survives_eq(f, col_eq or {}) and file_survives_partition(
+            f.get("partition"), pfields, col_eq, col_between
+        )
+        if ok:
+            for col, (lo, hi) in (col_between or {}).items():
+                fmin = f["min"].get(col)
+                fmax = f["max"].get(col)
+                if fmin is None or fmax is None:
+                    continue  # no stats -> cannot prune this file
+                try:
+                    if (hi is not None and fmin > hi) or (
+                        lo is not None and fmax < lo
+                    ):
+                        ok = False
+                        break
+                except TypeError:  # incomparable filter/stat types
+                    continue
+        if ok:
+            keep.append(f)
+    return keep, len(files) - len(keep)
+
+
+def file_deletes(manifest: dict, path: str) -> tuple[tuple, tuple]:
+    """The delete files masking one data file: (position-delete vector
+    paths, ((key paths), (eq cols)) per applicable equality delete)."""
+    deletes = manifest.get("deletes") or []
+    dvs = sorted({
+        p for d in deletes if path in (d.get("data_files") or {})
+        for p in d["paths"]
+    })
+    eqs = tuple(
+        (tuple(d["paths"]), tuple(d["eq_cols"]))
+        for d in eq_deletes_applying(manifest, [path])
+    )
+    return tuple(dvs), eqs
+
+
+def _check_append_schema(table_json: dict, incoming_json: dict) -> None:
+    """Appends must fit the table schema (``SchemaMismatch`` otherwise)."""
+    if incoming_json == table_json:
+        return
     from pyspark.sql.types import StructType
 
-    table = {
-        f.name: f
-        for f in StructType.fromJson(
-            load_manifest_raw(  # schema only — never resolve file lists
-                root, current_sequence(root) if against is None else against
-            )["schema"]
-        ).fields
-    }
+    table = {f.name: f for f in StructType.fromJson(table_json).fields}
     incoming = {f.name: f for f in StructType.fromJson(incoming_json).fields}
     unknown = sorted(set(incoming) - set(table))
     if unknown:
@@ -675,162 +752,256 @@ def _check_append_schema_json(
             raise SchemaMismatch(f"append omits non-nullable column {name!r}")
 
 
+def _head(root: str, branch: str | None) -> int:
+    return current_sequence(root) if branch is None else (
+        branch_heads(root).get(branch, 0)
+    )
+
+
 def commit_files(
     root: str,
-    new_paths: list[str],
-    schema_json: dict,
-    mode: str = "append",
+    new_files: list,
+    schema_json: dict | None = None,
+    operation: str = "append",
     summary: dict | None = None,
     cleanup_dir: str | None = None,
-    check_schema: bool = True,
     parent: int | None = None,
-    advance_hint: bool = True,
-    blooms: dict | None = None,
-    partitions: dict | None = None,
-    ndv: dict | None = None,
-    eq_delete: dict | None = None,
+    branch: str | None = None,
+    base: int | None = None,
+    removed: set | None = None,
+    new_deletes: list | None = None,
 ) -> int:
-    """Publish already-written parquet files as a new snapshot.
+    """Publish a new snapshot — the one manifest writer of the log.
 
-    Stats are harvested from the EXPLICIT path list (not a directory
-    listing), so a failed/retried task's orphan files in the same commit
-    directory are never referenced — they stay invisible garbage, like a
-    crashed Spark-side commit. Optimistic concurrency and the atomic
-    hint swap match SnapshotTable.commit; on conflict ``cleanup_dir``
-    (the new files' directory) is removed.
+    The child's file list is ``base − removed + new_files``. ``base`` is
+    the sequence the child derives from: the parent by default, the
+    target of a rollback, or 0 (nothing) for a full overwrite.
+    ``new_files`` are manifest file entries, or parquet paths whose footer
+    stats are harvested here — from the explicit list, never a directory
+    listing, so a failed task's orphan files stay unreferenced garbage.
+    The base's delete entries carry over (``carry_deletes`` prunes them
+    when files leave); ``new_deletes`` are added, equality entries
+    anchored at the parent so they mask only pre-existing rows (Iceberg
+    v2: an upsert is an equality delete plus new data in ONE snapshot).
 
-    ``parent``/``advance_hint`` are the branch-commit seam: a branch
-    commit chains off the BRANCH head and leaves the main hint alone
-    (the caller advances its branch ref instead). Sequence numbers are
-    allocated globally (``max_sequence``) so branch and main commits
-    never collide.
+    Appends (``operation`` 'append'/'upsert') are checked against the
+    base's schema and keep it; every other commit takes ``schema_json``,
+    or the base's schema when None.
 
-    ``eq_delete`` ({'eq_cols': [...], 'paths': [...], 'rows': n}) turns
-    an append into an atomic UPSERT (Iceberg v2: equality delete + new
-    data files in ONE snapshot, ``operation='upsert'``): the entry is
-    anchored at the parent, so it masks only pre-existing rows with the
-    same key — the new files carry the child's data sequence and are
-    never self-masked.
+    ``parent`` defaults to the head of ``branch`` (main when None).
+    Sequence numbers are allocated globally (``max_sequence``), so branch
+    and main commits never collide; a branch commit leaves main's hint
+    alone and advances only its branch ref.
+
+    Publication is optimistic: the manifest is written to a temp file
+    and hard-linked to ``snap-N.json``, so creating it is exclusive and a
+    writer racing the same sequence loses with ``SnapshotConflict``
+    instead of overwriting the winner. The ref (version hint or branch)
+    then moves iff it still points at ``parent`` — a check-then-replace,
+    not atomic: like the module's other swaps it assumes a posix-rename
+    filesystem and one writer per ref at a time. On any failure before
+    publication the segments, ``cleanup_dir`` and the new delete files'
+    dirs this commit brought are removed.
     """
-    if mode not in ("append", "overwrite"):
-        raise ValueError(mode)
     meta = os.path.join(root, "metadata")
     os.makedirs(meta, exist_ok=True)
     if parent is None:
-        parent = current_sequence(root)
-    if mode == "append" and parent > 0 and check_schema:
-        _check_append_schema_json(root, schema_json, against=parent)
-    seq = max_sequence(root) + 1
-    files = file_stats_for_paths(sorted(new_paths))
-    for f in files:
-        b = (blooms or {}).get(f["path"])
-        if isinstance(b, str):  # sidecar ref (the scalable form)
-            f["bloom_ref"] = b
-        elif b:  # inline (small tables / tests)
-            f["bloom"] = b
-        p = (partitions or {}).get(f["path"])
-        if p:  # hidden-partitioning tuple (sources/partitioning.py)
-            f["partition"] = p
-        nref = (ndv or {}).get(f["path"])
-        if nref:  # NDV theta sketch sidecar ref (column_ndv)
-            f["ndv_ref"] = nref
-    schema = schema_json
-    deletes: list = []
-    seg_refs: list[dict] | None = None
-    created_segs: list[str] = []
-    if mode == "append" and parent > 0:
-        # RAW load: chaining an append must cost O(batch) metadata, not
-        # O(table files) — the parent's segments are referenced, never
-        # read (only a tail merge opens the segments it folds)
-        prev = load_manifest_raw(root, parent)
-        schema = prev["schema"]
-        # outstanding position deletes survive appends untouched
-        deletes = prev.get("deletes") or []
-        prev_segs = prev.get("file_segments")
-        prev_inline = prev.get("files") or []
-        if prev_segs is None and (
-            len(prev_inline) + len(files) <= MANIFEST_INLINE_MAX
-        ):
-            files = prev_inline + files  # small table: stay inline
+        parent = _head(root, branch)
+    base = parent if base is None else base
+    removed = set(removed or ())
+    dirs = ([cleanup_dir] if cleanup_dir else []) + [
+        os.path.dirname(d["paths"][0]) for d in new_deletes or []
+    ]
+    created: list[str] = []
+    tmp = None
+    try:
+        raw = load_manifest_raw(root, base) if base else {}
+        appending = operation in ("append", "upsert")
+        if raw and appending:
+            _check_append_schema(raw["schema"], schema_json)
+        schema = (
+            raw["schema"] if raw and (appending or schema_json is None)
+            else schema_json
+        )
+        seq = max_sequence(root) + 1
+        added = (
+            file_stats_for_paths(sorted(new_files))
+            if new_files and isinstance(new_files[0], str)
+            else list(new_files)
+        )
+        deletes = raw.get("deletes") or []
+        if removed and deletes:
+            deletes = carry_deletes(load_manifest(root, base), removed)
+        for d in new_deletes or []:
+            if "eq_cols" in d:
+                if not parent:
+                    continue  # empty table: nothing the delete could mask
+                d = {**d, "seq": parent}
+            deletes = deletes + [d]
+
+        # file list: the base's segments carry by reference; only one
+        # holding a removed path is re-written, filtered. The new files
+        # form the tail, folded in memory by the binary-counter rule
+        # (absorb the previous segment while it is no bigger), so a
+        # commit writes at most one tail segment
+        parts: list = []  # carried refs, or entry lists still to write
+        for ref in raw.get("file_segments") or []:
+            entries = _load_segment(meta, ref) if removed else ()
+            if any(e["path"] in removed for e in entries):
+                kept = [e for e in entries if e["path"] not in removed]
+                if kept:
+                    parts.append(kept)
+            else:
+                parts.append(ref)
+        tail = [
+            f for f in raw.get("files") or [] if f["path"] not in removed
+        ] + added
+        if not parts and len(tail) <= MANIFEST_INLINE_MAX:
+            listing: dict = {"files": tail}  # small table: stay inline
         else:
-            segs = list(prev_segs or [])
-            # the new tail segment, folded in memory by the binary-
-            # counter rule so each commit writes AT MOST one segment
-            last = (prev_inline if prev_segs is None else []) + files
-            if last:
-                while segs and segs[-1]["entries"] <= len(last):
-                    last = _load_segment(meta, segs.pop()) + last
-                ref = _write_segment(meta, seq, last)
-                created_segs.append(os.path.join(meta, ref["path"]))
-                segs.append(ref)
-            seg_refs = segs
-    elif len(files) > MANIFEST_INLINE_MAX:
-        ref = _write_segment(meta, seq, files)
-        created_segs.append(os.path.join(meta, ref["path"]))
-        seg_refs = [ref]
-    operation = mode
-    if eq_delete is not None:
-        if mode != "append":
-            raise ValueError("eq_delete composes with mode='append' only")
-        operation = "upsert"
-        if parent > 0:  # empty table: nothing the delete could mask
-            deletes = list(deletes) + [{**eq_delete, "seq": parent}]
-    manifest = {
-        "sequence": seq,
-        "parent": parent,
-        "operation": operation,
-        "committed_at": time.time(),
-        "schema": schema,
-        "summary": dict(summary or {}),
-        **({"deletes": deletes} if deletes else {}),
-    }
-    if seg_refs is not None:
-        manifest["file_segments"] = seg_refs
-        footer_rows = sum(int(r["rows"]) for r in seg_refs)
+            if tail:
+                parts.append(tail)
+            while (
+                len(parts) >= 2 and isinstance(parts[-1], list)
+                and (parts[-2]["entries"] if isinstance(parts[-2], dict)
+                     else len(parts[-2])) <= len(parts[-1])
+            ):
+                prev = parts.pop(-2)
+                if isinstance(prev, dict):
+                    prev = _load_segment(meta, prev)
+                parts[-1] = prev + parts[-1]
+            refs = []
+            for p in parts:
+                if isinstance(p, list):
+                    p = _write_segment(meta, seq, p)
+                    created.append(os.path.join(meta, p["path"]))
+                refs.append(p)
+            listing = {"file_segments": refs} if refs else {"files": []}
         # position deletes are the only attributed masks (equality
-        # entries carry no per-file counts — same upper-bound semantics
-        # as live_rows_map, computed from the entries alone)
-        dv = sum(
-            int(n)
-            for d in deletes
+        # entries carry no per-file counts, so total_rows is an upper
+        # bound while one is outstanding — same as live_rows_map)
+        masked = sum(
+            int(n) for d in deletes
             for n in (d.get("data_files") or {}).values()
         )
-        manifest["total_rows"] = footer_rows - dv
-    else:
-        manifest["files"] = files
-        manifest["total_rows"] = sum(f["rows"] for f in files)
-        if deletes:
-            manifest["total_rows"] = sum(live_rows_map(manifest).values())
-
-    def _cleanup() -> None:
-        if cleanup_dir:
-            shutil.rmtree(cleanup_dir, ignore_errors=True)
-        for p in created_segs:
+        manifest = {
+            "sequence": seq,
+            "parent": parent,
+            "operation": operation,
+            "committed_at": time.time(),
+            "schema": schema,
+            "summary": dict(summary or {}),
+            **({"deletes": deletes} if deletes else {}),
+            **({"rolled_back_to": base} if operation == "rollback" else {}),
+            **listing,
+            "total_rows": _segments_footer_rows(listing) - masked,
+        }
+        mpath = os.path.join(meta, f"snap-{seq:08d}.json")
+        tmp = f"{mpath}.tmp-{uuid.uuid4().hex[:8]}"
+        with open(tmp, "w") as f:
+            f.write(json.dumps(manifest, indent=1))
+        if _head(root, branch) != parent:
+            raise SnapshotConflict(
+                f"{branch or 'main'} advanced to {_head(root, branch)} "
+                f"while committing against {parent}; retry against its head"
+            )
+        try:
+            os.link(tmp, mpath)
+        except FileExistsError:
+            raise SnapshotConflict(
+                f"sequence {seq} already committed by another writer"
+            ) from None
+    except BaseException:
+        for p in created:
             try:
                 os.remove(p)
             except OSError:
                 pass
-
-    mpath = os.path.join(meta, f"snap-{seq:08d}.json")
-    if os.path.exists(mpath):
-        _cleanup()
-        raise SnapshotConflict(
-            f"sequence {seq} already committed by another writer"
-        )
-    if advance_hint and current_sequence(root) != parent:
-        # with global sequence numbering a racing main writer no longer
-        # collides on the manifest name — the lost-update guard moves to
-        # the ref swap itself (branch commits get the same guard from
-        # _set_branch's expect=)
-        _cleanup()
-        raise SnapshotConflict(
-            f"main advanced to {current_sequence(root)} while committing "
-            f"against {parent}; retry against the current snapshot"
-        )
-    _atomic_write(mpath, json.dumps(manifest, indent=1))
-    if advance_hint:
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)
+        raise
+    finally:
+        if tmp is not None:
+            try:
+                os.remove(tmp)
+            except OSError:
+                pass
+    if branch is None:
         _atomic_write(os.path.join(meta, "version-hint.text"), str(seq))
+    else:
+        refs = branch_heads(root)
+        refs[branch] = seq
+        _atomic_write(
+            os.path.join(meta, "branches.json"),
+            json.dumps(refs, sort_keys=True),
+        )
     return seq
+
+
+def appended_files(root: str, from_sequence: int, to_sequence: int) -> list:
+    """File entries APPENDED in ``(from_sequence, to_sequence]`` — the
+    incremental append scan behind ``SnapshotTable.changes`` and the
+    snapshot_log stream reader. Walks the PARENT chain (not the sequence
+    range: branch commits take global sequence numbers without being on
+    this ref's history), collects each append snapshot's added files,
+    and skips ``replace``/``evolve`` snapshots (same rows or no files).
+    Raises ``IncrementalScanBreak`` on a history rewrite in range, an
+    off-chain ``from_sequence``, or a range whose manifests or appended
+    files were expired — the consumer lagged past the retention window."""
+    if from_sequence > to_sequence:
+        raise ValueError(
+            f"from_sequence {from_sequence} is ahead of {to_sequence}"
+        )
+
+    def load(seq: int) -> dict:
+        try:
+            return load_manifest(root, seq)
+        except FileNotFoundError:
+            raise IncrementalScanBreak(
+                f"manifest for snapshot {seq} was expired — the consumer "
+                "lagged past the retention window; rebuild from read()"
+            ) from None
+
+    chain: list[dict] = []
+    seq = to_sequence
+    while seq > from_sequence:
+        m = load(seq)
+        chain.append(m)
+        seq = int(m["parent"])
+    if seq != from_sequence:
+        raise IncrementalScanBreak(
+            f"snapshot {from_sequence} is not an ancestor of {to_sequence} "
+            "— the consumer's watermark is on another branch; rebuild "
+            "from read()"
+        )
+    if not chain:
+        return []
+    prev = (
+        {f["path"] for f in load(from_sequence)["files"]}
+        if from_sequence > 0
+        else set()
+    )
+    new: list[dict] = []
+    for m in reversed(chain):
+        paths = {f["path"]: f for f in m["files"]}
+        if m["operation"] == "append":
+            gone = [p for p in sorted(set(paths) - prev)
+                    if not os.path.exists(p)]
+            if gone:
+                raise IncrementalScanBreak(
+                    f"{len(gone)} file(s) appended by snapshot "
+                    f"{m['sequence']} were expired (e.g. {gone[0]}) — the "
+                    "consumer lagged past the retention window; rebuild "
+                    "from read()"
+                )
+            new.extend(paths[p] for p in sorted(set(paths) - prev))
+        elif m["operation"] not in ("replace", "evolve"):
+            raise IncrementalScanBreak(
+                f"snapshot {m['sequence']} is '{m['operation']}', not "
+                "append — incremental consumers must rebuild from read()"
+            )
+        prev = set(paths)
+    return new
 
 
 class SnapshotTable:
@@ -879,11 +1050,7 @@ class SnapshotTable:
         keys: ``bloom.columns`` (list[str] — build a manifest bloom for
         these columns on every commit through this table object) and
         ``bloom.bits`` (filter size; default BLOOM_BITS_DEFAULT)."""
-        p = self._properties_path()
-        if not os.path.exists(p):
-            return {}
-        with open(p) as f:
-            return json.load(f)
+        return table_properties(self.root)
 
     def set_properties(self, **props) -> dict:
         """Merge ``props`` into the table properties (None deletes a key).
@@ -979,13 +1146,6 @@ class SnapshotTable:
         return refs
 
     # ------------------------------------------------- hidden partitioning
-    def _partition_fields(self) -> list:
-        """Parsed ``partition.spec`` table property (see
-        sources/partitioning.py) — empty list = unpartitioned writes."""
-        from workbook_exporter_fe_spark.sources.partitioning import parse_spec
-
-        return parse_spec(list(self.properties().get("partition.spec") or []))
-
     def _write_data(
         self, df: DataFrame, commit_dir: str, distribute: bool = True
     ) -> None:
@@ -996,7 +1156,7 @@ class SnapshotTable:
         instead of tasks×partitions small files); compaction/CoW rewrites
         pass False because their input is already arranged (coalesced or
         z-order/range clustered) and must not re-shuffle."""
-        fields = self._partition_fields()
+        fields = partition_fields(self.root)
         if not fields:
             df.write.mode("error").parquet(commit_dir)
             return
@@ -1103,62 +1263,43 @@ class SnapshotTable:
         )
         if mode == "append" and parent > 0:
             # fail BEFORE writing data, against the BRANCH head's schema
-            self._check_append_schema(df, against=parent)
-        commit_dir = os.path.join(
-            self.data, f"c{max_sequence(self.root) + 1:08d}-{uuid.uuid4().hex[:8]}"
-        )
-        self._write_data(df, commit_dir)
-        new_paths = self._list_parquet(commit_dir)
-        seq = commit_files(
-            self.root,
-            new_paths,
-            df.schema.jsonValue(),
-            mode=mode,
+            _check_append_schema(
+                load_manifest_raw(self.root, parent)["schema"],
+                df.schema.jsonValue(),
+            )
+        return self._write_commit(
+            df,
+            schema_json=df.schema.jsonValue(),
+            operation=mode,
             summary=summary,
-            cleanup_dir=commit_dir,
-            check_schema=False,  # already checked against this parent
             parent=parent,
-            advance_hint=branch is None,
-            blooms=self._build_blooms(new_paths),
-            partitions={
-                p: t
-                for p in new_paths
-                if (t := self._partition_from_path(p, commit_dir))
-            },
-            ndv=self._build_ndv(new_paths),
+            branch=branch,
+            base=0 if mode == "overwrite" else None,
         )
-        if branch:
-            self._set_branch(branch, seq, expect=parent)
-        return seq
+
+    def _write_commit(
+        self, df: DataFrame, distribute: bool = True, prepare=None, **commit
+    ) -> int:
+        """Write ``df`` into a fresh commit dir and publish its non-empty
+        files through ``commit_files(**commit)``. ``prepare(new_files)``
+        returns further commit arguments derived from the written files
+        (summary accounting, equality deletes) or raises to abandon the
+        commit; a commit that fails leaves no dir behind."""
+        commit_dir = new_commit_dir(self.root)
+        try:
+            self._write_data(df, commit_dir, distribute=distribute)
+            files = [f for f in self._file_stats(commit_dir) if f["rows"] > 0]
+            if prepare is not None:
+                commit.update(prepare(files))
+        except BaseException:
+            shutil.rmtree(commit_dir, ignore_errors=True)
+            raise
+        return commit_files(self.root, files, cleanup_dir=commit_dir, **commit)
 
     def _table_schema(self, sequence: int | None = None):
         from pyspark.sql.types import StructType
 
         return StructType.fromJson(self.snapshot(sequence)["schema"])
-
-    def _check_append_schema(
-        self, df: DataFrame, against: int | None = None
-    ) -> None:
-        table = {f.name: f for f in self._table_schema(against).fields}
-        incoming = {f.name: f for f in df.schema.fields}
-        unknown = sorted(set(incoming) - set(table))
-        if unknown:
-            raise SchemaMismatch(
-                f"append writes unknown column(s) {unknown}; run "
-                "evolve(add=...) first"
-            )
-        for name, f in incoming.items():
-            if f.dataType != table[name].dataType:
-                raise SchemaMismatch(
-                    f"column {name!r} is {f.dataType.simpleString()} but the "
-                    f"table has {table[name].dataType.simpleString()}; type "
-                    "changes are not supported"
-                )
-        for name, f in table.items():
-            if name not in incoming and not f.nullable:
-                raise SchemaMismatch(
-                    f"append omits non-nullable column {name!r}"
-                )
 
     def evolve(
         self,
@@ -1196,14 +1337,14 @@ class SnapshotTable:
             fields.append(StructField(col, _parse_datatype_string(typ), True))
         if not fields:
             raise SchemaMismatch("evolution would leave an empty schema")
-        return self._commit_manifest(
+        # metadata-only op: the parent's segments carry verbatim
+        return commit_files(
+            self.root,
+            [],
+            StructType(fields).jsonValue(),
             operation="evolve",
-            files=m["files"],
-            schema=StructType(fields).jsonValue(),
             summary={"added": sorted(add or {}), "dropped": sorted(drop or [])},
-            deletes=m.get("deletes"),
-            # metadata-only op: carry the parent's segments verbatim
-            base_raw=load_manifest_raw(self.root, m["sequence"]),
+            parent=m["sequence"],
         )
 
     def rollback(self, sequence: int) -> int:
@@ -1212,15 +1353,10 @@ class SnapshotTable:
         History stays intact (Iceberg semantics) — rollback is itself an
         auditable entry, not an erasure.
         """
-        old = self.snapshot(sequence)
-        return self._commit_manifest(
-            operation="rollback",
-            files=old["files"],
-            schema=old["schema"],
-            extra={"rolled_back_to": sequence},
-            deletes=old.get("deletes"),
-            # re-reference the OLD snapshot's segments, write nothing
-            base_raw=load_manifest_raw(self.root, sequence),
+        self.snapshot(sequence)  # must exist
+        # re-reference the OLD snapshot's segments, write nothing
+        return commit_files(
+            self.root, [], operation="rollback", base=sequence
         )
 
     def compact(
@@ -1252,7 +1388,7 @@ class SnapshotTable:
         ``sort_by`` upgrades the bin-pack to Iceberg's SORT rewrite:
         rows are range-partitioned + sorted on those columns, so every
         output file covers a narrow, near-disjoint slice and the
-        manifest min/max stats (``scan(col_between=...)``) prune again.
+        manifest min/max stats (``read(col_between=...)``) prune again.
         Interleaved appends destroy clustering — after a day of
         per-source micro-batches every file spans the whole time range
         and time-range scans open everything; one sorted compaction
@@ -1315,10 +1451,6 @@ class SnapshotTable:
         ) or bool(eq_deletes_applying(m, [f["path"] for f in scope]))
         if not scope or (unclustered and n >= len(scope) and not scope_debt):
             return self.current_sequence()
-        parent = self.current_sequence()
-        commit_dir = os.path.join(
-            self.data, f"c{parent + 1:08d}-{uuid.uuid4().hex[:8]}"
-        )
         src = self._read_paths(m, [f["path"] for f in scope])
         if zorder_by is not None:
             from workbook_exporter_fe_spark.sources.layout import with_zvalue
@@ -1338,38 +1470,31 @@ class SnapshotTable:
             out = src.repartitionByRange(
                 n, *sort_by
             ).sortWithinPartitions(*sort_by)
-        self._write_data(out, commit_dir, distribute=False)
-        new_files = self._file_stats(commit_dir)
-        rows_out = sum(f["rows"] for f in new_files)
-        if rows_out != scope_rows:  # footer counts are exact
-            shutil.rmtree(commit_dir, ignore_errors=True)
-            raise RuntimeError(
-                f"compaction row drift: {rows_out} != {scope_rows}"
-            )
-        try:
-            return self._commit_manifest(
-                operation="replace",
-                files=carried + new_files,
-                schema=m["schema"],
-                summary={
-                    "files_before": len(m["files"]),
-                    "files_after": len(carried) + len(new_files),
-                    "files_rewritten": len(scope),
-                    "files_carried": len(carried),
-                    **({"sort_by": sort_by} if sort_by else {}),
-                    **({"zorder_by": zorder_by} if zorder_by else {}),
-                    **({"where_bounds": {k: list(v) for k, v in
-                        where_bounds.items()}} if where_bounds else {}),
-                },
-                expected_parent=parent,
-                deletes=carry_deletes(m, scope_set),
-                base_raw=load_manifest_raw(self.root, parent),
-                removed_paths=scope_set,
-                added_files=new_files,
-            )
-        except SnapshotConflict:
-            shutil.rmtree(commit_dir, ignore_errors=True)
-            raise
+        def account(new_files: list[dict]) -> dict:
+            rows_out = sum(f["rows"] for f in new_files)
+            if rows_out != scope_rows:  # footer counts are exact
+                raise RuntimeError(
+                    f"compaction row drift: {rows_out} != {scope_rows}"
+                )
+            return {"summary": {
+                "files_before": len(m["files"]),
+                "files_after": len(carried) + len(new_files),
+                "files_rewritten": len(scope),
+                "files_carried": len(carried),
+                **({"sort_by": sort_by} if sort_by else {}),
+                **({"zorder_by": zorder_by} if zorder_by else {}),
+                **({"where_bounds": {k: list(v) for k, v in
+                    where_bounds.items()}} if where_bounds else {}),
+            }}
+
+        return self._write_commit(
+            out,
+            distribute=False,
+            prepare=account,
+            operation="replace",
+            parent=m["sequence"],
+            removed=scope_set,
+        )
 
     # -------------------------------------------- row-level CoW mutations
     @staticmethod
@@ -1508,7 +1633,6 @@ class SnapshotTable:
     def _rewrite_commit(
         self,
         manifest: dict,
-        expected_parent: int,
         touched: list[str],
         rewritten: DataFrame,
         operation: str,
@@ -1521,55 +1645,39 @@ class SnapshotTable:
         at 100 TB a keyed delete rewrites the few files containing the
         keys, not the table. ``expect_rows`` guards operations that must
         preserve the replaced row count (footer counts are exact)."""
-        commit_dir = os.path.join(
-            self.data, f"c{expected_parent + 1:08d}-{uuid.uuid4().hex[:8]}"
-        )
-        # coalesce, not repartition: the rewrite reads len(touched) files
-        # and must not shuffle them to write at most that many back
-        self._write_data(
-            rewritten.coalesce(max(1, len(touched))),
-            commit_dir,
-            distribute=False,
-        )
-        new_files = [f for f in self._file_stats(commit_dir) if f["rows"] > 0]
-        rows_out = sum(f["rows"] for f in new_files)
-        if expect_rows is not None and rows_out != expect_rows:
-            shutil.rmtree(commit_dir, ignore_errors=True)
-            raise RuntimeError(
-                f"{operation} row drift: rewrote {rows_out} rows, "
-                f"expected {expect_rows}"
-            )
         touched_set = set(touched)
-        carried = [
-            f for f in manifest["files"] if f["path"] not in touched_set
-        ]
         # LIVE rows (footer minus outstanding deletes): the rewrite read
         # through the position/equality masks, so its output materialized
         # those deletes — replaced accounting must match what it read
         replaced_rows = self._live_scope_rows(manifest, touched)
-        acct = {
-            "files_rewritten": len(touched),
-            "files_carried": len(carried),
-            "rows_replaced": replaced_rows,
-            "rows_rewritten": rows_out,
-        }
-        if operation == "delete":
-            acct["rows_deleted"] = replaced_rows - rows_out
-        try:
-            return self._commit_manifest(
-                operation=operation,
-                files=carried + new_files,
-                schema=manifest["schema"],
-                summary={**summary, **acct},
-                expected_parent=expected_parent,
-                deletes=carry_deletes(manifest, touched_set),
-                base_raw=load_manifest_raw(self.root, expected_parent),
-                removed_paths=touched_set,
-                added_files=new_files,
-            )
-        except SnapshotConflict:
-            shutil.rmtree(commit_dir, ignore_errors=True)
-            raise
+
+        def account(new_files: list[dict]) -> dict:
+            rows_out = sum(f["rows"] for f in new_files)
+            if expect_rows is not None and rows_out != expect_rows:
+                raise RuntimeError(
+                    f"{operation} row drift: rewrote {rows_out} rows, "
+                    f"expected {expect_rows}"
+                )
+            acct = {
+                "files_rewritten": len(touched),
+                "files_carried": len(manifest["files"]) - len(touched_set),
+                "rows_replaced": replaced_rows,
+                "rows_rewritten": rows_out,
+            }
+            if operation == "delete":
+                acct["rows_deleted"] = replaced_rows - rows_out
+            return {"summary": {**summary, **acct}}
+
+        # coalesce, not repartition: the rewrite reads len(touched) files
+        # and must not shuffle them to write at most that many back
+        return self._write_commit(
+            rewritten.coalesce(max(1, len(touched))),
+            distribute=False,
+            prepare=account,
+            operation=operation,
+            parent=manifest["sequence"],
+            removed=touched_set,
+        )
 
     def delete_where(
         self,
@@ -1621,7 +1729,7 @@ class SnapshotTable:
             return parent
         kept = self._read_paths(m, touched).filter(~cond)
         return self._rewrite_commit(
-            m, parent, touched, kept, "delete", dict(summary or {})
+            m, touched, kept, "delete", dict(summary or {})
         )
 
     def _delete_mor(self, cond, stats_bounds, summary: dict) -> int:
@@ -1641,9 +1749,7 @@ class SnapshotTable:
             .filter(cond)
             .select(F.col("__uri").alias("uri"), F.col("__pos").alias("pos"))
         )
-        dv_dir = os.path.join(
-            self.data, f"c{max_sequence(self.root) + 1:08d}-dv-{uuid.uuid4().hex[:8]}"
-        )
+        dv_dir = new_commit_dir(self.root, "dv-")
 
         # `path` (local form) rides along so executor-side readers (the
         # snapshot_log data source) can filter a vector by manifest path
@@ -1668,21 +1774,16 @@ class SnapshotTable:
         data_files = {r["path"]: int(r["count"]) for r in per_file}
         n = sum(data_files.values())
         entry = {"paths": dv_paths, "rows": n, "data_files": data_files}
-        try:
-            return self._commit_manifest(
-                operation="delete",
-                files=m["files"],
-                schema=m["schema"],
-                summary={**summary, "mode": "mor", "rows_deleted": n,
-                         "files_masked": len(data_files)},
-                expected_parent=parent,
-                deletes=(m.get("deletes") or []) + [entry],
-                # zero data files touched — zero segments rewritten too
-                base_raw=load_manifest_raw(self.root, parent),
-            )
-        except SnapshotConflict:
-            shutil.rmtree(dv_dir, ignore_errors=True)
-            raise
+        # zero data files touched — zero segments rewritten too
+        return commit_files(
+            self.root,
+            [],
+            operation="delete",
+            summary={**summary, "mode": "mor", "rows_deleted": n,
+                     "files_masked": len(data_files)},
+            parent=m["sequence"],
+            new_deletes=[entry],
+        )
 
     def delete_eq(
         self,
@@ -1723,7 +1824,6 @@ class SnapshotTable:
         parent = self.current_sequence()
         if parent == 0:
             return parent  # nothing the delete could apply to
-        m = self.snapshot()
         table = {f.name: f.dataType for f in self._table_schema().fields}
         unknown = sorted(set(eq_cols) - set(table))
         if unknown:
@@ -1747,9 +1847,7 @@ class SnapshotTable:
         kdf = kdf.select(
             *[F.col(c).cast(table[c]).alias(c) for c in eq_cols]
         ).distinct()
-        dv_dir = os.path.join(
-            self.data, f"c{max_sequence(self.root) + 1:08d}-eqdv-{uuid.uuid4().hex[:8]}"
-        )
+        dv_dir = new_commit_dir(self.root, "eqdv-")
         kdf.coalesce(1).write.mode("error").parquet(dv_dir)
         dv_paths = self._list_parquet(dv_dir)
         n = sum(
@@ -1758,27 +1856,18 @@ class SnapshotTable:
         if n == 0:
             shutil.rmtree(dv_dir, ignore_errors=True)
             return parent
-        entry = {
-            "eq_cols": list(eq_cols),
-            "paths": dv_paths,
-            "rows": n,
-            "seq": parent,  # anchor: applies to files with dseq <= parent
-        }
-        try:
-            return self._commit_manifest(
-                operation="delete",
-                files=m["files"],
-                schema=m["schema"],
-                summary={**dict(summary or {}), "mode": "eq",
-                         "eq_cols": list(eq_cols), "keys": n},
-                expected_parent=parent,
-                deletes=(m.get("deletes") or []) + [entry],
-                # key-only commit: the parent's segments carry verbatim
-                base_raw=load_manifest_raw(self.root, parent),
-            )
-        except SnapshotConflict:
-            shutil.rmtree(dv_dir, ignore_errors=True)
-            raise
+        # key-only commit: the parent's segments carry verbatim, and the
+        # entry is anchored at the parent (applies to files with dseq <=)
+        return commit_files(
+            self.root,
+            [],
+            operation="delete",
+            summary={**dict(summary or {}), "mode": "eq",
+                     "eq_cols": list(eq_cols), "keys": n},
+            parent=parent,
+            new_deletes=[{"eq_cols": list(eq_cols), "paths": dv_paths,
+                          "rows": n}],
+        )
 
     def upsert_eq(
         self,
@@ -1813,74 +1902,51 @@ class SnapshotTable:
         the state is the snapshot log and the merge is metadata-only."""
         import pyarrow.parquet as pq
         from pyspark.sql import functions as F
+        from pyspark.sql.types import StructType
 
         parent = self.current_sequence()
+        incoming = df.schema.jsonValue()
+        table_json = (
+            load_manifest_raw(self.root, parent)["schema"] if parent
+            else incoming
+        )
         table = {
-            f.name: f.dataType for f in self._table_schema().fields
-        } if parent else {f.name: f.dataType for f in df.schema.fields}
+            f.name: f.dataType for f in StructType.fromJson(table_json).fields
+        }
         unknown = sorted(set(eq_cols) - set(table))
         if unknown:
             raise SchemaMismatch(f"upsert_eq on unknown column(s) {unknown}")
-        if parent:
-            self._check_append_schema(df, against=parent)
-        commit_dir = os.path.join(
-            self.data,
-            f"c{max_sequence(self.root) + 1:08d}-{uuid.uuid4().hex[:8]}",
-        )
-        self._write_data(df, commit_dir)
-        new_paths = self._list_parquet(commit_dir)
-        rows_new = sum(pq.read_metadata(p).num_rows for p in new_paths)
-        entry = None
-        if rows_new:
+        _check_append_schema(table_json, incoming)
+
+        def key_delete(new_files: list[dict]) -> dict:
+            rows_new = sum(f["rows"] for f in new_files)
+            out = {"summary": {**dict(summary or {}), "mode": "upsert",
+                               "rows_upserted": rows_new}}
+            if not rows_new:
+                return out
             # keys from the files just written (column-pruned, one job —
             # never a second evaluation of ``df``)
-            keys = self.spark.read.parquet(*new_paths).select(
+            keys = self.spark.read.parquet(
+                *[f["path"] for f in new_files]
+            ).select(
                 *[F.col(c).cast(table[c]).alias(c) for c in eq_cols]
             ).distinct()
-            kdir = os.path.join(
-                self.data,
-                f"c{max_sequence(self.root) + 1:08d}-eqdv-"
-                f"{uuid.uuid4().hex[:8]}",
-            )
+            kdir = new_commit_dir(self.root, "eqdv-")
             keys.coalesce(1).write.mode("error").parquet(kdir)
             kpaths = self._list_parquet(kdir)
             n_keys = sum(pq.read_metadata(p).num_rows for p in kpaths)
             if validate_source and n_keys != rows_new:
-                shutil.rmtree(commit_dir, ignore_errors=True)
                 shutil.rmtree(kdir, ignore_errors=True)
                 raise ValueError(
                     f"upsert batch has {rows_new - n_keys} duplicate "
                     f"key(s) on {eq_cols}; dedupe the batch first"
                 )
-            entry = {
-                "eq_cols": list(eq_cols),
-                "paths": kpaths,
-                "rows": int(n_keys),
-            }
-        try:
-            return commit_files(
-                self.root,
-                new_paths,
-                df.schema.jsonValue(),
-                mode="append",
-                summary={**dict(summary or {}), "mode": "upsert",
-                         "rows_upserted": rows_new},
-                cleanup_dir=commit_dir,
-                check_schema=False,
-                blooms=self._build_blooms(new_paths),
-                partitions={
-                    p: t
-                    for p in new_paths
-                    if (t := self._partition_from_path(p, commit_dir))
-                },
-                ndv=self._build_ndv(new_paths),
-                eq_delete=entry,
-            )
-        except SnapshotConflict:
-            if entry:
-                shutil.rmtree(os.path.dirname(entry["paths"][0]),
-                              ignore_errors=True)
-            raise
+            return {**out, "operation": "upsert", "new_deletes": [
+                {"eq_cols": list(eq_cols), "paths": kpaths,
+                 "rows": int(n_keys)},
+            ]}
+
+        return self._write_commit(df, prepare=key_delete, schema_json=incoming)
 
     def _live_scope_rows(self, manifest: dict, paths: list[str]) -> int:
         """Exact LIVE row count of a file subset. With only position
@@ -1946,7 +2012,7 @@ class SnapshotTable:
         )
         expect = self._live_scope_rows(m, touched)
         return self._rewrite_commit(
-            m, parent, touched, out, "update",
+            m, touched, out, "update",
             {"columns": sorted(assignments)}, expect_rows=expect,
         )
 
@@ -2000,7 +2066,7 @@ class SnapshotTable:
         if bad_keys:
             raise ValueError(f"merge keys not in table: {bad_keys}")
         src = source.select(*table_cols)  # extra source columns project away
-        self._check_append_schema(src)
+        _check_append_schema(m["schema"], src.schema.jsonValue())
         if validate_source:
             dup = (
                 src.groupBy(*on)
@@ -2071,7 +2137,7 @@ class SnapshotTable:
             else touched_rows - n_matched + n_inserted
         )
         return self._rewrite_commit(
-            m, parent, touched, rewritten, "merge",
+            m, touched, rewritten, "merge",
             {
                 "rows_matched": int(n_matched),
                 "rows_inserted": int(n_inserted),
@@ -2080,132 +2146,6 @@ class SnapshotTable:
             expect_rows=expect,
         )
 
-    def _delta_segment_refs(
-        self,
-        base_raw: dict,
-        removed_paths: set | None,
-        added_files: list[dict] | None,
-        seq: int,
-    ) -> tuple[list[dict], list[str]]:
-        """Child segment refs = parent refs with only the AFFECTED
-        segments rewritten: a segment containing none of
-        ``removed_paths`` carries verbatim (shared metadata, zero
-        bytes written), one containing any is re-written filtered, and
-        ``added_files`` land as one fresh tail segment. This keeps
-        rewrite-commit metadata O(touched + log) instead of O(table
-        files) — a merge-on-read delete ("zero data files touched")
-        must not pay a full file-list serialization either."""
-        removed = removed_paths or set()
-        refs: list[dict] = []
-        created: list[str] = []
-        for ref in base_raw["file_segments"]:
-            entries = _load_segment(self.meta, ref)  # cached, immutable
-            if removed and any(e["path"] in removed for e in entries):
-                kept = [e for e in entries if e["path"] not in removed]
-                if kept:
-                    nref = _write_segment(self.meta, seq, kept)
-                    created.append(os.path.join(self.meta, nref["path"]))
-                    refs.append(nref)
-            else:
-                refs.append(ref)
-        inline_tail = [
-            e
-            for e in base_raw.get("files") or []
-            if e["path"] not in removed
-        ]
-        tail = inline_tail + list(added_files or [])
-        if tail:
-            nref = _write_segment(self.meta, seq, tail)
-            created.append(os.path.join(self.meta, nref["path"]))
-            refs.append(nref)
-        refs, merged = _merge_tail_segments(self.meta, seq, refs)
-        created += merged
-        return refs, created
-
-    def _commit_manifest(
-        self,
-        operation: str,
-        files: list[dict],
-        schema: dict,
-        summary: dict | None = None,
-        extra: dict | None = None,
-        expected_parent: int | None = None,
-        deletes: list | None = None,
-        base_raw: dict | None = None,
-        removed_paths: set | None = None,
-        added_files: list[dict] | None = None,
-    ) -> int:
-        """Write a manifest for a data-already-on-disk commit (rollback /
-        replace) with the same optimistic-concurrency + atomic-hint-swap
-        discipline as ``commit``. ``expected_parent`` makes the commit
-        conditional on the snapshot it was derived from still being
-        current — a replace that raced a concurrent append must lose
-        (its file set would silently erase the appended rows) rather
-        than land on the newer parent."""
-        parent = self.current_sequence()
-        if expected_parent is not None and parent != expected_parent:
-            raise SnapshotConflict(
-                f"table advanced to {parent} while deriving from "
-                f"{expected_parent}; retry against the current snapshot"
-            )
-        seq = max_sequence(self.root) + 1
-        manifest = {
-            "sequence": seq,
-            "parent": parent,
-            "operation": operation,
-            "committed_at": time.time(),
-            "schema": schema,
-            "files": files,
-            "summary": dict(summary or {}),
-            "total_rows": sum(f["rows"] for f in files),
-            **({"deletes": deletes} if deletes else {}),
-            **(extra or {}),
-        }
-        if deletes:
-            manifest["total_rows"] = sum(live_rows_map(manifest).values())
-        created_segs: list[str] = []
-        if base_raw is not None and base_raw.get("file_segments"):
-            # delta path: carry the parent's segments, rewrite only the
-            # ones holding a removed path — O(touched + log) metadata
-            refs, created_segs = self._delta_segment_refs(
-                base_raw, removed_paths, added_files, seq
-            )
-            if sum(r["entries"] for r in refs) != len(files):
-                for p in created_segs:
-                    os.remove(p)
-                raise RuntimeError(
-                    "segment-delta drift: refs cover "
-                    f"{sum(r['entries'] for r in refs)} entries, caller "
-                    f"resolved {len(files)}"
-                )
-            manifest["file_segments"] = refs
-            del manifest["files"]
-        elif len(files) > MANIFEST_INLINE_MAX:
-            # full rewrite of a previously-inline list: the MANIFEST
-            # stays small — one fresh segment holds the entries
-            ref = _write_segment(self.meta, seq, files)
-            created_segs = [os.path.join(self.meta, ref["path"])]
-            manifest["file_segments"] = [ref]
-            del manifest["files"]
-        mpath = self._manifest_path(seq)
-        if os.path.exists(mpath):
-            for p in created_segs:
-                os.remove(p)
-            raise SnapshotConflict(
-                f"sequence {seq} already committed by another writer"
-            )
-        if self.current_sequence() != parent:
-            for p in created_segs:
-                os.remove(p)
-            raise SnapshotConflict(
-                f"table advanced to {self.current_sequence()} while "
-                f"committing against {parent}; retry against the current "
-                "snapshot"
-            )
-        _atomic_write(mpath, json.dumps(manifest, indent=1))
-        _atomic_write(os.path.join(self.meta, "version-hint.text"), str(seq))
-        return seq
-
     # -------------------------------------------------------------- reads
     def _select_files(
         self,
@@ -2213,42 +2153,9 @@ class SnapshotTable:
         col_between: dict | None,
         col_eq: dict | None = None,
     ) -> tuple[list[str], int]:
-        """File paths surviving manifest-stats pruning + pruned count.
-        ``col_between`` prunes on per-file min/max; ``col_eq`` ({col:
-        value}) additionally probes the per-file blooms (equality is the
-        predicate min/max can't help with on hash-distributed columns —
-        every file spans the whole range, but a bloom miss is a proof of
-        absence)."""
-        files = manifest["files"]
-        if not col_between and not col_eq:
-            return [f["path"] for f in files], 0
-        from workbook_exporter_fe_spark.sources.partitioning import (
-            file_survives_partition,
-        )
-
-        pfields = self._partition_fields()
-        keep = []
-        for f in files:
-            ok = file_survives_eq(f, col_eq or {}) and file_survives_partition(
-                f.get("partition"), pfields, col_eq, col_between
-            )
-            if ok:
-                for col, (lo, hi) in (col_between or {}).items():
-                    fmin = f["min"].get(col)
-                    fmax = f["max"].get(col)
-                    if fmin is None or fmax is None:
-                        continue  # no stats -> cannot prune this file
-                    try:
-                        if (hi is not None and fmin > hi) or (
-                            lo is not None and fmax < lo
-                        ):
-                            ok = False
-                            break
-                    except TypeError:  # incomparable filter/stat types
-                        continue
-            if ok:
-                keep.append(f["path"])
-        return keep, len(files) - len(keep)
+        """(surviving file paths, files pruned) — see ``select_files``."""
+        kept, pruned = select_files(self.root, manifest, col_between, col_eq)
+        return [f["path"] for f in kept], pruned
 
     def read(
         self,
@@ -2310,59 +2217,7 @@ class SnapshotTable:
         window). No data diffing, no scan of pre-existing files; at
         100 TB a day's catch-up reads a day's files."""
         cur = self.current_sequence() if to_sequence is None else to_sequence
-        if from_sequence > cur:
-            raise ValueError(
-                f"from_sequence {from_sequence} is ahead of {cur}"
-            )
-        def _load_or_break(seq: int) -> dict:
-            try:
-                return self._load(seq)
-            except FileNotFoundError:
-                raise IncrementalScanBreak(
-                    f"manifest for snapshot {seq} was expired — the "
-                    "consumer lagged past the retention window; rebuild "
-                    "from read()"
-                ) from None
-
-        # walk the PARENT chain (not the sequence range): once branches
-        # exist, main's history is a linked list through a global
-        # numbering, and a foreign branch's commits must never leak into
-        # a main consumer's change set
-        chain: list[dict] = []
-        seq = cur
-        while seq > from_sequence:
-            m = _load_or_break(seq)
-            chain.append(m)
-            seq = int(m["parent"])
-        if seq != from_sequence:
-            raise IncrementalScanBreak(
-                f"snapshot {from_sequence} is not an ancestor of {cur} — "
-                "the consumer's watermark is on another branch; rebuild "
-                "from read()"
-            )
-        new: list[str] = []
-        prev = (
-            {f["path"] for f in _load_or_break(from_sequence)["files"]}
-            if from_sequence > 0
-            else set()
-        )
-        for m in reversed(chain):
-            paths = {f["path"] for f in m["files"]}
-            if m["operation"] == "append":
-                new.extend(sorted(paths - prev))
-            elif m["operation"] not in ("replace", "evolve"):
-                raise IncrementalScanBreak(
-                    f"snapshot {m['sequence']} is '{m['operation']}', not "
-                    "append — incremental consumers must rebuild from read()"
-                )
-            prev = paths
-        missing = [p for p in new if not os.path.exists(p)]
-        if missing:
-            raise IncrementalScanBreak(
-                f"{len(missing)} appended file(s) in ({from_sequence}, "
-                f"{cur}] were expired (e.g. {missing[0]}) — the consumer "
-                "lagged past the retention window; rebuild from read()"
-            )
+        new = [f["path"] for f in appended_files(self.root, from_sequence, cur)]
         schema = self._table_schema(cur)
         if not new:  # caught up (or only compactions/evolutions in range)
             return self.spark.createDataFrame([], schema)
@@ -2480,7 +2335,7 @@ class SnapshotTable:
             upto is None and equals is None and nulls
         ):
             raise ValueError("pass exactly one of upto=/equals= (or nulls=True)")
-        fields = {f.name: f for f in self._partition_fields()}
+        fields = {f.name: f for f in partition_fields(self.root)}
         if field not in fields:
             raise ValueError(
                 f"{field!r} is not a partition field; spec has "
@@ -2534,10 +2389,10 @@ class SnapshotTable:
             }
         live = live_rows_map(m)
         n_dropped = sum(live[f["path"]] for f in dropped)
-        seq = self._commit_manifest(
+        seq = commit_files(
+            self.root,
+            [],
             operation="delete",
-            files=keep,
-            schema=m["schema"],
             summary={
                 "drop_partitions": {
                     "field": field,
@@ -2548,10 +2403,8 @@ class SnapshotTable:
                 "files_dropped": len(dropped),
                 "rows_deleted": n_dropped,
             },
-            expected_parent=expected_parent,
-            deletes=carry_deletes(m, {f["path"] for f in dropped}),
-            base_raw=load_manifest_raw(self.root, expected_parent),
-            removed_paths={f["path"] for f in dropped},
+            parent=expected_parent,
+            removed={f["path"] for f in dropped},
         )
         return {
             "sequence": seq,
@@ -2582,7 +2435,7 @@ class SnapshotTable:
         consumers break loudly, exactly like any history rewrite.
         Returns {sequence, files_replaced, rows_replaced, partitions}.
         """
-        fields = self._partition_fields()
+        fields = partition_fields(self.root)
         if not fields:
             raise ValueError(
                 "overwrite_partitions needs a partition.spec table "
@@ -2593,8 +2446,8 @@ class SnapshotTable:
             seq = self.commit(df, summary=dict(summary or {}))
             return {"sequence": seq, "files_replaced": 0,
                     "rows_replaced": 0, "partitions": 0}
-        self._check_append_schema(df, against=parent)
         m = self.snapshot(parent)
+        _check_append_schema(m["schema"], df.schema.jsonValue())
         untupled = [f["path"] for f in m["files"] if not f.get("partition")]
         if untupled:
             raise ValueError(
@@ -2625,40 +2478,25 @@ class SnapshotTable:
             ) in probes
         ]
         replaced_set = {f["path"] for f in replaced}
-        commit_dir = os.path.join(
-            self.data,
-            f"c{max_sequence(self.root) + 1:08d}-{uuid.uuid4().hex[:8]}",
-        )
-        self._write_data(df, commit_dir)
-        new_files = [f for f in self._file_stats(commit_dir) if f["rows"] > 0]
-        carried = [f for f in m["files"] if f["path"] not in replaced_set]
         replaced_rows = (
             self._live_scope_rows(m, sorted(replaced_set))
             if replaced_set else 0
         )
-        try:
-            seq = self._commit_manifest(
-                operation="overwrite",
-                files=carried + new_files,
-                schema=m["schema"],
-                summary={
-                    **dict(summary or {}),
-                    "dynamic_partition_overwrite": True,
-                    "partitions_replaced": len(probes),
-                    "files_replaced": len(replaced),
-                    "files_carried": len(carried),
-                    "rows_replaced": replaced_rows,
-                    "rows_written": sum(f["rows"] for f in new_files),
-                },
-                expected_parent=parent,
-                deletes=carry_deletes(m, replaced_set),
-                base_raw=load_manifest_raw(self.root, parent),
-                removed_paths=replaced_set,
-                added_files=new_files,
-            )
-        except SnapshotConflict:
-            shutil.rmtree(commit_dir, ignore_errors=True)
-            raise
+        seq = self._write_commit(
+            df,
+            prepare=lambda new_files: {"summary": {
+                **dict(summary or {}),
+                "dynamic_partition_overwrite": True,
+                "partitions_replaced": len(probes),
+                "files_replaced": len(replaced),
+                "files_carried": len(m["files"]) - len(replaced),
+                "rows_replaced": replaced_rows,
+                "rows_written": sum(f["rows"] for f in new_files),
+            }},
+            operation="overwrite",
+            parent=parent,
+            removed=replaced_set,
+        )
         return {
             "sequence": seq,
             "files_replaced": len(replaced),
@@ -2730,27 +2568,13 @@ class SnapshotTable:
         """Named MUTABLE refs: branch name → head sequence. Unlike tags
         (frozen pins), a branch head advances with each ``commit(...,
         branch=name)``."""
-        p = self._branches_path()
-        if not os.path.exists(p):
-            return {}
-        with open(p) as f:
-            return {k: int(v) for k, v in json.load(f).items()}
+        return branch_heads(self.root)
 
     def _branch_head(self, name: str) -> int:
         refs = self.branches()
         if name not in refs:
             raise ValueError(f"unknown branch {name!r}; have {sorted(refs)}")
         return refs[name]
-
-    def _set_branch(self, name: str, seq: int, expect: int | None = None):
-        refs = self.branches()
-        if expect is not None and refs.get(name, 0) != expect:
-            raise SnapshotConflict(
-                f"branch {name!r} advanced to {refs.get(name)} while "
-                f"committing against {expect}; retry against its head"
-            )
-        refs[name] = int(seq)
-        _atomic_write(self._branches_path(), json.dumps(refs, sort_keys=True))
 
     def branch(self, name: str, sequence: int | None = None) -> int:
         """Create a branch at ``sequence`` (default: current main head —
