@@ -95,6 +95,9 @@ def main() -> None:
     if args.backfill and args.from_snapshots:
         ap.error("--backfill needs explicit events (use --events or "
                  "--input), not --from-snapshots")
+    if args.sketches and (args.events or args.from_snapshots):
+        ap.error("--sketches needs a full run (--input or --generate): an "
+                 "incremental refresh cannot fold the sketch tiers")
     if args.backfill and args.snapshot_tiers:
         ap.error("--backfill does not publish the serving store; run "
                  "--snapshot-tiers separately after it")

@@ -624,10 +624,44 @@ def _two_batches(ev):
     ]
 
 
-#: jobs one run_incremental may run on the small store: it runs 31 —
+def _spark_jobs(spark, tag, fn):
+    """Run ``fn`` in a job group of its own; returns the descriptions of
+    the Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"{tag}-{os.getpid()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc._jsc.sc().statusStore()
+    return [jobs.job(j).description()
+            for j in sc.statusTracker().getJobIdsForGroup(group)]
+
+
+def _assert_rows_match_tables(spark, pipe, root, stages, run_fps):
+    """Each of ``stages`` (stage, table, watermark column) has one manifest
+    row per run fingerprint, and the last one's rows_out, watermark and
+    per-source partitions equal count(), max() and the per-source counts
+    of its table."""
+    for stage, table, col in stages:
+        rec = [e for e in pipe.manifest.entries if e["stage"] == stage]
+        assert [e["run_fp"] for e in rec] == run_fps, stage
+        t = spark.read.parquet(f"{root}/{table}")
+        assert rec[-1]["rows_out"] == t.count(), stage
+        if col:
+            assert rec[-1]["watermark"] == str(t.agg(F.max(col)).first()[0]), stage
+        if "partitions" in rec[-1]:
+            assert rec[-1]["partitions"] == {
+                r["source"]: r["count"] for r in t.groupBy("source").count().collect()
+            }, stage
+
+
+#: jobs one run_incremental may run on the small store: it runs 30 —
 #: the batch probe, then per merge a schema read, its query stages and
-#: the write, and the chunk table's read-back. A listing job per read or
-#: a touched-partition probe per merge would pass it.
+#: the write. A listing job per read or a touched-partition probe per
+#: merge would pass it.
 _BATCH_JOB_CEILING = 34
 
 
@@ -641,37 +675,104 @@ def test_incremental_batch_job_budget(spark, tmp_path, small_store):
     root = str(tmp_path / "store")
     shutil.copytree(pre, root)
     assert len([d for d in os.listdir(f"{root}/tier1") if "=" in d]) > 32
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    jobs = sc._jsc.sc().statusStore()
     for i, batch in enumerate(_two_batches(ev)):
-        group = f"budget-{i}-{os.getpid()}"
-        sc.setJobGroup(group, group)
-        try:
-            pipe = TierPipeline(spark, root)
-            pipe.run_incremental(batch, f"b{i}")
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        ids = tracker.getJobIdsForGroup(group)
-        descs = [jobs.job(j).description() for j in ids]
+        pipe = TierPipeline(spark, root)
+        descs = _spark_jobs(spark, f"budget-{i}",
+                            lambda: pipe.run_incremental(batch, f"b{i}"))
         assert not [d.get() for d in descs
                     if d.isDefined() and d.get().startswith("Listing")]
-        assert 0 < len(ids) <= _BATCH_JOB_CEILING, len(ids)
-
-        for stage, table, col in (
+        assert 0 < len(descs) <= _BATCH_JOB_CEILING, len(descs)
+        _assert_rows_match_tables(spark, pipe, root, (
             ("t0_events_inc", "events", "doc_id"),
             ("tier1_inc", "tier1", "bucket_ts"),
             ("tier2_inc", "tier2", "bucket_ts"),
             ("tier3_inc", "tier3", "bucket_ts"),
             ("compress_inc", "chunks", None),
-        ):
-            rec = [e for e in pipe.manifest.entries if e["stage"] == stage]
-            assert [e["run_fp"] for e in rec] == [f"b{k}" for k in range(i + 1)]
-            t = spark.read.parquet(f"{root}/{table}")
-            assert rec[-1]["rows_out"] == t.count(), stage
-            if col:
-                assert rec[-1]["watermark"] == str(t.agg(F.max(col)).first()[0]), stage
+        ), [f"b{k}" for k in range(i + 1)])
+
+
+#: jobs one run may run over the small store's own sequences under a new
+#: fingerprint: it runs 32 — a probe of the eventized sequences and one
+#: of the bounded events table, then per merge a schema read, its query
+#: stages and the write, and the chunk metrics. It ran 48 with a
+#: touched-partition and a watermark job per stage.
+_RUN_JOB_CEILING = 35
+
+
+def test_run_job_budget(spark, tmp_path, small_store):
+    """run probes its eventized sequences once and its bounded events
+    once; every merge takes the touched sources from the probe, and every
+    stage's manifest row still equals count() and max() of its table."""
+    root = str(tmp_path / "store")
+    shutil.copytree(small_store[0], root)
+    seq = gen_sequences(spark, 600, seed=7)
+    pipe = TierPipeline(spark, root)
+    descs = _spark_jobs(spark, "run-budget", lambda: pipe.run(seq, "again"))
+    assert 0 < len(descs) <= _RUN_JOB_CEILING, len(descs)
+    _assert_rows_match_tables(spark, pipe, root, (
+        ("t0_eventize", "events", "doc_id"),
+        ("tier1_1m", "tier1", "bucket_ts"),
+        ("tier2_1h", "tier2", "bucket_ts"),
+        ("tier3_1d", "tier3", "bucket_ts"),
+        ("compress", "chunks", None),
+    ), ["base", "again"])
+
+
+def test_run_with_late_delay_feeds_merged_tier_below(spark, tmp_path,
+                                                    small_store):
+    """A later run whose frontier has passed the first run's buckets no
+    longer produces them from its bounded events; tier-1 keeps them, and
+    the coarser tiers, re-aggregated from the merged tier below, still
+    cover them, so the stored tables pass verify()."""
+    import datetime
+
+    root = str(tmp_path / "store")
+    shutil.copytree(small_store[0], root)
+    last = spark.read.parquet(f"{root}/tier1").agg(F.max("bucket_ts")).first()[0]
+    pipe = TierPipeline(spark, root, late_delay="interval 2 minutes")
+    pipe.run(gen_sequences(spark, 1500, seed=7), run_fp="newer")
+    # the frontier moved past every first-run bucket
+    wm = pipe.manifest.last_watermark("late_bound")
+    assert last < wm - datetime.timedelta(minutes=3)
+    checks = pipe.verify()
+    assert checks["ok"], checks
+
+
+def test_incremental_with_sketches_raises_before_writing(spark, tmp_path,
+                                                         small_store):
+    """The sketch tiers hold no additive partials: an incremental refresh
+    of a pipeline built with_sketches raises before any table or the
+    manifest changes, instead of leaving sketch1/2/3 stale."""
+    pre, ev = small_store
+    root = str(tmp_path / "store")
+    shutil.copytree(pre, root)
+
+    def files():
+        return {
+            os.path.join(d, f): (os.path.getsize(os.path.join(d, f)),
+                                 os.path.getmtime(os.path.join(d, f)))
+            for d, _, fs in os.walk(root) for f in fs
+        }
+
+    before = files()
+    batch = ev.withColumn("doc_id", F.concat(F.col("doc_id"), F.lit("-s")))
+    with pytest.raises(ValueError, match="sketch"):
+        TierPipeline(spark, root, with_sketches=True).run_incremental(batch, "b1")
+    assert files() == before
+
+
+@pytest.mark.parametrize("source", [["--events", "batch.parquet"],
+                                    ["--from-snapshots", "tbl"]])
+def test_run_tiers_rejects_sketches_with_incremental_sources(tmp_path, source):
+    import subprocess
+    import sys
+
+    cli = os.path.join(os.path.dirname(os.path.dirname(__file__)), "run_tiers.py")
+    p = subprocess.run(
+        [sys.executable, cli, *source, "--sketches", "--out", str(tmp_path)],
+        capture_output=True, text=True, timeout=60,
+    )
+    assert p.returncode == 2 and "--sketches" in p.stderr, p.stderr
 
 
 def test_metrics_table_is_append_only(spark, tmp_path, small_store):

@@ -30,6 +30,8 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from workbook_exporter_fe_spark.operators.tiers import AGG_COLS, combine_partials
+
 
 def anti_join_state(
     new: DataFrame,
@@ -83,22 +85,14 @@ def merge_tier_additive(existing: DataFrame, partial: DataFrame, keys: list[str]
     """Additive merge of DECOMPOSABLE tier aggregates (continuous-aggregate
     refresh): when an incremental batch contributes PARTIAL rows for a
     bucket that already has rows on disk, the decomposable columns combine
-    (sum_v +=, cnt +=, min_v = min, max_v = max) and avg_v re-finalizes as
-    sum/cnt — key-replace (`merge_upsert`) would silently drop the prior
-    partial. This is the batch analog of re-aggregating a tier upward: the
-    same combine semantics, applied across batches instead of across
-    buckets. Shuffles only on the tier keys; both sides are tier-sized
+    (``tiers.combine_partials``) — key-replace (`merge_upsert`) would
+    silently drop the prior partial. This is the batch analog of
+    re-aggregating a tier upward: the same combine rule, applied across
+    batches instead of across buckets. Shuffles only on the tier keys; both sides are tier-sized
     (one row per (source, bucket)), orders of magnitude below tier-0.
     """
-    cols = ["sum_v", "min_v", "max_v", "cnt"]
-    both = existing.select(*keys, *cols).unionByName(partial.select(*keys, *cols))
-    out = both.groupBy(*keys).agg(
-        F.sum("sum_v").alias("sum_v"),
-        F.min("min_v").alias("min_v"),
-        F.max("max_v").alias("max_v"),
-        F.sum("cnt").alias("cnt"),
-    )
-    return out.withColumn("avg_v", F.col("sum_v") / F.col("cnt"))
+    both = existing.select(*keys, *AGG_COLS).unionByName(partial.select(*keys, *AGG_COLS))
+    return combine_partials(both.groupBy(*keys))
 
 
 #: name of the whole-table unit inside ``<path>.old`` (partition units

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from workbook_exporter_fe_spark.operators.tiers import AGG_COLS, combine_partials
+
 
 def counter_deltas(
     series: DataFrame,
@@ -147,20 +149,12 @@ def sliding_rollup_from_tier1(
     exploded = t1.select(
         F.col(key),
         F.explode(starts).alias("win_start"),
-        "sum_v",
-        "min_v",
-        "max_v",
-        "cnt",
+        *AGG_COLS,
     )
-    out = exploded.groupBy(key, "win_start").agg(
-        F.sum("sum_v").alias("sum_v"),
-        F.min("min_v").alias("min_v"),
-        F.max("max_v").alias("max_v"),
-        F.sum("cnt").alias("cnt"),
+    win_end = F.col("win_start") + F.expr(f"interval {window_minutes} minutes")
+    return combine_partials(exploded.groupBy(key, "win_start")).select(
+        key, "win_start", *AGG_COLS, win_end.alias("win_end"), "avg_v"
     )
-    return out.withColumn(
-        "win_end", F.col("win_start") + F.expr(f"interval {window_minutes} minutes")
-    ).withColumn("avg_v", F.col("sum_v") / F.col("cnt"))
 
 
 def rolling_stats(

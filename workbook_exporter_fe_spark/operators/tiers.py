@@ -23,7 +23,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, GroupedData, Window
 from pyspark.sql import functions as F
 
 TIER_TRUNC = {"1m": "minute", "1h": "hour", "1d": "day"}
@@ -31,8 +31,18 @@ TIER_TRUNC = {"1m": "minute", "1h": "hour", "1d": "day"}
 AGG_COLS = ["sum_v", "min_v", "max_v", "cnt"]
 
 
-def _finalize(df: DataFrame) -> DataFrame:
-    return df.withColumn("avg_v", F.col("sum_v") / F.col("cnt"))
+def combine_partials(grouped: GroupedData) -> DataFrame:
+    """The combine rule of the decomposable tier columns, applied to
+    ``grouped`` partial rows: ``sum_v`` and ``cnt`` add, ``min_v`` takes
+    the min and ``max_v`` the max, and ``avg_v`` re-finalizes as
+    sum_v / cnt. Re-aggregating a tier upward, folding a batch's partials
+    into a stored tier and windowing tier rows all combine this way."""
+    return grouped.agg(
+        F.sum("sum_v").alias("sum_v"),
+        F.min("min_v").alias("min_v"),
+        F.max("max_v").alias("max_v"),
+        F.sum("cnt").alias("cnt"),
+    ).withColumn("avg_v", F.col("sum_v") / F.col("cnt"))
 
 
 def rollup_tier1(
@@ -45,29 +55,19 @@ def rollup_tier1(
     the classic skew-salting pattern for a hot grouping key.
     """
     v = F.col(value_col)
-    bucket = F.date_trunc(TIER_TRUNC["1m"], F.col("event_ts")).alias("bucket_ts")
+    keys = [F.col("source"), F.date_trunc(TIER_TRUNC["1m"], F.col("event_ts")).alias("bucket_ts")]
     if salt_buckets > 0:
         salt = F.pmod(F.xxhash64(F.col("doc_id")) if "doc_id" in events.columns else F.spark_partition_id(), F.lit(salt_buckets))
-        partial = events.groupBy(F.col("source"), bucket, salt.alias("_salt")).agg(
-            F.sum(v).alias("sum_v"),
-            F.min(v).alias("min_v"),
-            F.max(v).alias("max_v"),
-            F.count(v).alias("cnt"),
-        )
-        out = partial.groupBy("source", "bucket_ts").agg(
-            F.sum("sum_v").alias("sum_v"),
-            F.min("min_v").alias("min_v"),
-            F.max("max_v").alias("max_v"),
-            F.sum("cnt").alias("cnt"),
-        )
-    else:
-        out = events.groupBy(F.col("source"), bucket).agg(
-            F.sum(v).alias("sum_v"),
-            F.min(v).alias("min_v"),
-            F.max(v).alias("max_v"),
-            F.count(v).alias("cnt"),
-        )
-    return _finalize(out)
+        keys.append(salt.alias("_salt"))
+    out = events.groupBy(*keys).agg(
+        F.sum(v).alias("sum_v"),
+        F.min(v).alias("min_v"),
+        F.max(v).alias("max_v"),
+        F.count(v).alias("cnt"),
+    )
+    if salt_buckets > 0:
+        return combine_partials(out.groupBy("source", "bucket_ts"))
+    return out.withColumn("avg_v", F.col("sum_v") / F.col("cnt"))
 
 
 def reaggregate(tier: DataFrame, to: str) -> DataFrame:
@@ -78,13 +78,7 @@ def reaggregate(tier: DataFrame, to: str) -> DataFrame:
     rescans tier-0.
     """
     bucket = F.date_trunc(TIER_TRUNC[to], F.col("bucket_ts")).alias("bucket_ts")
-    out = tier.groupBy(F.col("source"), bucket).agg(
-        F.sum("sum_v").alias("sum_v"),
-        F.min("min_v").alias("min_v"),
-        F.max("max_v").alias("max_v"),
-        F.sum("cnt").alias("cnt"),
-    )
-    return _finalize(out)
+    return combine_partials(tier.groupBy(F.col("source"), bucket))
 
 
 def token_histogram(events: DataFrame, tier: str = "1m") -> DataFrame:
@@ -329,13 +323,7 @@ def rollup_at(spark, out_dir: str, gran: str) -> DataFrame:
                 F.floor(F.unix_timestamp(F.col("bucket_ts").cast("timestamp")) / want)
                 * want
             ).alias("bucket_ts")
-            out = df.groupBy(F.col("source"), bucket).agg(
-                F.sum("sum_v").alias("sum_v"),
-                F.min("min_v").alias("min_v"),
-                F.max("max_v").alias("max_v"),
-                F.sum("cnt").alias("cnt"),
-            )
-            return _finalize(out)
+            return combine_partials(df.groupBy(F.col("source"), bucket))
     raise ValueError(
         f"{gran!r} ({want}s) is not derivable from stored tiers (finest: 60s)"
     )

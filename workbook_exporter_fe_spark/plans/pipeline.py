@@ -4,21 +4,29 @@ Replaces the reference's output-file-as-state pattern (re-read the YAML,
 anti-join, merge, rewrite — /root/reference/workbook_exporter-fe.py:1732-1767)
 with explicit *table* state:
 
-- every stage writes a ``source``-partitioned parquet tier table via a
-  merge keyed on (source, bucket_ts) — re-running a completed stage is a
-  no-op on the data. Every write (backfill and expiry too) goes through
-  one crash-safe swap, operators/merge._swap;
+- ``run`` (from sequences) and ``run_incremental`` (from a tier-0 event
+  batch) are thin entry points over one fold, ``TierPipeline._fold``.
+  Each upserts its events stage, bounds late events and probes the rows
+  it folds with one aggregate job (``_probe``: row count, touched
+  sources, watermarks). The fold runs tier1 → tier2 → tier3 → chunk
+  segments → anomaly in one stage loop. The entry points differ only in
+  the merge (key upsert for ``run``, additive for ``run_incremental``),
+  the stage names, and what feeds the next tier (the merged tier below
+  for ``run``, the batch's partials for ``run_incremental``);
+- every stage writes a ``source``-partitioned parquet table via a merge
+  keyed on (source, bucket_ts), scoped to the probe's touched sources —
+  re-running a completed stage is a no-op on the data. Every write
+  (backfill and expiry too) goes through one crash-safe swap,
+  operators/merge._swap;
 - a JSON-lines **manifest** records per-stage lineage + metrics (rows
-  in/out, per-source partition rows, encode ratio, watermark position,
-  wall time) — the engine's equivalent of an Iceberg metadata table.
-  Row counts (``rows_out``, per-source ``partitions``) are summed from the
-  written table's parquet footers on the driver. In ``run_incremental``
-  one aggregate job over the batch (``_probe``) gives the batch's row
-  count, touched sources and watermarks; an ``_inc`` stage's watermark
-  is the larger of the batch's and the highest one recorded for its
-  table, so no stage re-reads its table for bookkeeping. ``_manifest/metrics``
-  mirrors the manifest as an append-only parquet table, one driver-side
-  file per flush;
+  out, per-source partition rows, encode ratio, watermark position, wall
+  time), one row per table-writing stage through ``_stage`` — the
+  engine's equivalent of an Iceberg metadata table. Row counts come from
+  the written table's parquet footers on the driver; a stage's watermark
+  is the larger of the probe's and the highest one recorded for its
+  table, so no stage re-reads its table for bookkeeping.
+  ``_manifest/metrics`` mirrors the manifest as an append-only parquet
+  table, one driver-side file per flush;
 - **resume**: a stage whose manifest entry is `done` for the same run
   fingerprint is skipped. A crash mid-swap leaves ``<table>.old``; the
   stage's re-run first rolls the table back to its pre-swap state, so
@@ -153,6 +161,39 @@ def _ceil(ts: _dt.datetime, sec: int) -> _dt.datetime:
     return _PY_EPOCH + _dt.timedelta(seconds=e + (-e) % sec)
 
 
+#: each table's stage name in ``run`` and in ``run_incremental``
+_STAGES = {
+    "events": ("t0_eventize", "t0_events_inc"),
+    "tier1": ("tier1_1m", "tier1_inc"),
+    "tier2": ("tier2_1h", "tier2_inc"),
+    "tier3": ("tier3_1d", "tier3_inc"),
+    "sketch1": ("sketch1_1m", None),
+    "sketch2": ("sketch2_1h", None),
+    "sketch3": ("sketch3_1d", None),
+    "chunks": ("compress", "compress_inc"),
+    "anomaly1": ("anomaly_1m", "anomaly_inc"),
+}
+
+_GRAINS = ("1m", "1h", "1d")
+
+
+def _chunk_metrics(chunks: DataFrame) -> dict:
+    """The ``compress`` row's points and encode ratio: ONE aggregate
+    action over the chunk table — a per-chunk collect() would pull
+    (source, segment)-granular rows to the driver (millions at 100 TB)."""
+    m = chunks.agg(
+        F.sum("n_points").alias("points"),
+        F.sum(
+            F.octet_length("ts_payload") + F.octet_length("v_payload")
+        ).alias("encoded_bytes"),
+    ).first()
+    pts, enc = m["points"] or 0, m["encoded_bytes"] or 0
+    return {
+        "points": pts,
+        "encode_ratio": round(enc / (16.0 * pts), 4) if pts else None,
+    }
+
+
 class TierPipeline:
     """sequences → tier-0 events → 1m → 1h → 1d → compressed chunks."""
 
@@ -161,7 +202,6 @@ class TierPipeline:
         spark: SparkSession,
         out_dir: str,
         salt_buckets: int = 0,
-        value_col: str = "avg_v",
         with_sketches: bool = False,
         late_delay: str | None = None,
         with_anomaly: bool = False,
@@ -169,116 +209,155 @@ class TierPipeline:
         self.spark = spark
         self.out = out_dir
         self.salt_buckets = salt_buckets
-        self.value_col = value_col
         self.with_sketches = with_sketches
         self.late_delay = late_delay
         self.with_anomaly = with_anomaly
         self.manifest = Manifest(os.path.join(out_dir, "_manifest", "manifest.jsonl"))
 
     def _stage(self, run_fp: str, stage: str, write, out_path: str,
-               keys: list[str], watermark=None):
+               keys: list[str], watermark=None, extra=None):
         """Run one stage idempotently: skip if done, else write → log.
         ``write(out_path, keys)`` merges the stage's rows into its table
         and may return the merged table. Row counts come from the table's
-        parquet footers. ``watermark`` is the table's max key
-        (``bucket_ts``, else the last key) when the caller knows it; by
-        default one job reads it."""
+        parquet footers; a stage of ``run`` also records them per source,
+        unless ``extra(table)`` gives the row's own fields. ``watermark``,
+        the table's max key, is recorded when given."""
         if self.manifest.done(run_fp, stage):
             return self.spark.read.parquet(out_path)
         t0 = time.perf_counter()
         result = write(out_path, keys)
         if result is None:
             result = self.spark.read.parquet(out_path)
-        if watermark is None:
-            wm_col = "bucket_ts" if "bucket_ts" in keys else keys[-1]
-            watermark = result.agg(F.max(wm_col)).first()[0]
         per_source = _partition_rows(out_path)
-        # incremental stages keep their lean manifest row
-        extra = {} if stage.endswith("_inc") else {"partitions": per_source}
+        if extra is not None:
+            fields = extra(result)
+        else:
+            fields = {} if stage.endswith("_inc") else {"partitions": per_source}
+        if watermark is not None:
+            fields["watermark"] = str(watermark)
         self.manifest.record(
             run_fp=run_fp,
             stage=stage,
             status="done",
             rows_out=sum(per_source.values()),
-            **extra,
-            watermark=str(watermark),
+            **fields,
             wall_sec=round(time.perf_counter() - t0, 3),
         )
         return result
 
-    def _bound_late(self, events: DataFrame):
-        """Apply the late-event watermark when ``late_delay`` is set;
-        returns the bounded events and the frontier.
+    def _merge(self, combine, new: DataFrame, touched: list):
+        """A stage's ``write``: ``combine`` ``new`` into the table's
+        ``touched`` source partitions."""
+        return lambda path, keys: combine(
+            self.spark, path, new, keys, partition_col="source", touched=touched
+        )
+
+    def _watermark(self, batch: dict, key: str, stages, events: DataFrame):
+        """A table's max ``key`` after a merge: the batch's, or the highest
+        one a stage writing the table recorded before."""
+        col = "doc_id" if key == "doc_id" else "event_ts"
+        parse = _PARSE.get(dict(events.dtypes)[col], str)
+        prior = self.manifest.last_watermark(*stages, parse=parse)
+        return max((w for w in (batch[key], prior) if w is not None), default=None)
+
+    def _bound(self, run_fp: str, events: DataFrame):
+        """Bound late events when ``late_delay`` is set, probe the events
+        left, and record the run's ``late_bound`` row once; returns the
+        bounded events and their probe.
 
         Events behind (high-water - delay) never reach the rollup, so
         finalized buckets stay finalized under out-of-order re-deliveries
         (operators/retention.py). The frontier is monotone ACROSS runs: the
         last manifest-recorded watermark is fed back in, so replaying old
         data can never lower the cutoff and reopen finalized buckets."""
-        if not self.late_delay:
-            return events, None
-        from workbook_exporter_fe_spark.operators.retention import (
-            bound_late_events,
-        )
+        late_wm = None
+        if self.late_delay:
+            from workbook_exporter_fe_spark.operators.retention import (
+                bound_late_events,
+            )
 
-        prior_wm = self.manifest.last_watermark("late_bound")
-        return bound_late_events(events, self.late_delay, prior_wm=prior_wm)
-
-    def _log_late(self, run_fp: str, wm, rows_out) -> None:
-        """Record the run's ``late_bound`` row once; ``rows_out()`` counts
-        the events the bound kept."""
+            prior_wm = self.manifest.last_watermark("late_bound")
+            events, late_wm = bound_late_events(
+                events, self.late_delay, prior_wm=prior_wm
+            )
+        batch = self._probe(events)
         if self.late_delay and not self.manifest.done(run_fp, "late_bound"):
             self.manifest.record(
                 run_fp=run_fp, stage="late_bound", status="done",
-                rows_out=rows_out(), watermark=str(wm), wall_sec=0.0,
+                rows_out=batch["rows"], watermark=str(late_wm), wall_sec=0.0,
             )
+        return events, batch
 
     def _probe(self, events: DataFrame) -> dict:
-        """One aggregate job over a batch for everything the incremental
-        stages need to know of it: ``rows``; the touched ``sources``, a
-        null source included (every merge takes them instead of finding
-        them itself); the max ``doc_id``, the events table's watermark
-        key; and the max 1m/1h/1d bucket, each tier's batch watermark."""
-        grains = ("1m", "1h", "1d")
+        """One aggregate job over the events a stage folds for everything
+        its merges need to know of them: ``rows``; the touched
+        ``sources``, a null source included (every merge takes them
+        instead of finding them itself); the max ``doc_id``, the events
+        table's watermark key; and the max 1m/1h/1d bucket, each tier's
+        batch watermark."""
         row = events.agg(
             F.count("*").alias("rows"),
             # a struct keeps the null source that collect_set would drop
             F.collect_set(F.struct("source")).alias("sources"),
             F.max("doc_id").alias("doc_id"),
-            *[F.max(F.date_trunc(TIER_TRUNC[g], "event_ts")).alias(g) for g in grains],
+            *[F.max(F.date_trunc(TIER_TRUNC[g], "event_ts")).alias(g) for g in _GRAINS],
         ).first()
         return {
             "rows": row["rows"],
             "sources": [r["source"] for r in row["sources"]],
-            **{k: row[k] for k in ("doc_id", *grains)},
+            **{k: row[k] for k in ("doc_id", *_GRAINS)},
         }
 
-    def run(self, sequences: DataFrame, run_fp: str) -> dict[str, DataFrame]:
-        """Execute (or resume) the full cascade; returns the tier tables."""
-        out: dict[str, DataFrame] = {}
+    def _upsert_events(self, run_fp: str, incremental: bool,
+                       events: DataFrame, batch: dict | None = None):
+        """The events stage: upsert ``events`` by (source, doc_id).
+        ``batch`` is their probe; without it one probe job runs, and only
+        if the stage is not done yet."""
+        stage = _STAGES["events"][incremental]
+        path = f"{self.out}/events"
+        if self.manifest.done(run_fp, stage):
+            return self.spark.read.parquet(path)
+        if batch is None:
+            batch = self._probe(events)
+        return self._stage(
+            run_fp, stage, self._merge(merge_upsert_path, events, batch["sources"]),
+            path, ["source", "doc_id"],
+            self._watermark(batch, "doc_id", _STAGES["events"], events),
+        )
 
-        def stage(name, build, table, keys=("source", "bucket_ts")):
+    def _fold(self, run_fp: str, events: DataFrame, batch: dict,
+              incremental: bool) -> dict[str, DataFrame]:
+        """Fold ``events`` (probed as ``batch``) into tier1 → tier2 →
+        tier3 (→ the sketch tiers) → chunk segments → anomaly, one stage
+        per table, every merge scoped to the probe's touched sources.
+
+        ``incremental`` picks the tier merge (additive, else key upsert),
+        the stage names (``_STAGES``) and what feeds the next tier: the
+        batch's partials (re-aggregating partials is decomposable), else
+        the merged tier below, whose rows from earlier runs the bounded
+        events may no longer produce. Chunks and anomaly are re-derived
+        from the merged tier-1 of the touched sources; an incremental fold
+        re-encodes only the (source, day) segments its batch touched,
+        reading the partials from disk-persisted blocks."""
+        # looked up per call, so a wrapped merge function is the one that runs
+        from workbook_exporter_fe_spark.operators import merge
+
+        touched = batch["sources"]
+        in_touched = merge.in_partitions("source", touched)
+        tier_merge = merge.merge_tier_additive_path if incremental else merge_upsert_path
+
+        def stage(table, new, combine=merge_upsert_path, grain=None,
+                  keys=("source", "bucket_ts"), extra=None):
+            names = _STAGES[table]
             return self._stage(
-                run_fp, name,
-                lambda p, k: merge_upsert_path(
-                    self.spark, p, build(), k, partition_col="source"
-                ),
+                run_fp, names[incremental], self._merge(combine, new, touched),
                 f"{self.out}/{table}", list(keys),
+                grain and self._watermark(batch, grain, names, events), extra,
             )
 
-        out["events"] = events = stage(
-            "t0_eventize",
-            lambda: eventize(sequences).select("source", "event_ts", "v", "doc_id"),
-            "events", ("source", "doc_id"),
-        )
-        events, late_wm = self._bound_late(events)
-        self._log_late(run_fp, late_wm, events.count)
-        out["tier1"] = t1 = stage(
-            "tier1_1m", lambda: rollup_tier1(events, salt_buckets=self.salt_buckets), "tier1"
-        )
-        out["tier2"] = t2 = stage("tier2_1h", lambda: reaggregate(t1, "1h"), "tier2")
-        out["tier3"] = stage("tier3_1d", lambda: reaggregate(t2, "1d"), "tier3")
-
+        out: dict[str, DataFrame] = {}
+        partial = rollup_tier1(events, salt_buckets=self.salt_buckets)
+        families = [("tier", partial, reaggregate)]
         if self.with_sketches:
             # Non-decomposable aggregates (distinct keys, percentiles) ride
             # beside the sum/min/max tiers as mergeable sketch tables —
@@ -288,62 +367,64 @@ class TierPipeline:
                 sketch_tier1,
             )
 
-            out["sketch1"] = s1 = stage("sketch1_1m", lambda: sketch_tier1(events), "sketch1")
-            out["sketch2"] = s2 = stage(
-                "sketch2_1h", lambda: sketch_reaggregate(s1, "1h"), "sketch2"
+            families.append(("sketch", sketch_tier1(events), sketch_reaggregate))
+        if incremental:
+            partial.persist(StorageLevel.DISK_ONLY)
+        try:
+            for family, new, reagg in families:
+                for i, grain in enumerate(_GRAINS, 1):
+                    if i > 1:
+                        new = reagg(below, grain)
+                    table = f"{family}{i}"
+                    out[table] = merged = stage(table, new, tier_merge, grain)
+                    below = new if incremental else merged.filter(in_touched)
+
+            t1 = segments = out["tier1"].filter(in_touched)
+            if incremental:
+                # re-encode ONLY the (source, day) segments this batch
+                # touched, reading exact merged values from tier-1
+                seg = F.date_trunc("day", "bucket_ts")
+                affected = partial.select("source", seg.alias("_seg")).distinct()
+                segments = t1.withColumn("_seg", seg).join(
+                    F.broadcast(affected), ["source", "_seg"]
+                ).drop("_seg")
+            out["chunks"] = stage(
+                "chunks", compress_tier(segments),
+                keys=("source", "segment_start"),
+                extra=None if incremental else _chunk_metrics,
             )
-            out["sketch3"] = stage(
-                "sketch3_1d", lambda: sketch_reaggregate(s2, "1d"), "sketch3"
-            )
+        finally:
+            partial.unpersist()
 
         if self.with_anomaly:
-            # Rolling z-score outlier tier beside tier-1 (operators/rates):
-            # per-(source, bucket) flag from a bounded trailing frame over
-            # the tier table — tier-sized input, one window pass.
+            # Rolling z-score outlier tier beside tier-1 (operators/rates).
+            # Its trailing 30-row frames are NOT additive, so it is
+            # recomputed over the merged tier-1 of the touched sources —
+            # tier-sized input, one window pass.
             from workbook_exporter_fe_spark.operators.rates import anomaly_zscore
 
             out["anomaly1"] = stage(
-                "anomaly_1m",
-                lambda: anomaly_zscore(
+                "anomaly1",
+                anomaly_zscore(
                     t1.select("source", "bucket_ts", "avg_v"), n=30, threshold=3.0
                 ),
-                "anomaly1",
+                grain=None if incremental else "1m",
             )
-
-        chunks_path = f"{self.out}/chunks"
-        if not self.manifest.done(run_fp, "compress"):
-            t0c = time.perf_counter()
-            chunks = compress_tier(t1, value_col=self.value_col)
-            merge_upsert_path(
-                self.spark, chunks_path, chunks, ["source", "segment_start"],
-                partition_col="source",
-            )
-            persisted = self.spark.read.parquet(chunks_path)
-            # ONE aggregate action for all chunk metrics — per-chunk
-            # collect() would pull (source, segment)-granular rows to the
-            # driver (millions at 100 TB) and a separate count() would
-            # re-read the table
-            m = persisted.agg(
-                F.sum("n_points").alias("points"),
-                F.sum(
-                    F.octet_length("ts_payload")
-                    + F.octet_length("v_payload")
-                ).alias("encoded_bytes"),
-                F.count("*").alias("rows"),
-            ).first()
-            pts, enc = m["points"] or 0, m["encoded_bytes"] or 0
-            self.manifest.record(
-                run_fp=run_fp,
-                stage="compress",
-                status="done",
-                rows_out=m["rows"],
-                points=pts,
-                encode_ratio=round(enc / (16.0 * pts), 4) if pts else None,
-                wall_sec=round(time.perf_counter() - t0c, 3),
-            )
-        out["chunks"] = self.spark.read.parquet(chunks_path)
         self._write_metrics_table()
         return out
+
+    def run(self, sequences: DataFrame, run_fp: str) -> dict[str, DataFrame]:
+        """Execute (or resume) the full cascade; returns the tables.
+
+        The sequences are eventized and upserted into the events table.
+        The fold then re-derives every tier from the whole late-bounded
+        events table, upserting by key, each coarser tier from the merged
+        tier below (``_fold``)."""
+        events = self._upsert_events(
+            run_fp, False, eventize(sequences).select("source", "event_ts", "v", "doc_id")
+        )
+        bounded, batch = self._bound(run_fp, events)
+        return {"events": events, **self._fold(run_fp, bounded, batch, False)}
 
     def backfill(self, events: DataFrame, start, end, run_fp: str) -> dict:
         """Correction backfill: REPLACE every tier bucket in [start, end)
@@ -421,9 +502,7 @@ class TierPipeline:
 
         chunks_path = f"{self.out}/chunks"
         if os.path.exists(chunks_path):
-            ch_slice = compress_tier(
-                _win(t1, "bucket_ts", lo_d, hi_d), value_col=self.value_col
-            )
+            ch_slice = compress_tier(_win(t1, "bucket_ts", lo_d, hi_d))
             stats["chunks"] = _replace_window(
                 chunks_path, ch_slice, "segment_start", lo_d, hi_d
             )
@@ -509,12 +588,12 @@ class TierPipeline:
         checks["tier3_equals_reagg_tier2"] = _equal(s3, reaggregate(s2b, "1d"))
 
         chunks = r.parquet(f"{self.out}/chunks")
-        decoded = decompress_chunks(chunks, value_col=self.value_col).select(
+        decoded = decompress_chunks(chunks).select(
             "source",
             F.col("bucket_ts").cast(dict(t1.dtypes)["bucket_ts"]).alias("bucket_ts"),
-            self.value_col,
+            "avg_v",
         )
-        stored = t1.select("source", "bucket_ts", self.value_col)
+        stored = t1.select("source", "bucket_ts", "avg_v")
         t1_cut = cuts.get("tier1")
         if t1_cut is not None:
             # chunks keep whole (source, day) segments; compare only rows
@@ -546,121 +625,28 @@ class TierPipeline:
         events carry real timestamps; the eventize stage of `run` is the
         synthetic-corpus stand-in).
 
-        Every tier combines ADDITIVELY (merge_tier_additive_path): a batch
+        The late-bounded batch is upserted into the events table by
+        (source, doc_id), then folded like ``run`` (``_fold``) with every
+        tier combining ADDITIVELY (merge_tier_additive_path): a batch
         carrying partial data for an existing bucket adds into it instead
         of replacing it, so N incremental batches produce bit-identical
         tiers to one full run (pinned by tests/test_pipeline.py). Only the
-        work proportional to the BATCH happens:
+        work proportional to the BATCH happens: the batch's partials feed
+        every tier, and only the (source, day) chunk segments it touched
+        are re-encoded. One aggregate job over the batch (``_probe``)
+        gives its row count, touched sources and watermarks.
 
-        - events upsert by (source, doc_id) — partition-scoped;
-        - tier1/2/3: the batch's partial rollups additively merged
-          (re-aggregation of partials is itself decomposable, so the
-          cascade never reads the merged tier below);
-        - chunks: only the (source, day) segments the batch touched are
-          re-encoded from the merged tier-1 and upserted.
-
-        One aggregate job (``_probe``) over the batch gives its row count,
-        touched sources and watermarks; no stage re-reads a table for its
-        manifest row. The batch's tier-1 partials are built once and read
-        by tier-2/3 and the chunk segments from disk-persisted blocks.
+        The sketch tiers hold no additive partials, so a pipeline built
+        ``with_sketches`` raises ValueError before it writes anything.
         """
-        # looked up per call, like merge_upsert_path, so a wrapped
-        # merge.merge_tier_additive_path is the one that runs
-        from workbook_exporter_fe_spark.operators import merge
-
-        out: dict[str, DataFrame] = {}
-        events, late_wm = self._bound_late(events)
-        batch = self._probe(events)
-        self._log_late(run_fp, late_wm, lambda: batch["rows"])
-        touched = batch["sources"]
-        in_touched = merge.in_partitions("source", touched)
-
-        def watermark(key, stages):
-            """The table's max ``key``: the batch's, or the highest one a
-            stage writing the table recorded before."""
-            col = "doc_id" if key == "doc_id" else "event_ts"
-            parse = _PARSE.get(dict(events.dtypes)[col], str)
-            prior = self.manifest.last_watermark(*stages, parse=parse)
-            return max((w for w in (batch[key], prior) if w is not None), default=None)
-
-        def upsert(new):
-            return lambda path, keys: merge_upsert_path(
-                self.spark, path, new, keys, partition_col="source", touched=touched
+        if self.with_sketches:
+            raise ValueError(
+                "the sketch tiers are rebuilt by run() only; an incremental "
+                "refresh would leave them stale"
             )
-
-        def add(partial):
-            return lambda path, keys: merge.merge_tier_additive_path(
-                self.spark, path, partial, keys, touched=touched
-            )
-
-        out["events"] = self._stage(
-            run_fp, "t0_events_inc", upsert(events), f"{self.out}/events",
-            ["source", "doc_id"],
-            watermark("doc_id", ("t0_eventize", "t0_events_inc")),
-        )
-        keys = ["source", "bucket_ts"]
-        partial1 = rollup_tier1(events, salt_buckets=self.salt_buckets).persist(
-            StorageLevel.DISK_ONLY
-        )
-        try:
-            partial2 = reaggregate(partial1, "1h")
-            for tier, grain, name, partial in (
-                ("tier1", "1m", "tier1_1m", partial1),
-                ("tier2", "1h", "tier2_1h", partial2),
-                ("tier3", "1d", "tier3_1d", reaggregate(partial2, "1d")),
-            ):
-                out[tier] = self._stage(
-                    run_fp, f"{tier}_inc", add(partial), f"{self.out}/{tier}", keys,
-                    watermark(grain, (name, f"{tier}_inc")),
-                )
-
-            # re-encode ONLY the (source, day) segments this batch touched,
-            # reading exact merged values from tier-1
-            chunks_path = f"{self.out}/chunks"
-            if not self.manifest.done(run_fp, "compress_inc"):
-                t0c = time.perf_counter()
-                affected = partial1.select(
-                    "source", F.date_trunc("day", "bucket_ts").alias("_seg")
-                ).distinct()
-                t1 = out["tier1"].filter(in_touched).withColumn(
-                    "_seg", F.date_trunc("day", "bucket_ts")
-                )
-                sliced = t1.join(F.broadcast(affected), ["source", "_seg"]).drop("_seg")
-                chunks = compress_tier(sliced, value_col=self.value_col)
-                upsert(chunks)(chunks_path, ["source", "segment_start"])
-                self.manifest.record(
-                    run_fp=run_fp, stage="compress_inc", status="done",
-                    rows_out=sum(_partition_rows(chunks_path).values()),
-                    wall_sec=round(time.perf_counter() - t0c, 3),
-                )
-        finally:
-            partial1.unpersist()
-        # rolling-anomaly tier: windows are NOT additive (trailing 30-row
-        # frames), so recompute — but only the SOURCES this batch touched,
-        # reading the merged tier-1 (partition-scoped upsert keeps every
-        # untouched source's files in place).
-        anomaly_path = f"{self.out}/anomaly1"
-        if self.with_anomaly and not self.manifest.done(run_fp, "anomaly_inc"):
-            from workbook_exporter_fe_spark.operators.rates import anomaly_zscore
-
-            t0a = time.perf_counter()
-            recomputed = anomaly_zscore(
-                out["tier1"].filter(in_touched).select("source", "bucket_ts", "avg_v"),
-                n=30,
-                threshold=3.0,
-            )
-            upsert(recomputed)(anomaly_path, ["source", "bucket_ts"])
-            self.manifest.record(
-                run_fp=run_fp, stage="anomaly_inc", status="done",
-                rows_out=sum(_partition_rows(anomaly_path).values()),
-                wall_sec=round(time.perf_counter() - t0a, 3),
-            )
-        if self.with_anomaly:
-            out["anomaly1"] = self.spark.read.parquet(anomaly_path)
-
-        out["chunks"] = self.spark.read.parquet(chunks_path)
-        self._write_metrics_table()
-        return out
+        events, batch = self._bound(run_fp, events)
+        out = {"events": self._upsert_events(run_fp, True, events, batch)}
+        return {**out, **self._fold(run_fp, events, batch, True)}
 
     def run_from_snapshots(self, table) -> dict[str, DataFrame] | None:
         """Catch the tiers up to a SnapshotTable of tier-0 events
