@@ -26,6 +26,14 @@ Usage:
     python run_maintenance.py --snapshot-table /tmp/tbl \
         --delete-where "event_ts < timestamp'2021-01-01'" \
         --delete-bounds "event_ts<=2021-01-01" --compact-snapshots
+    python run_maintenance.py --snapshot-table /tmp/t/events \
+        --compact-snapshots --expire --keep-last 3
+
+The last form folds a tier store's events table (``{out}/events``, a
+SnapshotTable every ingest batch upserts into): each batch leaves one
+equality delete of its (source, doc_id) keys that every read of the
+table anti-joins, and ``--compact-snapshots`` rewrites the live rows and
+retires those deletes.
 
 Every action is itself crash-safe (staged swaps / manifest-last commits),
 so a maintenance run interrupted at any point leaves a readable store and

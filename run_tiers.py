@@ -70,9 +70,9 @@ def main() -> None:
     )
     ap.add_argument(
         "--tier-partition-spec",
-        default="day(bucket_ts),source",
+        default=None,
         help="serving-store partition spec at FIRST publish (comma "
-        "list); at web-scale source cardinality use "
+        "list; default: publish_snapshot_tiers', day(bucket_ts)), e.g. "
         "'day(bucket_ts),bucket(64;source)' — ';' inside a transform "
         "stands for ','",
     )
@@ -184,13 +184,11 @@ def main() -> None:
         # publish scoped to the batch's partitions — O(delta), never a
         # full-tier republish. ';' inside a transform stands for ','
         # (same convention as run_maintenance --partition-spec).
+        spec = {} if args.tier_partition_spec is None else {"spec": tuple(
+            p.replace(";", ",") for p in args.tier_partition_spec.split(",")
+        )}
         result["snapshot_tiers"] = publish_snapshot_tiers(
-            spark, args.out,
-            changed=batch if args.events else None,
-            spec=tuple(
-                p.replace(";", ",")
-                for p in args.tier_partition_spec.split(",")
-            ),
+            spark, args.out, changed=batch if args.events else None, **spec
         )
     if args.verify:
         result["verify"] = pipe.verify()

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from workbook_exporter_fe_spark.plans import pipeline as pl
 from workbook_exporter_fe_spark.plans.pipeline import TierPipeline
 from workbook_exporter_fe_spark.sources.datagen import gen_sequences
+from workbook_exporter_fe_spark.sources.snapshots import SnapshotTable
 
 
 def _tiers_sorted(df):
@@ -269,6 +270,30 @@ def test_partition_scoped_merge_preserves_untouched_partitions(
     assert {d: mtimes(d) for d in parts[1:]} == before
 
 
+def test_merge_reads_stored_schema_without_inference(spark, tmp_path):
+    """A merge reads its table with the merged rows' schema, the
+    partition column last, and runs no schema-inference job; a column
+    only the stored files hold raises instead of being dropped."""
+    from workbook_exporter_fe_spark.operators.merge import merge_upsert_path
+
+    path = str(tmp_path / "t")
+    keys = ["source", "bucket"]
+    merge_upsert_path(spark, path, _kv(spark, [("a", 1, 1.0), ("b", 1, 2.0)]),
+                      keys, partition_col="source")
+    new = _kv(spark, [("a", 1, 5.0)])
+    descs = _spark_jobs(spark, "stored-schema", lambda: merge_upsert_path(
+        spark, path, new, keys, partition_col="source", touched=["a"]))
+    # the keys' dedupe, their broadcast and the write; a schema
+    # inference over the stored footers would be a fourth job
+    assert len(descs) == 3, len(descs)
+    got = spark.read.parquet(path)
+    assert got.columns == ["bucket", "v", "source"]
+    assert sorted(map(tuple, got.collect())) == [(1, 2.0, "b"), (1, 5.0, "a")]
+    with pytest.raises(ValueError, match="stores columns"):
+        merge_upsert_path(spark, path, new.drop("v"), ["source", "bucket"],
+                          partition_col="source", touched=["a"])
+
+
 def test_late_bound_watermark_monotone_across_runs(spark, tmp_path):
     """Replaying old data must NOT lower the watermark and reopen buckets:
     the pipeline feeds the manifest's recorded frontier back into
@@ -462,12 +487,21 @@ def _faulty_fs(monkeypatch, prefix: str, crash_at: int | None = None):
         yield calls
 
 
+def _table(spark, root, table):
+    """A store's table: the live rows of the events SnapshotTable, else
+    the hive parquet tier."""
+    path = os.path.join(root, table)
+    if table == "events":
+        return SnapshotTable(spark, path).read()
+    return spark.read.parquet(path)
+
+
 def _snapshot(spark, root, tables):
     """Rows and partition dirs of each table, plus the swap leftovers."""
     state = {}
     for t in tables:
         path = os.path.join(root, t)
-        rows = spark.read.parquet(path).collect()
+        rows = _table(spark, root, t).collect()
         state[t] = (
             sorted((tuple(r) for r in rows), key=repr),
             sorted(d for d in os.listdir(path) if "=" in d),
@@ -640,16 +674,19 @@ def _spark_jobs(spark, tag, fn):
             for j in sc.statusTracker().getJobIdsForGroup(group)]
 
 
-def _assert_rows_match_tables(spark, pipe, root, stages, run_fps):
+def _assert_rows_match_tables(spark, pipe, root, stages, run_fps,
+                              events_rows=None):
     """Each of ``stages`` (stage, table, watermark column) has one manifest
     row per run fingerprint, and the last one's rows_out, watermark and
     per-source partitions equal count(), max() and the per-source counts
-    of its table."""
+    of its table — except the events stage's rows_out, which is the rows
+    its batch committed (``events_rows``), not the table's."""
     for stage, table, col in stages:
         rec = [e for e in pipe.manifest.entries if e["stage"] == stage]
         assert [e["run_fp"] for e in rec] == run_fps, stage
-        t = spark.read.parquet(f"{root}/{table}")
-        assert rec[-1]["rows_out"] == t.count(), stage
+        t = _table(spark, root, table)
+        want = events_rows if table == "events" else t.count()
+        assert rec[-1]["rows_out"] == want, stage
         if col:
             assert rec[-1]["watermark"] == str(t.agg(F.max(col)).first()[0]), stage
         if "partitions" in rec[-1]:
@@ -658,23 +695,39 @@ def _assert_rows_match_tables(spark, pipe, root, stages, run_fps):
             }, stage
 
 
-#: jobs one run_incremental may run on the small store: it runs 30 —
-#: the batch probe, then per merge a schema read, its query stages and
-#: the write. A listing job per read or a touched-partition probe per
-#: merge would pass it.
-_BATCH_JOB_CEILING = 34
+#: jobs one run_incremental may run on the small store: it runs 22 —
+#: the batch probe, the events commit and its key extraction, then per
+#: merge its query stages and the write. A schema-inference or listing
+#: job per read, a touched-partition probe per merge or a second
+#: evaluation of the chunk encoding would pass it.
+_BATCH_JOB_CEILING = 24
 
 
-def test_incremental_batch_job_budget(spark, tmp_path, small_store):
+def test_incremental_batch_job_budget(spark, tmp_path, small_store,
+                                      monkeypatch):
     """run_incremental works out what a batch touches once: over more
     than 32 source partitions it runs no file-listing job and at most a
-    pinned number of jobs, and after each of two batches (one behind the
-    store's frontier, one past it) every stage's manifest row still
-    equals count() and max() of its table."""
+    pinned number of jobs, and evaluates the chunk encoding once. After
+    each of two batches (one behind the store's frontier, one past it)
+    every stage's manifest row still equals count() and max() of its
+    table; the events stage records the rows its batch committed, and
+    the events table's live rows are the base docs' and every batch's."""
+    from workbook_exporter_fe_spark.operators import merge
+
     pre, ev = small_store
     root = str(tmp_path / "store")
     shutil.copytree(pre, root)
     assert len([d for d in os.listdir(f"{root}/tier1") if "=" in d]) > 32
+    plans = []
+    real = merge.merge_upsert
+
+    def spy(existing, new, keys, **kw):
+        out = real(existing, new, keys, **kw)
+        plans.append(out._jdf.queryExecution().optimizedPlan().toString())
+        return out
+
+    monkeypatch.setattr(merge, "merge_upsert", spy)
+    live = ev.count()
     for i, batch in enumerate(_two_batches(ev)):
         pipe = TierPipeline(spark, root)
         descs = _spark_jobs(spark, f"budget-{i}",
@@ -682,20 +735,26 @@ def test_incremental_batch_job_budget(spark, tmp_path, small_store):
         assert not [d.get() for d in descs
                     if d.isDefined() and d.get().startswith("Listing")]
         assert 0 < len(descs) <= _BATCH_JOB_CEILING, len(descs)
+        # the chunk merge is the batch's one key upsert
+        assert [p.count("FlatMapGroupsInPandas") for p in plans] == [1] * (i + 1)
+        rows = batch.count()
+        live += rows
         _assert_rows_match_tables(spark, pipe, root, (
             ("t0_events_inc", "events", "doc_id"),
             ("tier1_inc", "tier1", "bucket_ts"),
             ("tier2_inc", "tier2", "bucket_ts"),
             ("tier3_inc", "tier3", "bucket_ts"),
             ("compress_inc", "chunks", None),
-        ), [f"b{k}" for k in range(i + 1)])
+        ), [f"b{k}" for k in range(i + 1)], events_rows=rows)
+        assert _table(spark, root, "events").count() == live
 
 
 #: jobs one run may run over the small store's own sequences under a new
-#: fingerprint: it runs 32 — a probe of the eventized sequences and one
-#: of the bounded events table, then per merge a schema read, its query
-#: stages and the write, and the chunk metrics. It ran 48 with a
-#: touched-partition and a watermark job per stage.
+#: fingerprint: it runs 29 — a probe of the eventized sequences, the
+#: events commit and its key extraction, a probe of the bounded events
+#: table, then per merge its query stages and the write, and the chunk
+#: metrics. It ran 48 with a touched-partition and a watermark job per
+#: stage, and 32 with a schema read per merge.
 _RUN_JOB_CEILING = 35
 
 
@@ -709,13 +768,16 @@ def test_run_job_budget(spark, tmp_path, small_store):
     pipe = TierPipeline(spark, root)
     descs = _spark_jobs(spark, "run-budget", lambda: pipe.run(seq, "again"))
     assert 0 < len(descs) <= _RUN_JOB_CEILING, len(descs)
+    # the same docs again: all of them committed, none added
+    n = small_store[1].count()
     _assert_rows_match_tables(spark, pipe, root, (
         ("t0_eventize", "events", "doc_id"),
         ("tier1_1m", "tier1", "bucket_ts"),
         ("tier2_1h", "tier2", "bucket_ts"),
         ("tier3_1d", "tier3", "bucket_ts"),
         ("compress", "chunks", None),
-    ), ["base", "again"])
+    ), ["base", "again"], events_rows=n)
+    assert _table(spark, root, "events").count() == n
 
 
 def test_run_with_late_delay_feeds_merged_tier_below(spark, tmp_path,
@@ -736,6 +798,35 @@ def test_run_with_late_delay_feeds_merged_tier_below(spark, tmp_path,
     assert last < wm - datetime.timedelta(minutes=3)
     checks = pipe.verify()
     assert checks["ok"], checks
+
+
+def test_run_with_late_delay_never_splits_a_bucket(spark, tmp_path,
+                                                   small_store):
+    """The store counted every event; a later run over the same docs with
+    a 90-second ``late_delay`` has its cutoff (frontier - delay) inside a
+    minute. That tier-1 bucket keeps counting all of its events: the run
+    re-derives it from the whole minute, not from the events after the
+    cutoff."""
+    import datetime
+
+    pre, ev = small_store
+    root = str(tmp_path / "store")
+    shutil.copytree(pre, root)
+    cut = ev.agg(F.max("event_ts")).first()[0] - datetime.timedelta(seconds=90)
+    minute = cut.replace(second=0, microsecond=0)
+    in_minute = (F.col("event_ts") >= F.lit(minute)) & (
+        F.col("event_ts") < F.lit(minute + datetime.timedelta(minutes=1)))
+    # the cutoff splits the minute's events
+    assert ev.filter(in_minute & (F.col("event_ts") <= F.lit(cut))).count() > 0
+    assert ev.filter(in_minute & (F.col("event_ts") > F.lit(cut))).count() > 0
+    want = {r["source"]: r["count"]
+            for r in ev.filter(in_minute).groupBy("source").count().collect()}
+
+    TierPipeline(spark, root, late_delay="interval 90 seconds").run(
+        gen_sequences(spark, 600, seed=7), run_fp="shorter")
+    got = spark.read.parquet(f"{root}/tier1").filter(
+        F.col("bucket_ts") == F.lit(minute))
+    assert {r["source"]: r["cnt"] for r in got.collect()} == want
 
 
 def test_incremental_with_sketches_raises_before_writing(spark, tmp_path,
@@ -812,3 +903,62 @@ def test_metrics_table_is_append_only(spark, tmp_path, small_store):
         for e in TierPipeline(spark, root).manifest.entries
     )
     assert got == want
+
+
+def test_events_commit_replays_without_change(spark, tmp_path, small_store,
+                                              monkeypatch):
+    """A crash after the events commit and before its manifest row: the
+    re-run commits the batch again, which replaces its rows with
+    themselves, so the events table and every tier equal an
+    uninterrupted run's."""
+    pre, ev = small_store
+    batch = ev.withColumn("doc_id", F.concat(F.col("doc_id"), F.lit("-r")))
+    tables = ["events", "tier1", "tier2", "tier3", "chunks"]
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    shutil.copytree(pre, clean)
+    shutil.copytree(pre, crashed)
+    TierPipeline(spark, clean).run_incremental(batch, "b1")
+
+    pipe = TierPipeline(spark, crashed)
+    real = pipe.manifest.record
+
+    def record(**entry):
+        if entry["stage"] == "t0_events_inc":
+            raise _Crash("injected crash before the events stage's row")
+        return real(**entry)
+
+    monkeypatch.setattr(pipe.manifest, "record", record)
+    with pytest.raises(_Crash):
+        pipe.run_incremental(batch, "b1")
+    assert SnapshotTable(spark, f"{crashed}/events").current_sequence() == 2
+    TierPipeline(spark, crashed).run_incremental(batch, "b1")
+    assert _snapshot(spark, crashed, tables) == _snapshot(spark, clean, tables)
+
+
+def test_scoped_publish_job_and_file_budget(spark, tmp_path, small_store):
+    """A scoped publish works out the batch's partition tuples in one job
+    and then runs at most two per tier (the write's clustering and the
+    write); it writes one file per touched day per tier, and the served
+    tiers equal the hive tiers."""
+    pre, ev = small_store
+    root = str(tmp_path / "store")
+    shutil.copytree(pre, root)
+    tiers = ("tier1", "tier2", "tier3")
+    pl.publish_snapshot_tiers(spark, root)
+
+    def files(t):
+        return {f["path"] for f in SnapshotTable(
+            spark, f"{root}/snapshot_tiers/{t}").snapshot()["files"]}
+
+    before = {t: files(t) for t in tiers}
+    descs = _spark_jobs(spark, "publish", lambda: pl.publish_snapshot_tiers(
+        spark, root, changed=ev))
+    assert 0 < len(descs) <= 1 + 2 * len(tiers), len(descs)
+    days = ev.select(F.date_trunc("day", "event_ts")).distinct().count()
+    for t in tiers:
+        assert len(files(t) - before[t]) == days, t
+        served = SnapshotTable(spark, f"{root}/snapshot_tiers/{t}").read()
+        want = spark.read.parquet(f"{root}/{t}")
+        cols = sorted(want.columns)
+        assert sorted(map(tuple, served.select(cols).collect())) == sorted(
+            map(tuple, want.select(cols).collect())), t

@@ -67,11 +67,14 @@ def test_bound_late_events_drops_behind_watermark(spark, sf_dir):
     assert wm == events.agg(F.max("event_ts")).first()[0]
     kept = bounded.count()
     assert 0 < kept < events.count()
-    # everything kept is strictly inside the watermark window
+    # events are kept by whole minutes: exactly those whose minute is at
+    # or after the cutoff's (watermark - delay) minute
     import datetime
 
-    lo = wm - datetime.timedelta(days=3)
-    assert bounded.filter(F.col("event_ts") <= F.lit(lo)).count() == 0
+    lo = F.date_trunc("minute", F.lit(wm - datetime.timedelta(days=3)))
+    minute = F.date_trunc("minute", "event_ts")
+    assert bounded.filter(minute < lo).count() == 0
+    assert kept == events.filter(minute >= lo).count()
     # idempotent: bounding an already-bounded stream with the same
     # watermark drops nothing further
     again, _ = bound_late_events(bounded, delay="interval 3 days", wm=wm)

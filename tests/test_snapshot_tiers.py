@@ -1,7 +1,7 @@
 """Snapshot-table tier serving store (r5, VERDICT r4 item #3).
 
 Pins: publish_snapshot_tiers lays tiers out as SnapshotTables with
-hidden partitioning [day(bucket_ts), source]; run_rules.build_store
+hidden partitioning [day(bucket_ts)] (the default spec); run_rules.build_store
 registers them LAZILY; query_range derives a conservative prune window
 from the expression and opens ≈ the queried window's files (manifest
 min/max + day() transform pruning, zero data listing) while returning

@@ -60,6 +60,7 @@ def merge_upsert(
     keys: list[str],
     new_stats=None,
     broadcast_bytes: int = 64 << 20,
+    replaced: DataFrame | None = None,
 ) -> DataFrame:
     """Insert-or-replace per key: rows in `new` win (O19).
 
@@ -72,9 +73,15 @@ def merge_upsert(
     derived TableStats) the hint is dropped when the batch is genuinely
     big — forcing a 100 GB broadcast would OOM the driver; the plain
     exchange is correct there.
+
+    ``replaced``, the key tuples ``new`` holds, stands in for ``new``'s
+    own keys on the anti-join side, so an expensive ``new`` (an encoding
+    UDF) is evaluated once. Existing rows under a key in ``replaced``
+    that ``new`` lacks are dropped.
     """
     new = new.select(*existing.columns)
-    keys_side = new.select(*keys).dropDuplicates(keys)
+    keys_side = (new if replaced is None else replaced).select(*keys)
+    keys_side = keys_side.dropDuplicates(keys)
     if new_stats is None or new_stats.bytes <= broadcast_bytes:
         keys_side = F.broadcast(keys_side)
     kept = existing.join(keys_side, keys, "left_anti")
@@ -163,6 +170,37 @@ def in_partitions(col: str, vals) -> F.Column:
     return cond | F.col(col).isNull() if None in vals else cond
 
 
+def _stored_schema(path: str, new: DataFrame, partition_col: str | None):
+    """The schema to read the table at ``path`` with: ``new``'s column
+    types in the stored order — one stored file's columns, then the
+    partition columns of its directory, as Spark's partition discovery
+    orders them. That file's footer is checked on the driver, so a
+    column only the stored files hold raises instead of being silently
+    dropped, and no job infers the schema."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    cols = [c for c in new.columns if c != partition_col]
+    cols += [partition_col] if partition_col else []
+    for d, dirs, files in os.walk(path):
+        dirs.sort()
+        parts = sorted(f for f in files
+                       if f.endswith(".parquet") and not f.startswith((".", "_")))
+        if parts:
+            stored = pq.read_schema(os.path.join(d, parts[0])).names + [
+                seg.split("=", 1)[0]
+                for seg in os.path.relpath(d, path).split(os.sep) if "=" in seg
+            ]
+            if sorted(stored) != sorted(cols):
+                raise ValueError(
+                    f"{path} stores columns {stored}, the merged rows have "
+                    f"{cols}; a merge would drop or null-fill the difference"
+                )
+            cols = stored
+            break
+    return StructType([new.schema[c] for c in cols])
+
+
 def _merge_path(spark, path, new, keys, partition_col, combine,
                 touched=None) -> DataFrame | None:
     """``combine`` the partitions of ``path`` that ``new`` touches (the
@@ -171,29 +209,24 @@ def _merge_path(spark, path, new, keys, partition_col, combine,
     it must hold every value in ``new`` (a missing one would be swapped
     out with only its new rows). Without it one job finds them.
 
-    Returns the merged table, read with the schema the merge already
-    inferred (one schema job fewer), or None if the table is new."""
+    The table is read with ``new``'s schema (``_stored_schema``), so no
+    job infers it. Returns the merged table, or None if the table is
+    new."""
     schema = None
 
     def write(staging):
         nonlocal schema
         merged = new
         if os.path.exists(path):
-            existing = spark.read.parquet(path)
-            schema = existing.schema
+            schema = _stored_schema(path, new, partition_col)
+            existing = spark.read.schema(schema).parquet(path)
             if partition_col is not None:
                 # prune to the partitions `new` touches; the filter prunes
                 # the scan at the source
                 vals = touched
                 if vals is None:
                     vals = [r[0] for r in new.select(partition_col).distinct().collect()]
-                existing = existing.filter(
-                    in_partitions(partition_col, vals)
-                ).withColumn(
-                    # partition-dir values read back as strings
-                    partition_col,
-                    F.col(partition_col).cast(new.schema[partition_col].dataType),
-                )
+                existing = existing.filter(in_partitions(partition_col, vals))
             merged = combine(existing, new, keys).select(*existing.columns)
         w = merged.write.mode("overwrite")
         (w.partitionBy(partition_col) if partition_col else w).parquet(staging)
@@ -216,6 +249,7 @@ def merge_tier_additive_path(
 def merge_upsert_path(
     spark, path: str, new: DataFrame, keys: list[str],
     partition_col: str | None = None, touched: list | None = None,
+    replaced: DataFrame | None = None,
 ) -> DataFrame | None:
     """MERGE against a parquet table on disk (hive-style fallback backend).
 
@@ -228,10 +262,13 @@ def merge_upsert_path(
     unpartitioned files raises. Without ``partition_col`` the whole table
     is read, merged and swapped. ``touched``, when given, lists the
     partition values ``new`` holds (a superset is fine) and saves the job
-    that would find them. With an Iceberg catalog configured either
-    shape is a single ``spark.sql("MERGE INTO ...")`` — gated behind the
-    same signature (sources/tableio.py). Returns the merged table like
-    ``_merge_path``.
+    that would find them; ``replaced`` is ``merge_upsert``'s. With an
+    Iceberg catalog configured either shape is a single
+    ``spark.sql("MERGE INTO ...")`` — gated behind the same signature
+    (sources/tableio.py). Returns the merged table like ``_merge_path``.
     """
-    return _merge_path(spark, path, new, keys, partition_col, merge_upsert,
+    def combine(existing, rows, keys):
+        return merge_upsert(existing, rows, keys, replaced=replaced)
+
+    return _merge_path(spark, path, new, keys, partition_col, combine,
                        touched)

@@ -62,13 +62,18 @@ def bound_late_events(
     reopen buckets a previous run finalized, and a full-history run's
     cutoff comes from the frontier, not from the batch's own max. The
     returned watermark is what the manifest records as the run's
-    `watermark` position."""
+    `watermark` position.
+
+    Events are dropped by whole tier-1 buckets: an event is admitted iff
+    its minute is at or after the cutoff's minute, so a later run whose
+    cutoff falls inside a bucket an earlier run aggregated in full
+    re-derives that bucket from all of its events, never from a part."""
     if wm is None:
         wm = events.agg(F.max("event_ts")).collect()[0][0]
     if prior_wm is not None and (wm is None or prior_wm > wm):
         wm = prior_wm
-    cutoff = F.lit(wm) - F.expr(delay)
-    return events.filter(F.col("event_ts") > cutoff), wm
+    cutoff = F.date_trunc("minute", F.lit(wm) - F.expr(delay))
+    return events.filter(F.date_trunc("minute", "event_ts") >= cutoff), wm
 
 
 def expire_tiers(

@@ -13,16 +13,20 @@ with explicit *table* state:
   the merge (key upsert for ``run``, additive for ``run_incremental``),
   the stage names, and what feeds the next tier (the merged tier below
   for ``run``, the batch's partials for ``run_incremental``);
-- every stage writes a ``source``-partitioned parquet table via a merge
-  keyed on (source, bucket_ts), scoped to the probe's touched sources —
-  re-running a completed stage is a no-op on the data. Every write
-  (backfill and expiry too) goes through one crash-safe swap,
-  operators/merge._swap;
+- the events stage upserts the batch into a SnapshotTable at
+  ``{out}/events``, partitioned by ``day(event_ts)``: new files plus one
+  equality delete of the batch's (source, doc_id) keys, so its cost
+  follows the batch, not the events history. Every tier stage writes a
+  ``source``-partitioned parquet table via a merge keyed on (source,
+  bucket_ts), scoped to the probe's touched sources — re-running a
+  completed stage is a no-op on the data. Every tier write (backfill and
+  expiry too) goes through one crash-safe swap, operators/merge._swap;
 - a JSON-lines **manifest** records per-stage lineage + metrics (rows
   out, per-source partition rows, encode ratio, watermark position, wall
   time), one row per table-writing stage through ``_stage`` — the
-  engine's equivalent of an Iceberg metadata table. Row counts come from
-  the written table's parquet footers on the driver; a stage's watermark
+  engine's equivalent of an Iceberg metadata table. Tier row counts come
+  from the written table's parquet footers on the driver, the events
+  stage's from the probe of the rows it committed; a stage's watermark
   is the larger of the probe's and the highest one recorded for its
   table, so no stage re-reads its table for bookkeeping.
   ``_manifest/metrics`` mirrors the manifest as an append-only parquet
@@ -30,7 +34,9 @@ with explicit *table* state:
 - **resume**: a stage whose manifest entry is `done` for the same run
   fingerprint is skipped. A crash mid-swap leaves ``<table>.old``; the
   stage's re-run first rolls the table back to its pre-swap state, so
-  re-running converges, additive (non-idempotent) merges included.
+  re-running converges, additive (non-idempotent) merges included. A
+  crash after the events commit but before its manifest row re-commits
+  the batch, which replaces its rows with themselves.
 
 Scale: stages communicate only through partitioned tables; the manifest is
 tiny driver-side JSON (one row per stage × source), so no collect() of data
@@ -176,6 +182,10 @@ _STAGES = {
 
 _GRAINS = ("1m", "1h", "1d")
 
+#: partition spec of the events SnapshotTable: by time only, so a batch
+#: writes one file per day it touches whatever its number of sources
+EVENTS_SPEC = ("day(event_ts)",)
+
 
 def _chunk_metrics(chunks: DataFrame) -> dict:
     """The ``compress`` row's points and encode ratio: ONE aggregate
@@ -215,41 +225,45 @@ class TierPipeline:
         self.manifest = Manifest(os.path.join(out_dir, "_manifest", "manifest.jsonl"))
 
     def _stage(self, run_fp: str, stage: str, write, out_path: str,
-               keys: list[str], watermark=None, extra=None):
+               keys: list[str], watermark=None, extra=None, read=None):
         """Run one stage idempotently: skip if done, else write → log.
         ``write(out_path, keys)`` merges the stage's rows into its table
-        and may return the merged table. Row counts come from the table's
-        parquet footers; a stage of ``run`` also records them per source,
-        unless ``extra(table)`` gives the row's own fields. ``watermark``,
-        the table's max key, is recorded when given."""
+        and may return the merged table; ``read(out_path)`` reads it
+        (a hive parquet read by default). Row counts come from the
+        table's parquet footers; a stage of ``run`` also records them per
+        source. ``extra(table)`` gives fields of the row's own — in place
+        of the per-source counts, and of ``rows_out`` if it names one.
+        ``watermark``, the table's max key, is recorded when given."""
+        read = read or self.spark.read.parquet
         if self.manifest.done(run_fp, stage):
-            return self.spark.read.parquet(out_path)
+            return read(out_path)
         t0 = time.perf_counter()
         result = write(out_path, keys)
         if result is None:
-            result = self.spark.read.parquet(out_path)
-        per_source = _partition_rows(out_path)
-        if extra is not None:
-            fields = extra(result)
-        else:
-            fields = {} if stage.endswith("_inc") else {"partitions": per_source}
+            result = read(out_path)
+        fields = {} if extra is None else extra(result)
+        if "rows_out" not in fields:
+            per_source = _partition_rows(out_path)
+            fields["rows_out"] = sum(per_source.values())
+            if extra is None and not stage.endswith("_inc"):
+                fields["partitions"] = per_source
         if watermark is not None:
             fields["watermark"] = str(watermark)
         self.manifest.record(
             run_fp=run_fp,
             stage=stage,
             status="done",
-            rows_out=sum(per_source.values()),
             **fields,
             wall_sec=round(time.perf_counter() - t0, 3),
         )
         return result
 
-    def _merge(self, combine, new: DataFrame, touched: list):
+    def _merge(self, combine, new: DataFrame, touched: list, **kw):
         """A stage's ``write``: ``combine`` ``new`` into the table's
         ``touched`` source partitions."""
         return lambda path, keys: combine(
-            self.spark, path, new, keys, partition_col="source", touched=touched
+            self.spark, path, new, keys, partition_col="source",
+            touched=touched, **kw,
         )
 
     def _watermark(self, batch: dict, key: str, stages, events: DataFrame):
@@ -265,7 +279,8 @@ class TierPipeline:
         left, and record the run's ``late_bound`` row once; returns the
         bounded events and their probe.
 
-        Events behind (high-water - delay) never reach the rollup, so
+        Events whose minute is before that of (high-water - delay) never
+        reach the rollup — whole tier-1 buckets, never part of one — so
         finalized buckets stay finalized under out-of-order re-deliveries
         (operators/retention.py). The frontier is monotone ACROSS runs: the
         last manifest-recorded watermark is fed back in, so replaying old
@@ -310,19 +325,48 @@ class TierPipeline:
 
     def _upsert_events(self, run_fp: str, incremental: bool,
                        events: DataFrame, batch: dict | None = None):
-        """The events stage: upsert ``events`` by (source, doc_id).
-        ``batch`` is their probe; without it one probe job runs, and only
-        if the stage is not done yet."""
+        """The events stage: upsert ``events`` by (source, doc_id) into
+        the SnapshotTable at ``{out}/events`` (``EVENTS_SPEC``) and return
+        its live rows. ``batch`` is their probe; without it one probe job
+        runs, and only if the stage is not done yet.
+
+        The commit costs O(batch) at any table size: the batch appends as
+        new files plus one equality delete of its keys (``upsert_eq``),
+        a plain append while the table is empty. Duplicate keys inside one
+        batch are all kept, as the stored rows of earlier batches are
+        replaced by all of them. Re-running a batch whose commit landed
+        but whose manifest row did not replaces its rows with themselves.
+        ``rows_out`` is the rows this batch committed, from the probe — a
+        live count of the table would be a scan through every
+        outstanding equality delete."""
+        from workbook_exporter_fe_spark.sources.snapshots import SnapshotTable
+
         stage = _STAGES["events"][incremental]
-        path = f"{self.out}/events"
+        table = SnapshotTable(self.spark, f"{self.out}/events")
         if self.manifest.done(run_fp, stage):
-            return self.spark.read.parquet(path)
+            return table.read()
         if batch is None:
             batch = self._probe(events)
+
+        def write(path, keys):
+            if table.current_sequence() == 0:
+                if any(d.startswith("source=") for d in os.listdir(path)):
+                    # written before events were a SnapshotTable: reading
+                    # on would silently drop that history
+                    raise ValueError(
+                        f"{path} holds hive-partitioned events of an older "
+                        "store; commit them into a SnapshotTable first"
+                    )
+                table.set_properties(**{"partition.spec": list(EVENTS_SPEC)})
+                table.commit(events)
+            else:
+                table.upsert_eq(events, keys, validate_source=False)
+
         return self._stage(
-            run_fp, stage, self._merge(merge_upsert_path, events, batch["sources"]),
-            path, ["source", "doc_id"],
+            run_fp, stage, write, table.root, ["source", "doc_id"],
             self._watermark(batch, "doc_id", _STAGES["events"], events),
+            extra=lambda _: {"rows_out": batch["rows"]},
+            read=lambda _: table.read(),
         )
 
     def _fold(self, run_fp: str, events: DataFrame, batch: dict,
@@ -347,10 +391,11 @@ class TierPipeline:
         tier_merge = merge.merge_tier_additive_path if incremental else merge_upsert_path
 
         def stage(table, new, combine=merge_upsert_path, grain=None,
-                  keys=("source", "bucket_ts"), extra=None):
+                  keys=("source", "bucket_ts"), extra=None, **kw):
             names = _STAGES[table]
             return self._stage(
-                run_fp, names[incremental], self._merge(combine, new, touched),
+                run_fp, names[incremental],
+                self._merge(combine, new, touched, **kw),
                 f"{self.out}/{table}", list(keys),
                 grain and self._watermark(batch, grain, names, events), extra,
             )
@@ -380,18 +425,22 @@ class TierPipeline:
                     below = new if incremental else merged.filter(in_touched)
 
             t1 = segments = out["tier1"].filter(in_touched)
+            # the (source, day) segments to re-encode; they are also the
+            # keys the chunk merge replaces, so the encoding runs once
+            seg = F.date_trunc("day", "bucket_ts").alias("segment_start")
+            affected = (partial if incremental else t1).select("source", seg)
+            affected = affected.distinct()
             if incremental:
                 # re-encode ONLY the (source, day) segments this batch
                 # touched, reading exact merged values from tier-1
-                seg = F.date_trunc("day", "bucket_ts")
-                affected = partial.select("source", seg.alias("_seg")).distinct()
-                segments = t1.withColumn("_seg", seg).join(
-                    F.broadcast(affected), ["source", "_seg"]
-                ).drop("_seg")
+                segments = t1.withColumn("segment_start", seg).join(
+                    F.broadcast(affected), ["source", "segment_start"]
+                ).drop("segment_start")
             out["chunks"] = stage(
                 "chunks", compress_tier(segments),
                 keys=("source", "segment_start"),
                 extra=None if incremental else _chunk_metrics,
+                replaced=affected,
             )
         finally:
             partial.unpersist()
@@ -740,58 +789,61 @@ def publish_snapshot_tiers(
     out: str,
     tier_names: tuple[str, ...] = ("tier1", "tier2", "tier3"),
     changed: DataFrame | None = None,
-    spec: tuple[str, ...] = ("day(bucket_ts)", "source"),
+    spec: tuple[str, ...] = ("day(bucket_ts)",),
 ) -> dict:
-    """Publish the pipeline's parquet tier dirs as SnapshotTables with
-    hidden partitioning ``[day(bucket_ts), source]`` — the SERVING store
-    (r5, VERDICT r4 item #3).
+    """Publish the pipeline's parquet tier dirs as SnapshotTables under
+    ``{out}/snapshot_tiers/{tier}`` — the SERVING store.
 
     The pipeline's own parquet dirs stay the resumable working state;
-    this snapshots them under ``{out}/snapshot_tiers/{tier}`` so the
-    PromQL MetricStore's lazy loader (run_rules.build_store) can prune
-    files from the manifest alone: a query_range over one day of a
-    year-long tier-1 opens ~that day's files (per-file min/max stats AND
-    the day() partition transform both skip, before Spark lists
-    anything). A full publish is one ``overwrite`` commit — prior
-    publishes stay time-travelable and expire via normal snapshot
-    retention.
+    the published copy lets the PromQL MetricStore's lazy loader
+    (run_rules.build_store) prune files from the manifest alone: a
+    query_range over one day of a year-long tier-1 opens ~that day's
+    files (per-file min/max stats AND the day() partition transform both
+    skip, before Spark lists anything). A full publish is one
+    ``overwrite`` commit — prior publishes stay time-travelable and
+    expire via normal snapshot retention.
 
-    ``changed`` (r5): a relation carrying the rows FOLDED this run —
-    any (source, some timestamp column) shape, e.g. the incremental
-    batch's events. With it (and an already-published store), each
-    tier's publish becomes a DYNAMIC PARTITION OVERWRITE
-    (SnapshotTable.overwrite_partitions) touching only the changed
-    partitions: a batch that landed 3 days × 5 sources republishes
-    those partitions, never the tier — the O(delta) publish a 100 TB
-    continuous aggregate needs.
+    ``spec`` sets the partition layout at FIRST publish; a store already
+    published keeps its own ``partition.spec`` property. The default
+    partitions by time only, ``[day(bucket_ts)]``: a (day, source)
+    partition of a 64-source store holds at most 1,440 tier-1 rows, 24
+    tier-2 rows and one tier-3 row, each in a file of its own, and every
+    file costs a fixed write and open. Layouts that add ``source`` (or
+    ``bucket(N, source)``) still work.
 
-    Delta scoping is TUPLE-correct for any ``spec``: the batch rows are
-    re-expressed as (source, bucket_ts) proxies and pushed through the
-    SPEC'S OWN derived partition columns, and the delta is every tier
-    row whose partition tuple matches — never a raw (source, day)
-    filter. That matters for bucketed specs: with ``bucket(64; source)``
-    a partition holds MANY sources, and overwrite_partitions replaces
-    whole partitions, so the delta must carry the untouched
-    bucket-mates' rows too (pinned in tests). day()/month() scoping is
-    sound for every tier granularity because 1m/1h/1d buckets truncate
-    WITHIN the event's calendar unit. Any other field of ``bucket_ts``
-    — hour(), identity, a truncate — would not cover the coarser tiers'
-    floored buckets (the proxies carry raw event times), so it forces a
-    full republish. Tuples match null-safely, so a batch touching the
-    null-source partition republishes it.
-
-    ``spec`` sets the partition layout at FIRST publish (an existing
-    store keeps its own spec property). At bounded source cardinality
-    the default [day(bucket_ts), source] is right; at web-scale source
-    cardinality use ``('day(bucket_ts)', 'bucket(64, source)')`` so the
-    partition count stays day-bounded.
+    ``changed``: a relation carrying the rows FOLDED this run — any
+    (source, some timestamp column) shape, e.g. the incremental batch's
+    events. With it (and an already-published store), each tier's
+    publish is a DYNAMIC PARTITION OVERWRITE touching only the batch's
+    partitions. One job works out the batch's partition tuples through
+    the spec's own transforms (the batch rows as (source, bucket_ts)
+    proxies); then, per tier, the hive tier is read with the serving
+    table's manifest schema (no schema-inference job), the delta is
+    every tier row whose tuple matches — a literal predicate, no join —
+    and ``overwrite_partitions(partitions=)`` replaces exactly those
+    tuples. The delta is tuple-correct for any spec: with ``bucket(64,
+    source)`` a partition holds MANY sources, so the delta carries the
+    untouched bucket-mates' rows too (pinned in tests). day()/month()
+    scoping is sound for every tier granularity because 1m/1h/1d
+    buckets truncate WITHIN the event's calendar unit. Any other field
+    of ``bucket_ts`` — hour(), identity, a truncate — would not cover
+    the coarser tiers' floored buckets (the proxies carry raw event
+    times), so it forces a full republish. Tuples match null-safely, so
+    a batch touching the null-source partition republishes it.
     """
+    import functools
+
+    from pyspark.sql.types import StructType
+
     from workbook_exporter_fe_spark.sources.partitioning import (
-        PCOL_PREFIX,
         parse_spec,
         partition_columns,
+        partition_expr,
     )
-    from workbook_exporter_fe_spark.sources.snapshots import SnapshotTable
+    from workbook_exporter_fe_spark.sources.snapshots import (
+        SnapshotTable,
+        load_manifest_raw,
+    )
 
     proxy = None
     if changed is not None:
@@ -800,6 +852,7 @@ def publish_snapshot_tiers(
             F.col("source"),
             F.col(ts_col).cast("timestamp").alias("bucket_ts"),
         )
+    tuples_of: dict = {}  # the batch's tuples, one probe job per spec
     info: dict = {}
     for name in tier_names:
         src = f"{out}/{name}"
@@ -807,47 +860,63 @@ def publish_snapshot_tiers(
             continue
         root = f"{out}/snapshot_tiers/{name}"
         table = SnapshotTable(spark, root)
-        if table.current_sequence() == 0:
+        seq = table.current_sequence()
+        if seq == 0:
             table.set_properties(**{"partition.spec": list(spec)})
-        df = spark.read.parquet(src)
         fields = parse_spec(
             list(table.properties().get("partition.spec") or [])
         )
         scoped = (
             proxy is not None
-            and table.current_sequence() > 0
+            and seq > 0
             and fields
             and all(f.transform in ("day", "month")
                     for f in fields if f.source == "bucket_ts")
         )
-        if scoped:
-            pcols = [PCOL_PREFIX + f.name for f in fields]
-            tuples = (
-                proxy.select(*partition_columns(proxy, fields)).distinct()
-            )
-            rows = df.select("*", *partition_columns(df, fields))
-            delta = rows.join(
-                F.broadcast(tuples),
-                [rows[c].eqNullSafe(tuples[c]) for c in pcols],
-                "left_semi",
-            ).drop(*pcols)
-            rep = table.overwrite_partitions(
-                delta, summary={"published_from": src}
+        if not scoped:
+            seq = table.commit(
+                spark.read.parquet(src), mode="overwrite",
+                summary={"published_from": src},
             )
             info[name] = {
                 "root": root,
-                "sequence": rep["sequence"],
+                "sequence": seq,
                 "files": len(table.snapshot()["files"]),
-                "partitions_replaced": rep["partitions"],
-                "files_replaced": rep["files_replaced"],
             }
             continue
-        seq = table.commit(
-            df, mode="overwrite", summary={"published_from": src}
+        key = tuple(fields)
+        if key not in tuples_of:
+            # one task dedupes the batch's tuples: a single input
+            # partition needs no exchange, so the probe is one job
+            tuples_of[key] = [
+                tuple(r) for r in proxy.select(*partition_columns(proxy, fields))
+                .coalesce(1).distinct().collect()
+            ]
+        tuples = tuples_of[key]
+        rows = spark.read.schema(
+            StructType.fromJson(load_manifest_raw(root, seq)["schema"])
+        ).parquet(src)
+        exprs = [partition_expr(f, rows) for f in fields]
+        match = functools.reduce(
+            lambda a, b: a | b,
+            [
+                functools.reduce(
+                    lambda a, b: a & b,
+                    [e.eqNullSafe(F.lit(v)) for e, v in zip(exprs, t)],
+                )
+                for t in tuples
+            ],
+            F.lit(False),
+        )
+        rep = table.overwrite_partitions(
+            rows.filter(match), summary={"published_from": src},
+            partitions=tuples,
         )
         info[name] = {
             "root": root,
-            "sequence": seq,
+            "sequence": rep["sequence"],
             "files": len(table.snapshot()["files"]),
+            "partitions_replaced": rep["partitions"],
+            "files_replaced": rep["files_replaced"],
         }
     return info

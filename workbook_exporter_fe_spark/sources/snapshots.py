@@ -1569,10 +1569,14 @@ class SnapshotTable:
                     ).extend(d["paths"])
                 else:
                     scoped.append(d)
+            def key_rows(ecols, kpaths):
+                # key files hold the table's types: no inference job
+                return self.spark.read.schema(
+                    StructType([schema[c] for c in ecols])
+                ).parquet(*kpaths)
+
             for ecols, kpaths in unconditional.items():
-                keys = self.spark.read.parquet(*sorted(set(kpaths))).select(
-                    *ecols
-                )
+                keys = key_rows(ecols, sorted(set(kpaths)))
                 match = functools.reduce(
                     lambda a, b: a & b,
                     [out[c].eqNullSafe(keys[c]) for c in ecols],
@@ -1589,9 +1593,7 @@ class SnapshotTable:
                     ),
                 )
                 for d in scoped:
-                    keys = self.spark.read.parquet(*d["paths"]).select(
-                        *d["eq_cols"]
-                    )
+                    keys = key_rows(d["eq_cols"], d["paths"])
                     match = functools.reduce(
                         lambda a, b: a & b,
                         [out[c].eqNullSafe(keys[c]) for c in d["eq_cols"]],
@@ -1924,13 +1926,14 @@ class SnapshotTable:
                                "rows_upserted": rows_new}}
             if not rows_new:
                 return out
-            # keys from the files just written (column-pruned, one job —
+            # keys from the files just written (column-pruned, read with
+            # the batch's schema, deduped in the writing task: one job —
             # never a second evaluation of ``df``)
-            keys = self.spark.read.parquet(
+            keys = self.spark.read.schema(df.schema).parquet(
                 *[f["path"] for f in new_files]
             ).select(
                 *[F.col(c).cast(table[c]).alias(c) for c in eq_cols]
-            ).distinct()
+            ).coalesce(1).distinct()
             kdir = new_commit_dir(self.root, "eqdv-")
             keys.coalesce(1).write.mode("error").parquet(kdir)
             kpaths = self._list_parquet(kdir)
@@ -2413,7 +2416,8 @@ class SnapshotTable:
         }
 
     def overwrite_partitions(
-        self, df: DataFrame, summary: dict | None = None
+        self, df: DataFrame, summary: dict | None = None,
+        partitions=None,
     ) -> dict:
         """Iceberg-style DYNAMIC PARTITION OVERWRITE (r5): replace
         exactly the partitions ``df`` holds rows for, in ONE snapshot —
@@ -2433,6 +2437,12 @@ class SnapshotTable:
         proof-by-tuple is the whole point; ``compact()`` first).
         Commits ``operation='overwrite'``: incremental ``changes()``
         consumers break loudly, exactly like any history rewrite.
+
+        ``partitions`` lists the tuples to replace (one value per spec
+        field, in spec order) when the caller knows them, and saves the
+        probe job. Same contract as the merges' ``touched=``: ``df`` must
+        hold rows only in those partitions; a listed partition ``df`` has
+        no rows for ends up empty.
         Returns {sequence, files_replaced, rows_replaced, partitions}.
         """
         fields = partition_fields(self.root)
@@ -2461,9 +2471,11 @@ class SnapshotTable:
         )
 
         names = [f.name for f in fields]
-        probe_rows = (
-            df.select(*partition_columns(df, fields)).distinct().collect()
-        )
+        probe_rows = partitions
+        if probe_rows is None:
+            probe_rows = (
+                df.select(*partition_columns(df, fields)).distinct().collect()
+            )
         probes = {
             tuple(
                 None if r[i] is None else str(r[i])
