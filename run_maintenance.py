@@ -5,9 +5,10 @@ A continuously-ingesting tier store accumulates three kinds of debt, each
 with an existing engine operator; this CLI is the cron-able wrapper that
 applies them together and prints one JSON report:
 
-- **small files** in hive-partitioned tier tables (every incremental
-  merge adds a file per touched partition) → `compact_partitions`
-  (sources/tableio.py) rewrites only partitions holding >= min-files.
+- **small files** in the ``source=`` tier tables of older stores (the
+  pipeline writes its tiers flat, a file or two per write) →
+  `compact_partitions` (sources/tableio.py) rewrites only partitions
+  holding >= min-files and skips flat tables.
 - **snapshot-log growth** in SnapshotTable roots (one manifest + commit
   dir per micro-batch; footer-dominated scans, unbounded time travel) →
   `SnapshotTable.compact()` (REPLACE snapshot, optional sort for stats
@@ -102,7 +103,9 @@ def main() -> None:
     ap.add_argument("--tiers", help="tier-store out dir (tier1/tier2/tier3)")
     ap.add_argument(
         "--compact", action="store_true",
-        help="compact multi-file partitions of each tier table",
+        help="compact multi-file source= partitions of each tier table; "
+        "only tiers of older stores have them (the pipeline writes flat "
+        "tiers, which this skips)",
     )
     ap.add_argument("--target-rows", type=int, default=1_000_000)
     ap.add_argument("--min-files", type=int, default=2)

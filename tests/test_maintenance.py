@@ -131,6 +131,13 @@ def test_compact_partitions(spark, tmp_path):
     assert nfiles("a") == 1
     assert _rows_simple(spark.read.parquet(path)) == before  # data unchanged
 
+    # a flat table (the pipeline's tiers) has no partitions to compact
+    flat = str(tmp_path / "flat")
+    spark.read.parquet(path).write.parquet(flat)
+    files = sorted(os.listdir(flat))
+    assert compact_partitions(spark, flat, min_files=1) == {}
+    assert sorted(os.listdir(flat)) == files
+
 
 def _rows_simple(df):
     return sorted((r["source"], r["bucket"], r["v"]) for r in df.collect())

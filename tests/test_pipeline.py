@@ -210,8 +210,9 @@ def test_partition_scoped_merge_preserves_untouched_partitions(
 ):
     """merge_upsert_path(partition_col=...) must rewrite ONLY the partitions
     present in the new batch — untouched partition dirs keep their files'
-    mtimes (the replaceWhere shape a 100 TB merge needs). That holds on a
-    tier after backfill and expiry too: they keep its source= layout."""
+    mtimes (the replaceWhere shape a 100 TB merge needs). The pipeline's
+    tiers are flat, and backfill and expiry keep them flat, with the
+    column order they had."""
     from workbook_exporter_fe_spark.operators.merge import merge_upsert_path
 
     path = str(tmp_path / "tier")
@@ -241,33 +242,22 @@ def test_partition_scoped_merge_preserves_untouched_partitions(
 
     import datetime
 
-    from workbook_exporter_fe_spark.operators.merge import (
-        merge_tier_additive_path,
-    )
     from workbook_exporter_fe_spark.operators.retention import expire_tiers
-    from workbook_exporter_fe_spark.operators.tiers import rollup_tier1
 
     store = str(tmp_path / "store")
     shutil.copytree(small_store[0], store)
+    tiers = ("tier1", "tier2", "tier3")
+    columns = {t: spark.read.parquet(f"{store}/{t}").columns for t in tiers}
+    assert {c[-1] for c in columns.values()} == {"source"}
     ev = small_store[1]
     lo, hi = ev.agg(F.min("event_ts"), F.max("event_ts")).first()
     TierPipeline(spark, store).backfill(
         ev, lo, hi + datetime.timedelta(seconds=1), "bf"
     )
     expire_tiers(spark, store, {"tier1": "interval 2 minutes"})
-    t1 = os.path.join(store, "tier1")
-    assert not [f for f in os.listdir(t1) if f.endswith(".parquet")]
-    parts = sorted(d for d in os.listdir(t1) if d.startswith("source="))
-    assert len(parts) >= 2
-
-    def mtimes(d):
-        pdir = os.path.join(t1, d)
-        return {f: os.path.getmtime(os.path.join(pdir, f)) for f in os.listdir(pdir)}
-
-    before = {d: mtimes(d) for d in parts[1:]}
-    touched = ev.filter(F.col("source") == parts[0][len("source="):])
-    merge_tier_additive_path(spark, t1, rollup_tier1(touched), ["source", "bucket_ts"])
-    assert {d: mtimes(d) for d in parts[1:]} == before
+    for t in tiers:
+        assert _flat(store, t), t
+        assert spark.read.parquet(f"{store}/{t}").columns == columns[t], t
 
 
 def test_merge_reads_stored_schema_without_inference(spark, tmp_path):
@@ -536,6 +526,15 @@ def _assert_recovers(spark, monkeypatch, tmp_path, pre, op, swapped, tables,
         assert _snapshot(spark, root, tables) == want, f"crash at step {k}"
 
 
+def _flat(root, table):
+    """The parquet files directly in a flat table's dir; empty if the
+    table holds a ``col=value`` dir."""
+    path = os.path.join(root, table)
+    if any("=" in d for d in os.listdir(path)):
+        return []
+    return [f for f in os.listdir(path) if f.endswith(".parquet")]
+
+
 def _kv(spark, rows):
     return spark.createDataFrame(rows, "source string, bucket long, v double")
 
@@ -605,8 +604,7 @@ def small_store(spark, tmp_path_factory):
 def test_swap_crash_recovery_backfill_and_expire(spark, tmp_path, monkeypatch,
                                                  small_store):
     """Backfill and expiry rewrite whole tiers: a crash at each step of
-    the tier-1 swap is rolled back and the re-run matches a clean run,
-    every source= partition present."""
+    the tier-1 swap is rolled back and the re-run matches a clean run."""
     from workbook_exporter_fe_spark.operators.retention import expire_tiers
 
     pre, ev = small_store
@@ -628,19 +626,17 @@ def test_swap_crash_recovery_backfill_and_expire(spark, tmp_path, monkeypatch,
 
 def test_swap_crash_recovery_incremental_stage(spark, tmp_path, monkeypatch,
                                                small_store):
-    """Pipeline level: a crash halfway through the tier-1 additive swap of
-    run_incremental (some sources promoted, others not) leaves the stage
-    unrecorded; re-running the batch rolls the swap back and folds it
-    once, so every table matches an uninterrupted run."""
+    """Pipeline level: a crash at each step of the whole-table tier-1
+    additive swap of run_incremental (the live table moved aside, the
+    staged one promoted, the commit) leaves the stage unrecorded;
+    re-running the batch rolls the swap back and folds it once, so every
+    table matches an uninterrupted run."""
     pre, ev = small_store
     batch = ev.withColumn("doc_id", F.concat(F.col("doc_id"), F.lit("-r")))
-    n_sources = ev.select("source").distinct().count()
-    assert n_sources >= 3
     _assert_recovers(
         spark, monkeypatch, tmp_path, pre,
         lambda root: TierPipeline(spark, root).run_incremental(batch, "b1"),
         "tier1", ["events", "tier1", "tier2", "tier3", "chunks"],
-        steps=[n_sources + 1],
     )
 
 
@@ -705,19 +701,20 @@ _BATCH_JOB_CEILING = 24
 
 def test_incremental_batch_job_budget(spark, tmp_path, small_store,
                                       monkeypatch):
-    """run_incremental works out what a batch touches once: over more
-    than 32 source partitions it runs no file-listing job and at most a
-    pinned number of jobs, and evaluates the chunk encoding once. After
-    each of two batches (one behind the store's frontier, one past it)
-    every stage's manifest row still equals count() and max() of its
-    table; the events stage records the rows its batch committed, and
-    the events table's live rows are the base docs' and every batch's."""
+    """run_incremental works out what a batch touches once: it runs no
+    file-listing job and at most a pinned number of jobs, evaluates the
+    chunk encoding once, and leaves one file in each tier and at most two
+    in chunks, not one per source. After each of two batches (one behind
+    the store's frontier, one past it) every stage's manifest row still
+    equals count() and max() of its table; the events stage records the
+    rows its batch committed, and the events table's live rows are the
+    base docs' and every batch's."""
     from workbook_exporter_fe_spark.operators import merge
 
     pre, ev = small_store
     root = str(tmp_path / "store")
     shutil.copytree(pre, root)
-    assert len([d for d in os.listdir(f"{root}/tier1") if "=" in d]) > 32
+    assert ev.select("source").distinct().count() > 32
     plans = []
     real = merge.merge_upsert
 
@@ -737,6 +734,9 @@ def test_incremental_batch_job_budget(spark, tmp_path, small_store,
         assert 0 < len(descs) <= _BATCH_JOB_CEILING, len(descs)
         # the chunk merge is the batch's one key upsert
         assert [p.count("FlatMapGroupsInPandas") for p in plans] == [1] * (i + 1)
+        # chunks: the kept rows and the re-encoded segments, two tasks
+        files = [len(_flat(root, t)) for t in ("tier1", "tier2", "tier3", "chunks")]
+        assert files[:3] == [1, 1, 1] and 1 <= files[3] <= 2, files
         rows = batch.count()
         live += rows
         _assert_rows_match_tables(spark, pipe, root, (
@@ -962,3 +962,86 @@ def test_scoped_publish_job_and_file_budget(spark, tmp_path, small_store):
         cols = sorted(want.columns)
         assert sorted(map(tuple, served.select(cols).collect())) == sorted(
             map(tuple, want.select(cols).collect())), t
+
+
+_WRITTEN = ["tier1", "tier2", "tier3", "chunks"]
+
+
+def _as_source_partitioned(spark, root):
+    """Rewrite the store's tiers and chunks in the layout older stores
+    hold them in: hive ``source=`` partitions."""
+    for t in _WRITTEN:
+        path = os.path.join(root, t)
+        spark.read.parquet(path).write.partitionBy("source").parquet(path + ".hive")
+        shutil.rmtree(path)
+        os.rename(path + ".hive", path)
+
+
+def test_source_partitioned_store_migrates_on_next_write(spark, tmp_path,
+                                                         small_store):
+    """A store in the older ``source=`` layout goes flat on its next
+    write. After an incremental batch, a backfill or an expiry, each
+    table the write rewrote is flat with ``source`` last, every table
+    holds the rows the same write gives on a flat copy, and the store
+    passes verify()."""
+    import datetime
+
+    from workbook_exporter_fe_spark.operators.retention import expire_tiers
+
+    pre, ev = small_store
+    lo, hi = ev.agg(F.min("event_ts"), F.max("event_ts")).first()
+    batch = ev.withColumn("doc_id", F.concat(F.col("doc_id"), F.lit("-m")))
+    fixed = ev.withColumn("v", F.col("v") * 2)
+    ops = {
+        "incremental": (lambda root: TierPipeline(spark, root).run_incremental(
+            batch, "b1"), _WRITTEN),
+        "backfill": (lambda root: TierPipeline(spark, root).backfill(
+            fixed, lo, hi + datetime.timedelta(seconds=1), "bf"), _WRITTEN),
+        "expire": (lambda root: expire_tiers(spark, root, {
+            "tier1": "interval 1 minute", "tier2": "interval 1 minute"}),
+            ["tier1", "tier2"]),
+    }
+    for name, (op, written) in ops.items():
+        flat, old = str(tmp_path / name / "flat"), str(tmp_path / name / "old")
+        shutil.copytree(pre, flat)
+        shutil.copytree(pre, old)
+        _as_source_partitioned(spark, old)
+        op(flat)
+        op(old)
+        for t in _WRITTEN:
+            want = spark.read.parquet(f"{flat}/{t}")
+            got = spark.read.parquet(f"{old}/{t}")
+            if t in written:
+                assert _flat(old, t), (name, t)
+                assert got.columns == want.columns, (name, t)
+                assert want.columns[-1] == "source", (name, t)
+            assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+                map(tuple, want.select(got.columns).collect()), key=repr), (name, t)
+        checks = TierPipeline(spark, old).verify()
+        assert checks["ok"], (name, checks)
+
+
+def test_verify_checks_serving_store_against_tiers(spark, tmp_path,
+                                                   small_store):
+    """verify() compares each published serving tier with its tier and
+    skips the unpublished ones; a hand-corrupted serving row fails it."""
+    root = str(tmp_path / "store")
+    shutil.copytree(small_store[0], root)
+    pipe = TierPipeline(spark, root)
+    pl.publish_snapshot_tiers(spark, root, tier_names=("tier1", "tier2"))
+    checks = pipe.verify()
+    assert checks["ok"], checks
+    assert checks["serving_tier1_equals_tier"] and checks["serving_tier2_equals_tier"]
+    assert "serving_tier3_equals_tier" not in checks
+
+    served = SnapshotTable(spark, f"{root}/snapshot_tiers/tier2")
+    rows = served.read()
+    first = rows.orderBy("source", "bucket_ts").first()
+    hit = F.col("source").eqNullSafe(first["source"]) & (
+        F.col("bucket_ts") == F.lit(first["bucket_ts"]))
+    served.commit(rows.withColumn(
+        "sum_v", F.when(hit, F.col("sum_v") + 1).otherwise(F.col("sum_v"))
+    ).localCheckpoint(), mode="overwrite")
+    bad = pipe.verify()
+    assert not bad["ok"] and not bad["serving_tier2_equals_tier"], bad
+    assert bad["serving_tier1_equals_tier"] and bad["tier2_equals_reagg_tier1"]

@@ -11,16 +11,16 @@ hive-parquet fallback (SURVEY §7: no Iceberg jar in this sandbox — the
 Scale design: `merge_upsert` is a left-anti join (existing minus updated
 keys) + union. When the *new* side is small relative to existing (the usual
 incremental case) we broadcast it, so the merge never shuffles the big
-existing table. Tier tables are partitioned by source, so a merge reads and
-rewrites only the ``source=`` partitions its batch touches.
+existing table. The pipeline's tier tables are flat, so its merges are
+whole-table (``partition_col=None``); a ``partition_col=`` merge reads and
+rewrites only the hive partitions its batch touches.
 
-Every rewrite of a hive tier table goes through ``_swap``: it stages the
-data in ``<path>.staging``, moves each live unit (a ``source=`` dir, or the
-whole table for an unscoped write) into ``<path>.old``, promotes the staged
-one and commits by renaming ``<path>.old`` away. The next swap after a
-crash rolls the table back to its pre-swap state first — fully, because
-the additive merge is not idempotent.
-"""
+Every rewrite of a parquet table goes through ``_swap``: it stages the
+data in ``<path>.staging``, moves each live unit (the whole table, or a
+``col=value`` dir of a scoped write) into ``<path>.old``, promotes the
+staged one and commits by renaming ``<path>.old`` away. The next swap
+after a crash rolls the table back to its pre-swap state first — fully,
+because the additive merge is not idempotent."""
 
 from __future__ import annotations
 
@@ -239,9 +239,9 @@ def merge_tier_additive_path(
     spark, path: str, partial: DataFrame, keys: list[str],
     partition_col: str | None = "source", touched: list | None = None,
 ) -> DataFrame | None:
-    """Additive tier merge against a parquet tier table on disk —
-    partition-scoped like ``merge_upsert_path``: only partitions present in
-    the incremental batch are read, combined, and written over."""
+    """Additive tier merge against a parquet tier table on disk, scoped
+    like ``merge_upsert_path``: the whole table with ``partition_col=None``
+    (as the pipeline merges), else the batch's partitions only."""
     return _merge_path(spark, path, partial, keys, partition_col,
                        merge_tier_additive, touched)
 

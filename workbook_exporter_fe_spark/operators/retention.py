@@ -92,9 +92,9 @@ def expire_tiers(
     FINE tier while a coarser tier still covers its time range, so no
     time range silently vanishes from the store. Enforced, not assumed.
 
-    Each expiry rewrites the filtered tier through the store's one
-    crash-safe swap (operators/merge._swap), keeping its ``source=``
-    partitions — never a row mutation, so surviving rows are
+    Each expiry rewrites the filtered tier as one flat table, its column
+    order kept, through the store's one crash-safe swap
+    (operators/merge._swap) — never a row mutation, so surviving rows are
     byte-identical by construction. At 100 TB, partition tier tables by a
     day column and this filter becomes partition DELETEs; on the
     hive-parquet backend here it is a local-filesystem table rewrite of
@@ -142,9 +142,9 @@ def expire_tiers(
         kept = apply_retention(t, policies[tier], wm=wm)
         before, after = t.count(), kept.count()
         if after < before:
-            # one whole-table swap (rolled back if interrupted); the
-            # staged copy keeps the tier's source= layout
-            _swap(path, lambda staging: kept.write.partitionBy("source").parquet(staging))
+            # one whole-table swap (rolled back if interrupted) to a flat
+            # table, a source= one of an older store included
+            _swap(path, lambda staging: kept.write.parquet(staging))
         from datetime import timedelta
 
         cutoff_ts = wm - timedelta(seconds=ttl_secs)

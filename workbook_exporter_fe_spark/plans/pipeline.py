@@ -16,19 +16,21 @@ with explicit *table* state:
 - the events stage upserts the batch into a SnapshotTable at
   ``{out}/events``, partitioned by ``day(event_ts)``: new files plus one
   equality delete of the batch's (source, doc_id) keys, so its cost
-  follows the batch, not the events history. Every tier stage writes a
-  ``source``-partitioned parquet table via a merge keyed on (source,
-  bucket_ts), scoped to the probe's touched sources — re-running a
-  completed stage is a no-op on the data. Every tier write (backfill and
-  expiry too) goes through one crash-safe swap, operators/merge._swap;
+  follows the batch, not the events history. Every tier stage merges
+  into ONE flat parquet table (``source`` last, no ``source=`` dirs)
+  keyed on (source, bucket_ts), read and swapped whole: a file or two
+  per batch, not one per source, and re-running a completed stage is a
+  no-op on the data. An older store's ``source=`` table goes flat on its
+  next write. Every tier write (backfill and expiry too) goes through
+  one crash-safe swap, operators/merge._swap;
 - a JSON-lines **manifest** records per-stage lineage + metrics (rows
   out, per-source partition rows, encode ratio, watermark position, wall
   time), one row per table-writing stage through ``_stage`` — the
   engine's equivalent of an Iceberg metadata table. Tier row counts come
-  from the written table's parquet footers on the driver, the events
-  stage's from the probe of the rows it committed; a stage's watermark
-  is the larger of the probe's and the highest one recorded for its
-  table, so no stage re-reads its table for bookkeeping.
+  from the written table's parquet footers on the driver (per source,
+  from one aggregate job), the events stage's from the probe of the rows
+  it committed; a stage's watermark is the larger of the probe's and the
+  highest one recorded for its table.
   ``_manifest/metrics`` mirrors the manifest as an append-only parquet
   table, one driver-side file per flush;
 - **resume**: a stage whose manifest entry is `done` for the same run
@@ -38,8 +40,8 @@ with explicit *table* state:
   crash after the events commit but before its manifest row re-commits
   the batch, which replaces its rows with themselves.
 
-Scale: stages communicate only through partitioned tables; the manifest is
-tiny driver-side JSON (one row per stage × source), so no collect() of data
+Scale: stages communicate only through tables; the manifest is tiny
+driver-side JSON (one row per stage × source), so no collect() of data
 ever happens. On a real cluster the manifest becomes an Iceberg table and
 the swap becomes a MERGE INTO snapshot commit.
 """
@@ -52,7 +54,6 @@ import os
 import time
 import uuid
 from dataclasses import dataclass, field
-from urllib.parse import unquote
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -135,17 +136,10 @@ def _parquet_rows(d: str) -> int:
     )
 
 
-def _partition_rows(path: str, col: str = "source") -> dict:
-    """Rows per ``col=`` partition of a hive parquet table, read from the
-    parquet footers on the driver — no Spark job, no data page. The
-    ``__HIVE_DEFAULT_PARTITION__`` dir maps to None."""
-    out = {}
-    for d in sorted(os.listdir(path)):
-        if d.startswith(col + "="):
-            v = unquote(d[len(col) + 1:])
-            key = None if v == "__HIVE_DEFAULT_PARTITION__" else v
-            out[key] = _parquet_rows(os.path.join(path, d))
-    return out
+def _source_last(df: DataFrame) -> DataFrame:
+    """``df`` with ``source`` last: every tier's column order, the one an
+    older store's ``source=`` table reads with."""
+    return df.select(*[c for c in df.columns if c != "source"], "source")
 
 
 def _parse_ts(x) -> _dt.datetime:
@@ -229,11 +223,12 @@ class TierPipeline:
         """Run one stage idempotently: skip if done, else write → log.
         ``write(out_path, keys)`` merges the stage's rows into its table
         and may return the merged table; ``read(out_path)`` reads it
-        (a hive parquet read by default). Row counts come from the
-        table's parquet footers; a stage of ``run`` also records them per
-        source. ``extra(table)`` gives fields of the row's own — in place
-        of the per-source counts, and of ``rows_out`` if it names one.
-        ``watermark``, the table's max key, is recorded when given."""
+        (a parquet read by default). Row counts come from the table's
+        parquet footers; a stage of ``run`` also records them per source,
+        from one aggregate job over the written table. ``extra(table)``
+        gives fields of the row's own — in place of the per-source
+        counts, and of ``rows_out`` if it names one. ``watermark``, the
+        table's max key, is recorded when given."""
         read = read or self.spark.read.parquet
         if self.manifest.done(run_fp, stage):
             return read(out_path)
@@ -243,10 +238,11 @@ class TierPipeline:
             result = read(out_path)
         fields = {} if extra is None else extra(result)
         if "rows_out" not in fields:
-            per_source = _partition_rows(out_path)
-            fields["rows_out"] = sum(per_source.values())
+            fields["rows_out"] = _parquet_rows(out_path)
             if extra is None and not stage.endswith("_inc"):
-                fields["partitions"] = per_source
+                # one input partition aggregates without an exchange
+                fields["partitions"] = dict(
+                    result.coalesce(1).groupBy("source").count().collect())
         if watermark is not None:
             fields["watermark"] = str(watermark)
         self.manifest.record(
@@ -258,13 +254,12 @@ class TierPipeline:
         )
         return result
 
-    def _merge(self, combine, new: DataFrame, touched: list, **kw):
-        """A stage's ``write``: ``combine`` ``new`` into the table's
-        ``touched`` source partitions."""
+    def _merge(self, combine, new: DataFrame, **kw):
+        """A stage's ``write``: ``combine`` ``new`` into the whole flat
+        table — a batch touching every source rewrites every row anyway,
+        and scoped by source it would write one file per source."""
         return lambda path, keys: combine(
-            self.spark, path, new, keys, partition_col="source",
-            touched=touched, **kw,
-        )
+            self.spark, path, _source_last(new), keys, partition_col=None, **kw)
 
     def _watermark(self, batch: dict, key: str, stages, events: DataFrame):
         """A table's max ``key`` after a merge: the batch's, or the highest
@@ -306,8 +301,8 @@ class TierPipeline:
     def _probe(self, events: DataFrame) -> dict:
         """One aggregate job over the events a stage folds for everything
         its merges need to know of them: ``rows``; the touched
-        ``sources``, a null source included (every merge takes them
-        instead of finding them itself); the max ``doc_id``, the events
+        ``sources``, a null source included (they scope what feeds the
+        coarser tiers, chunks and anomaly); the max ``doc_id``, the events
         table's watermark key; and the max 1m/1h/1d bucket, each tier's
         batch watermark."""
         row = events.agg(
@@ -373,7 +368,7 @@ class TierPipeline:
               incremental: bool) -> dict[str, DataFrame]:
         """Fold ``events`` (probed as ``batch``) into tier1 → tier2 →
         tier3 (→ the sketch tiers) → chunk segments → anomaly, one stage
-        per table, every merge scoped to the probe's touched sources.
+        per table, each a whole-table merge (``_merge``).
 
         ``incremental`` picks the tier merge (additive, else key upsert),
         the stage names (``_STAGES``) and what feeds the next tier: the
@@ -386,16 +381,14 @@ class TierPipeline:
         # looked up per call, so a wrapped merge function is the one that runs
         from workbook_exporter_fe_spark.operators import merge
 
-        touched = batch["sources"]
-        in_touched = merge.in_partitions("source", touched)
+        in_touched = merge.in_partitions("source", batch["sources"])
         tier_merge = merge.merge_tier_additive_path if incremental else merge_upsert_path
 
         def stage(table, new, combine=merge_upsert_path, grain=None,
                   keys=("source", "bucket_ts"), extra=None, **kw):
             names = _STAGES[table]
             return self._stage(
-                run_fp, names[incremental],
-                self._merge(combine, new, touched, **kw),
+                run_fp, names[incremental], self._merge(combine, new, **kw),
                 f"{self.out}/{table}", list(keys),
                 grain and self._watermark(batch, grain, names, events), extra,
             )
@@ -491,9 +484,9 @@ class TierPipeline:
         (source, day) chunk segments overlapping the window are
         re-encoded the same way. Outside the window nothing changes, and
         backfilling with identical data is a bit-exact no-op (pinned in
-        tests). Each table is rewritten whole, keeping its ``source=``
-        partitions, through the store's crash-safe swap (an interrupted
-        backfill rolls back on the next write); at 100 TB with
+        tests). Each table is rewritten whole as one flat table, its
+        column order kept, through the store's crash-safe swap (an
+        interrupted backfill rolls back on the next write); at 100 TB with
         day-partitioned tiers every window replace becomes a partition
         DELETE+INSERT instead of the table rewrite here.
 
@@ -512,14 +505,14 @@ class TierPipeline:
         def _replace_window(path: str, new_rows: DataFrame, ts_col: str,
                             a, b) -> int:
             def write(staging):
-                merged = new_rows
+                merged = _source_last(new_rows)
                 if os.path.exists(path):
                     c = F.col(ts_col).cast("timestamp")
                     keep = self.spark.read.parquet(path).filter(
                         ~((c >= F.lit(a)) & (c < F.lit(b)))
                     )
-                    merged = keep.unionByName(new_rows.select(*keep.columns))
-                merged.write.partitionBy("source").parquet(staging)
+                    merged = keep.unionByName(merged)
+                merged.write.parquet(staging)
 
             n_new = new_rows.count()
             _swap(path, write)
@@ -581,7 +574,9 @@ class TierPipeline:
         - chunks decode back to tier-1's finalized values exactly (codec
           round-trip on the stored bytes, not in-memory ones);
         - no duplicate (source, bucket_ts) keys in any tier (merge
-          idempotency held).
+          idempotency held);
+        - each published serving tier ({out}/snapshot_tiers/tierN) holds
+          exactly the rows of its tier; an unpublished tier is skipped.
         Each check is one exceptAll/groupBy job over tier-sized tables.
 
         After an ``expire_tiers`` run the tiers deliberately cover
@@ -598,6 +593,7 @@ class TierPipeline:
             decompress_chunks,
         )
         from workbook_exporter_fe_spark.operators.retention import read_cutoffs
+        from workbook_exporter_fe_spark.sources import snapshots
 
         r = self.spark.read
         t1 = r.parquet(f"{self.out}/tier1")
@@ -660,6 +656,10 @@ class TierPipeline:
                 .isEmpty()
             )
             checks[f"{name}_keys_unique"] = dups
+            served = f"{self.out}/snapshot_tiers/{name}"
+            if snapshots.current_sequence(served):
+                checks[f"serving_{name}_equals_tier"] = _equal(
+                    tier, snapshots.SnapshotTable(self.spark, served).read())
         checks["ok"] = all(checks.values())
         self.manifest.record(
             run_fp="verify", stage="verify",

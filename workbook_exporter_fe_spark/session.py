@@ -55,7 +55,8 @@ def get_spark(
         # a hive table with more than 32 partition dirs (the default
         # threshold) is listed by a Spark job on every read — a second
         # or so of scheduling for what the driver lists in milliseconds.
-        # Keep the listing of a few hundred source= dirs on the driver.
+        # The tiers are flat; a source= tier of an older store is read
+        # this way until the write that flattens it.
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         # saveAsTable (bucketed tables) must not drop spark-warehouse/
         # into whatever cwd the session was built from

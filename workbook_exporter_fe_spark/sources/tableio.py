@@ -127,7 +127,9 @@ def compact_partitions(
     spark: SparkSession, path: str, target_rows_per_file: int = 1_000_000,
     partition_col: str = "source", min_files: int = 2,
 ) -> dict[str, tuple[int, int]]:
-    """Small-file compaction for a hive-partitioned parquet tier table.
+    """Small-file compaction for a hive-partitioned parquet tier table
+    (a ``source=`` tier of an older store; the pipeline writes its tiers
+    flat, one file or two per write, and a flat table is left as is).
 
     Incremental partition-scoped merges leave each touched partition with
     one more file per merge; at 100 TB the accumulated small files dominate
@@ -148,6 +150,8 @@ def compact_partitions(
 
     prefix = f"{partition_col}="
     report: dict[str, tuple[int, int]] = {}
+    if not any(d.startswith(prefix) for d in os.listdir(path)):
+        return report
 
     def write(staging):
         for dname in sorted(os.listdir(path)):
