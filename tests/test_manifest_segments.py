@@ -219,3 +219,41 @@ def test_overwrite_large_goes_segmented(spark, tmp_path, tiny_inline):
     raw = load_manifest_raw(st.root, 1)
     assert "file_segments" in raw and len(raw["file_segments"]) == 1
     assert st.read().count() == 10
+
+
+def test_segment_cache_eviction_is_thread_safe(tmp_path, monkeypatch):
+    """Commits to different tables run on concurrent threads and read
+    segments through one process-wide cache. 16 threads loading 64
+    distinct segments through a two-entry cache, the interpreter
+    switching threads every microsecond, each get their own entries and
+    never fail an eviction."""
+    import sys
+    import threading
+
+    meta = str(tmp_path)
+    refs = [S._write_segment(meta, i, [{"path": f"f{i}", "rows": 1}])
+            for i in range(64)]
+    monkeypatch.setattr(S, "_SEG_CACHE", {})
+    monkeypatch.setattr(S, "_SEG_CACHE_MAX", 2)
+    errors: list = []
+
+    def load(k):
+        try:
+            for r in range(200):
+                i = (k * 7 + r) % len(refs)
+                assert S._load_segment(meta, refs[i]) == [{"path": f"f{i}", "rows": 1}]
+        except Exception as e:  # noqa: BLE001 - reported by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=load, args=(k,)) for k in range(16)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [] and len(S._SEG_CACHE) <= 2, errors[:3]

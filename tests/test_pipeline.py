@@ -365,8 +365,15 @@ def test_incremental_refresh_equals_full_cascade(spark, tmp_path):
     pi = decompress_chunks(inc["chunks"]).orderBy("source", "bucket_ts").collect()
     assert pf == pi
 
-    # idempotent resume: same fingerprints are no-ops
-    again = TierPipeline(spark, out_dir).run_incremental(ev.filter(~gate), run_fp="b2")
+    # idempotent resume: same fingerprints are no-ops. The replay runs
+    # its probe and a schema read of each tier and the chunks; a disk
+    # write of partials no stage reads would add two jobs
+    probe = _spark_jobs(spark, "probe", lambda: TierPipeline(
+        spark, out_dir)._probe(ev.filter(~gate)))
+    again = {}
+    descs = _spark_jobs(spark, "replay", lambda: again.update(TierPipeline(
+        spark, out_dir).run_incremental(ev.filter(~gate), run_fp="b2")))
+    assert len(descs) <= len(probe) + 4, (len(descs), len(probe))
     assert _tiers_sorted(again["tier1"]) == _tiers_sorted(inc["tier1"])
 
 
@@ -450,10 +457,12 @@ class _Crash(OSError):
 
 @contextmanager
 def _faulty_fs(monkeypatch, prefix: str, crash_at: int | None = None):
-    """Record every os.rename and error-raising shutil.rmtree on a path
-    under ``prefix``; the ``crash_at``-th one raises before it touches the
+    """Record every os.rename, os.replace and os.link (a swap's steps, a
+    snapshot commit's) and error-raising shutil.rmtree on a path under
+    ``prefix``; the ``crash_at``-th one raises before it touches the
     disk, leaving it as a process killed at that step would."""
     real_rename, real_rmtree = os.rename, shutil.rmtree
+    real_replace, real_link = os.replace, os.link
     calls: list[str] = []
 
     def step(p):
@@ -466,6 +475,14 @@ def _faulty_fs(monkeypatch, prefix: str, crash_at: int | None = None):
         step(src)
         return real_rename(src, dst, *a, **k)
 
+    def replace(src, dst, *a, **k):
+        step(dst)
+        return real_replace(src, dst, *a, **k)
+
+    def link(src, dst, *a, **k):
+        step(dst)
+        return real_link(src, dst, *a, **k)
+
     def rmtree(p, ignore_errors=False, *a, **k):
         if not ignore_errors:  # an ignoring rmtree cannot fail its caller
             step(p)
@@ -473,6 +490,8 @@ def _faulty_fs(monkeypatch, prefix: str, crash_at: int | None = None):
 
     with monkeypatch.context() as m:
         m.setattr(os, "rename", rename)
+        m.setattr(os, "replace", replace)
+        m.setattr(os, "link", link)
         m.setattr(shutil, "rmtree", rmtree)
         yield calls
 
@@ -503,19 +522,21 @@ def _snapshot(spark, root, tables):
 
 
 def _assert_recovers(spark, monkeypatch, tmp_path, pre, op, swapped, tables,
-                     steps=None):
-    """``op(root)`` makes one swap of ``root/swapped`` (and maybe more).
+                     steps=None, min_steps=3):
+    """``op(root)`` makes one swap of ``root/swapped`` (and maybe more),
+    or one snapshot commit to it.
 
     A clean run on a copy of ``pre`` gives the wanted state and the
-    swap's steps. Then, for each step, a fresh copy crashes there; the
-    next ``op`` call must roll the half-done swap back and re-run it, to
-    the same rows and partition dirs, with no .staging/.old left."""
+    swap's steps (at least ``min_steps``: a whole-table swap takes 3, a
+    commit 2). Then, for each step, a fresh copy crashes there; the next
+    ``op`` call must roll the half-done swap back and re-run it, to the
+    same rows and partition dirs, with no .staging/.old left."""
     clean = str(tmp_path / "clean")
     shutil.copytree(pre, clean)
     with _faulty_fs(monkeypatch, os.path.join(clean, swapped)) as calls:
         op(clean)
     want = _snapshot(spark, clean, tables)
-    assert want["leftovers"] == [] and len(calls) >= 3, calls
+    assert want["leftovers"] == [] and len(calls) >= min_steps, calls
     for k in steps or range(1, len(calls) + 1):
         root = str(tmp_path / f"crash{k}")
         shutil.copytree(pre, root)
@@ -656,18 +677,24 @@ def _two_batches(ev):
 
 def _spark_jobs(spark, tag, fn):
     """Run ``fn`` in a job group of its own; returns the descriptions of
-    the Spark jobs it ran."""
+    the Spark jobs it ran. Every job the SparkContext started during the
+    call must be in that group — a stage thread that dropped the caller's
+    group fails here. Job ids are contiguous, so the counts compare."""
     sc = spark.sparkContext
+    jvm = sc._jsc.sc()
     group = f"{tag}-{os.getpid()}"
+    started = jvm.dagScheduler().numTotalJobs()
     sc.setJobGroup(group, group)
     try:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    jobs = sc._jsc.sc().statusStore()
-    return [jobs.job(j).description()
-            for j in sc.statusTracker().getJobIdsForGroup(group)]
+    started = jvm.dagScheduler().numTotalJobs() - started
+    jvm.listenerBus().waitUntilEmpty()
+    ids = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(ids) == started, (len(ids), started)
+    return [jvm.statusStore().job(j).description() for j in ids]
 
 
 def _assert_rows_match_tables(spark, pipe, root, stages, run_fps,
@@ -692,10 +719,10 @@ def _assert_rows_match_tables(spark, pipe, root, stages, run_fps,
 
 
 #: jobs one run_incremental may run on the small store: it runs 22 —
-#: the batch probe, the events commit and its key extraction, then per
-#: merge its query stages and the write. A schema-inference or listing
-#: job per read, a touched-partition probe per merge or a second
-#: evaluation of the chunk encoding would pass it.
+#: the batch probe, the events commit and its key extraction, the
+#: partials' disk write, then per merge its query stages and the write.
+#: A schema-inference or listing job per read, a touched-partition probe
+#: per merge or a second evaluation of the chunk encoding would pass it.
 _BATCH_JOB_CEILING = 24
 
 
@@ -750,11 +777,12 @@ def test_incremental_batch_job_budget(spark, tmp_path, small_store,
 
 
 #: jobs one run may run over the small store's own sequences under a new
-#: fingerprint: it runs 29 — a probe of the eventized sequences, the
+#: fingerprint: it runs 30 — a probe of the eventized sequences, the
 #: events commit and its key extraction, a probe of the bounded events
-#: table, then per merge its query stages and the write, and the chunk
-#: metrics. It ran 48 with a touched-partition and a watermark job per
-#: stage, and 32 with a schema read per merge.
+#: table, then per merge its query stages, the write and, for tier1–3,
+#: the per-source row counts, and the chunk metrics. It ran 48 with a
+#: touched-partition and a watermark job per stage, and 32 with
+#: two-job probes.
 _RUN_JOB_CEILING = 35
 
 
@@ -1045,3 +1073,155 @@ def test_verify_checks_serving_store_against_tiers(spark, tmp_path,
     bad = pipe.verify()
     assert not bad["ok"] and not bad["serving_tier2_equals_tier"], bad
     assert bad["serving_tier1_equals_tier"] and bad["tier2_equals_reagg_tier1"]
+
+
+# --- the fold's stages run concurrently ------------------------------------
+
+
+def test_crash_in_concurrent_incremental_stages_recovers(spark, tmp_path,
+                                                         monkeypatch,
+                                                         small_store):
+    """run_incremental runs the events commit and tier1–3 at once, and
+    chunks once tier1 is written. A crash at each step of the tier2 swap,
+    or of the events commit, fails the batch after the stages running
+    beside it finish; the re-run completes the rest, and every table
+    equals an uninterrupted run's."""
+    pre, ev = small_store
+    batch = ev.withColumn("doc_id", F.concat(F.col("doc_id"), F.lit("-c")))
+    tables = ["events", "tier1", "tier2", "tier3", "chunks"]
+    for swapped, min_steps in (("tier2", 3), ("events", 2)):
+        _assert_recovers(
+            spark, monkeypatch, tmp_path / swapped, pre,
+            lambda root: TierPipeline(spark, root).run_incremental(batch, "b1"),
+            swapped, tables, min_steps=min_steps,
+        )
+
+
+def test_crash_in_concurrent_run_stage_recovers(spark, tmp_path, monkeypatch,
+                                                small_store):
+    """run writes tier2 → tier3 while chunks run off tier1: a crash at
+    each step of the tier3 swap is rolled back by the re-run, which
+    equals an uninterrupted run."""
+    seq = gen_sequences(spark, 900, seed=7)
+    _assert_recovers(
+        spark, monkeypatch, tmp_path, small_store[0],
+        lambda root: TierPipeline(spark, root).run(seq, "more"),
+        "tier3", ["events", "tier1", "tier2", "tier3", "chunks"],
+    )
+
+
+def test_stage_failure_lets_siblings_finish(spark, tmp_path, small_store,
+                                            monkeypatch):
+    """A failing stage raises its error only after the stages running
+    beside it have finished and recorded themselves; no stage that waits
+    for the failed one starts, and no stage thread outlives the call.
+    Here the batch's partials fail: the events commit beside them
+    completes, and neither the tiers nor the chunks run."""
+    import threading
+
+    pre, ev = small_store
+    root = str(tmp_path / "store")
+    shutil.copytree(pre, root)
+    batch = ev.withColumn("doc_id", F.concat(F.col("doc_id"), F.lit("-f")))
+    real = pl.rollup_tier1
+
+    def no_partials(*a, **k):
+        # the partials' disk write fails; tier1–3 and chunks read them
+        return real(*a, **k).withColumn("cnt", F.raise_error(F.lit("injected")))
+
+    before = threading.active_count()
+    monkeypatch.setattr(pl, "rollup_tier1", no_partials)
+    pipe = TierPipeline(spark, root)
+    with pytest.raises(Exception, match="injected"):
+        pipe.run_incremental(batch, "b1")
+    assert threading.active_count() == before
+    done = {e["stage"] for e in pipe.manifest.entries if e["run_fp"] == "b1"}
+    assert done == {"t0_events_inc"}, done
+
+
+def test_manifest_record_is_thread_safe(tmp_path):
+    """Stages record from their own threads: 8 threads × 50 rows, the
+    interpreter switching threads every microsecond, leave 400 whole
+    JSON lines in the file and 400 entries in memory."""
+    import sys
+    import threading
+
+    m = pl.Manifest(str(tmp_path / "_manifest" / "manifest.jsonl"))
+
+    def record(t):
+        for i in range(50):
+            m.record(run_fp=f"t{t}", stage=f"s{i}", status="done",
+                     partitions={f"src-{k}": k for k in range(20)})
+
+    threads = [threading.Thread(target=record, args=(t,)) for t in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    with open(m.path) as f:
+        rows = [json.loads(line) for line in f]
+    assert len(rows) == len(m.entries) == 400
+    assert sorted((r["run_fp"], r["stage"]) for r in rows) == sorted(
+        (e["run_fp"], e["stage"]) for e in m.entries)
+    assert len(pl.Manifest(m.path).entries) == 400
+
+
+def test_concurrent_publish_over_segmented_manifests(spark, tmp_path,
+                                                     small_store, monkeypatch):
+    """The scoped publish commits its tiers from concurrent threads. On
+    serving tiers with more files than a manifest inlines (so every
+    commit reads file-list segments) and a one-entry segment cache
+    (so every read evicts), the served tiers still equal the hive tiers
+    and verify() holds."""
+    from workbook_exporter_fe_spark.sources import snapshots as S
+
+    pre, ev = small_store
+    root = str(tmp_path / "store")
+    shutil.copytree(pre, root)
+    monkeypatch.setattr(S, "MANIFEST_INLINE_MAX", 4)
+    monkeypatch.setattr(S, "_SEG_CACHE_MAX", 1)
+    pl.publish_snapshot_tiers(spark, root, spec=("day(bucket_ts)", "source"))
+    for t in ("tier1", "tier2", "tier3"):
+        raw = S.load_manifest_raw(f"{root}/snapshot_tiers/{t}",
+                                  S.current_sequence(f"{root}/snapshot_tiers/{t}"))
+        assert raw.get("file_segments"), t
+    b0, b1 = _two_batches(ev)
+    for i, batch in enumerate((b0, b1)):
+        TierPipeline(spark, root).run_incremental(batch, f"b{i}")
+        info = pl.publish_snapshot_tiers(spark, root, changed=batch)
+        assert set(info) == {"tier1", "tier2", "tier3"}
+        assert all(v["files"] > S.MANIFEST_INLINE_MAX for v in info.values())
+    checks = TierPipeline(spark, root).verify()
+    assert checks["ok"], checks
+
+
+@pytest.mark.parametrize("op", ["expire", "backfill"])
+def test_repair_republishes_serving_store(spark, tmp_path, small_store, op):
+    """expire_tiers and backfill rewrite the tiers outside the fold; a
+    published serving store is republished once their swaps commit, so
+    verify() still holds (at the parent commit the served tiers kept the
+    expired or replaced rows)."""
+    from workbook_exporter_fe_spark.operators.retention import expire_tiers
+
+    pre, ev = small_store
+    root = str(tmp_path / "store")
+    shutil.copytree(pre, root)
+    pipe = TierPipeline(spark, root)
+    pl.publish_snapshot_tiers(spark, root)
+    assert pipe.verify()["ok"]
+    rows = spark.read.parquet(f"{root}/tier1").count()
+    if op == "expire":
+        expire_tiers(spark, root, {"tier1": "interval 1 minute"})
+        assert spark.read.parquet(f"{root}/tier1").count() < rows
+    else:
+        lo, hi = ev.agg(F.min("event_ts"), F.max("event_ts")).first()
+        pipe.backfill(ev.withColumn("v", F.col("v") * 2), lo,
+                      lo + (hi - lo) / 2, "bf")
+    checks = pipe.verify()
+    assert checks["ok"] and checks["serving_tier1_equals_tier"], checks

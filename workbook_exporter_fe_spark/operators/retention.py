@@ -101,6 +101,10 @@ def expire_tiers(
     the small tier relations (object stores need the table-format DELETE
     path instead).
 
+    A published serving store (``{out_dir}/snapshot_tiers``) is then
+    republished in full (plans/pipeline.republish), so it serves the
+    expired tiers, not the rows they dropped.
+
     Every expiry also records its per-tier cutoff in
     ``{out_dir}/_manifest/retention.json`` (max-merged across runs) so
     ``TierPipeline.verify()`` can scope its cross-tier equality and chunk
@@ -155,6 +159,11 @@ def expire_tiers(
             "dropped": before - after,
             "cutoff": cutoffs[tier],
         }
+    # every time, not only after a swap: a re-run after a crash between
+    # the swaps and the publish finds nothing left to drop
+    from workbook_exporter_fe_spark.plans.pipeline import republish
+
+    republish(spark, out_dir)
     _record_cutoffs(out_dir, cutoffs)
     return stats
 

@@ -6,13 +6,22 @@ with explicit *table* state:
 
 - ``run`` (from sequences) and ``run_incremental`` (from a tier-0 event
   batch) are thin entry points over one fold, ``TierPipeline._fold``.
-  Each upserts its events stage, bounds late events and probes the rows
-  it folds with one aggregate job (``_probe``: row count, touched
-  sources, watermarks). The fold runs tier1 → tier2 → tier3 → chunk
-  segments → anomaly in one stage loop. The entry points differ only in
+  Each bounds late events and probes the rows it folds with one
+  aggregate job (``_probe``: row count, touched sources, watermarks).
+  The fold's stages run as a DAG on driver threads (``_run_stages``;
+  Spark runs the jobs of separate threads concurrently): a stage starts
+  once the tables it reads are written. The entry points differ only in
   the merge (key upsert for ``run``, additive for ``run_incremental``),
-  the stage names, and what feeds the next tier (the merged tier below
-  for ``run``, the batch's partials for ``run_incremental``);
+  the stage names, and what feeds the next tier, which sets the edges:
+  - ``run_incremental``: the events commit waits for nothing; every
+    tier folds the batch's partials, so tier1, tier2 and tier3 wait only
+    for their one disk write; chunks and anomaly wait for tier1;
+  - ``run``: the events upsert, then the probe of the events table, then
+    tier1; after it the chain tier2 → tier3 (each folds the merged tier
+    below) runs beside chunks and anomaly, and the sketch chain runs
+    beside the tier chain.
+  ``publish_snapshot_tiers`` probes the batch's partition tuples once
+  and commits each tier in its own thread;
 - the events stage upserts the batch into a SnapshotTable at
   ``{out}/events``, partitioned by ``day(event_ts)``: new files plus one
   equality delete of the batch's (source, doc_id) keys, so its cost
@@ -34,7 +43,9 @@ with explicit *table* state:
   ``_manifest/metrics`` mirrors the manifest as an append-only parquet
   table, one driver-side file per flush;
 - **resume**: a stage whose manifest entry is `done` for the same run
-  fingerprint is skipped. A crash mid-swap leaves ``<table>.old``; the
+  fingerprint is skipped; stages run concurrently, so a crash may leave
+  any subset of them done, and the re-run completes the rest. A crash
+  mid-swap leaves ``<table>.old``; the
   stage's re-run first rolls the table back to its pre-swap state, so
   re-running converges, additive (non-idempotent) merges included. A
   crash after the events commit but before its manifest row re-commits
@@ -51,13 +62,16 @@ from __future__ import annotations
 import datetime as _dt
 import json
 import os
+import threading
 import time
 import uuid
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from workbook_exporter_fe_spark.functions.spark_codecs import compress_tier
 from workbook_exporter_fe_spark.operators.eventize import eventize
@@ -75,6 +89,9 @@ class Manifest:
 
     path: str
     entries: list[dict] = field(default_factory=list)
+    # stages of one fold record from their own threads
+    _lock: threading.Lock = field(default_factory=threading.Lock, repr=False,
+                                  compare=False)
 
     def __post_init__(self):
         if os.path.exists(self.path):
@@ -108,10 +125,12 @@ class Manifest:
 
     def record(self, **entry) -> None:
         entry.setdefault("ts", time.time())
-        self.entries.append(entry)
-        os.makedirs(os.path.dirname(self.path), exist_ok=True)
-        with open(self.path, "a") as f:
-            f.write(json.dumps(entry, default=str) + "\n")
+        line = json.dumps(entry, default=str) + "\n"
+        with self._lock:
+            self.entries.append(entry)
+            os.makedirs(os.path.dirname(self.path), exist_ok=True)
+            with open(self.path, "a") as f:
+                f.write(line)
 
 
 _PY_EPOCH = _dt.datetime(1970, 1, 1)
@@ -196,6 +215,42 @@ def _chunk_metrics(chunks: DataFrame) -> dict:
         "points": pts,
         "encode_ratio": round(enc / (16.0 * pts), 4) if pts else None,
     }
+
+
+def _run_stages(spark: SparkSession, stages: dict) -> dict:
+    """Run ``stages`` (name → (the stages it waits for, ``fn(done)``)) on
+    driver threads, one per stage, each started as soon as the stages it
+    waits for have returned; ``done`` maps each finished stage to its
+    result. Returns every result, in the order of ``stages``.
+
+    Spark runs jobs submitted from separate threads concurrently. Each
+    thread starts with its own copy of the caller's local properties and
+    tags (``inheritable_thread_target``), so the caller's job group
+    covers every job. When a stage fails, the running ones finish, none
+    starts after it, and the first error is raised; no thread outlives
+    the call."""
+    done: dict = {}
+    waiting, running = dict(stages), {}
+    error = None
+    with ThreadPoolExecutor(max_workers=max(len(stages), 1)) as pool:
+        while True:
+            for name, (after, fn) in list(waiting.items()):
+                if error is None and all(a in done for a in after):
+                    del waiting[name]
+                    target = inheritable_thread_target(spark)(fn)
+                    running[pool.submit(target, done)] = name
+            if not running:
+                break
+            finished, _ = wait(running, return_when=FIRST_COMPLETED)
+            for f in finished:
+                name = running.pop(f)
+                try:
+                    done[name] = f.result()
+                except BaseException as e:  # noqa: BLE001 - re-raised below
+                    error = error or e
+    if error is not None:
+        raise error
+    return {name: done[name] for name in stages}
 
 
 class TierPipeline:
@@ -304,8 +359,10 @@ class TierPipeline:
         ``sources``, a null source included (they scope what feeds the
         coarser tiers, chunks and anomaly); the max ``doc_id``, the events
         table's watermark key; and the max 1m/1h/1d bucket, each tier's
-        batch watermark."""
-        row = events.agg(
+        batch watermark. The events are read as one input partition: a
+        single-partition aggregate needs no exchange, so the probe is one
+        job."""
+        row = events.coalesce(1).agg(
             F.count("*").alias("rows"),
             # a struct keeps the null source that collect_set would drop
             F.collect_set(F.struct("source")).alias("sources"),
@@ -366,18 +423,31 @@ class TierPipeline:
 
     def _fold(self, run_fp: str, events: DataFrame, batch: dict,
               incremental: bool) -> dict[str, DataFrame]:
-        """Fold ``events`` (probed as ``batch``) into tier1 → tier2 →
-        tier3 (→ the sketch tiers) → chunk segments → anomaly, one stage
-        per table, each a whole-table merge (``_merge``).
+        """Fold ``events`` (probed as ``batch``) into tier1–3 (and the
+        sketch tiers), the chunk segments and anomaly, one stage per
+        table, each a whole-table merge (``_merge``). The stages run as a
+        DAG on driver threads (``_run_stages``): each starts once the
+        tables it reads are written.
 
         ``incremental`` picks the tier merge (additive, else key upsert),
-        the stage names (``_STAGES``) and what feeds the next tier: the
-        batch's partials (re-aggregating partials is decomposable), else
-        the merged tier below, whose rows from earlier runs the bounded
-        events may no longer produce. Chunks and anomaly are re-derived
-        from the merged tier-1 of the touched sources; an incremental fold
-        re-encodes only the (source, day) segments its batch touched,
-        reading the partials from disk-persisted blocks."""
+        the stage names (``_STAGES``) and the edges:
+
+        - ``run_incremental``: the events commit is a stage of the fold
+          and waits for nothing. Every tier folds the batch's partials
+          (re-aggregating partials is decomposable), so tier1, tier2 and
+          tier3 wait only for the stage that writes the partials to disk
+          once (none on a replay whose readers are all done). Chunks and
+          anomaly wait for tier1; chunks re-encode only the (source, day)
+          segments the batch touched;
+        - ``run``: each coarser tier folds the merged tier below, whose
+          rows from earlier runs the bounded events may no longer
+          produce: tier1 → tier2 → tier3, with the sketch chain sketch1 →
+          sketch2 → sketch3 beside it. Chunks and anomaly wait for tier1
+          and re-derive the touched sources from it.
+
+        Every stage is still one swap or commit plus one manifest row, so
+        a crash leaves any subset of them done and the re-run completes
+        the rest."""
         # looked up per call, so a wrapped merge function is the one that runs
         from workbook_exporter_fe_spark.operators import merge
 
@@ -393,7 +463,14 @@ class TierPipeline:
                 grain and self._watermark(batch, grain, names, events), extra,
             )
 
-        out: dict[str, DataFrame] = {}
+        def tier_stage(table, grain, feed):
+            return lambda done: stage(table, feed(done), tier_merge, grain)
+
+        def reagg_feed(reagg, grain, below, feed):
+            if incremental:
+                return lambda done: reagg(feed(done), grain)
+            return lambda done: reagg(done[below].filter(in_touched), grain)
+
         partial = rollup_tier1(events, salt_buckets=self.salt_buckets)
         families = [("tier", partial, reaggregate)]
         if self.with_sketches:
@@ -406,18 +483,34 @@ class TierPipeline:
             )
 
             families.append(("sketch", sketch_tier1(events), sketch_reaggregate))
+        # stage name -> (the stages whose tables it reads, fn(done))
+        stages: dict = {}
         if incremental:
-            partial.persist(StorageLevel.DISK_ONLY)
-        try:
-            for family, new, reagg in families:
-                for i, grain in enumerate(_GRAINS, 1):
-                    if i > 1:
-                        new = reagg(below, grain)
-                    table = f"{family}{i}"
-                    out[table] = merged = stage(table, new, tier_merge, grain)
-                    below = new if incremental else merged.filter(in_touched)
+            stages["events"] = ((), lambda done: self._upsert_events(
+                run_fp, True, events, batch))
+            readers = [_STAGES[t][1] for t in ("tier1", "tier2", "tier3", "chunks")]
+            if not all(self.manifest.done(run_fp, r) for r in readers):
+                # the partials feed tier1–3 and the chunk segments, so
+                # they are written to disk once, before the tiers read
+                # them: a query that finds them unwritten runs a job to
+                # write them itself, and concurrent tiers would each run one
+                partial.persist(StorageLevel.DISK_ONLY)
+                stages["partial"] = ((), lambda done: partial.write.format(
+                    "noop").mode("overwrite").save())
+        for family, first, reagg in families:
+            feed = lambda done, first=first: first  # noqa: E731
+            after = ("partial",) if "partial" in stages else ()
+            for i, grain in enumerate(_GRAINS, 1):
+                table = f"{family}{i}"
+                if i > 1:
+                    below = f"{family}{i - 1}"
+                    feed = reagg_feed(reagg, grain, below, feed)
+                    if not incremental:
+                        after = (below,)
+                stages[table] = (after, tier_stage(table, grain, feed))
 
-            t1 = segments = out["tier1"].filter(in_touched)
+        def chunks(done):
+            t1 = segments = done["tier1"].filter(in_touched)
             # the (source, day) segments to re-encode; they are also the
             # keys the chunk merge replaces, so the encoding runs once
             seg = F.date_trunc("day", "bucket_ts").alias("segment_start")
@@ -429,15 +522,14 @@ class TierPipeline:
                 segments = t1.withColumn("segment_start", seg).join(
                     F.broadcast(affected), ["source", "segment_start"]
                 ).drop("segment_start")
-            out["chunks"] = stage(
+            return stage(
                 "chunks", compress_tier(segments),
                 keys=("source", "segment_start"),
                 extra=None if incremental else _chunk_metrics,
                 replaced=affected,
             )
-        finally:
-            partial.unpersist()
 
+        stages["chunks"] = (("tier1",), chunks)
         if self.with_anomaly:
             # Rolling z-score outlier tier beside tier-1 (operators/rates).
             # Its trailing 30-row frames are NOT additive, so it is
@@ -445,14 +537,22 @@ class TierPipeline:
             # tier-sized input, one window pass.
             from workbook_exporter_fe_spark.operators.rates import anomaly_zscore
 
-            out["anomaly1"] = stage(
+            stages["anomaly1"] = (("tier1",), lambda done: stage(
                 "anomaly1",
                 anomaly_zscore(
-                    t1.select("source", "bucket_ts", "avg_v"), n=30, threshold=3.0
+                    done["tier1"].filter(in_touched).select(
+                        "source", "bucket_ts", "avg_v"),
+                    n=30, threshold=3.0,
                 ),
                 grain=None if incremental else "1m",
-            )
+            ))
+
+        try:
+            out = _run_stages(self.spark, stages)
+        finally:
+            partial.unpersist()
         self._write_metrics_table()
+        out.pop("partial", None)
         return out
 
     def run(self, sequences: DataFrame, run_fp: str) -> dict[str, DataFrame]:
@@ -488,7 +588,8 @@ class TierPipeline:
         column order kept, through the store's crash-safe swap (an
         interrupted backfill rolls back on the next write); at 100 TB with
         day-partitioned tiers every window replace becomes a partition
-        DELETE+INSERT instead of the table rewrite here.
+        DELETE+INSERT instead of the table rewrite here. A published
+        serving store is then republished in full (``republish``).
 
         ``start``/``end``: ISO strings or datetimes, inclusive/exclusive.
         Returns per-table replaced-row counts for the manifest.
@@ -549,6 +650,7 @@ class TierPipeline:
                 chunks_path, ch_slice, "segment_start", lo_d, hi_d
             )
 
+        republish(self.spark, self.out)
         self.manifest.record(
             run_fp=run_fp,
             stage="backfill",
@@ -694,8 +796,7 @@ class TierPipeline:
                 "refresh would leave them stale"
             )
         events, batch = self._bound(run_fp, events)
-        out = {"events": self._upsert_events(run_fp, True, events, batch)}
-        return {**out, **self._fold(run_fp, events, batch, True)}
+        return self._fold(run_fp, events, batch, True)
 
     def run_from_snapshots(self, table) -> dict[str, DataFrame] | None:
         """Catch the tiers up to a SnapshotTable of tier-0 events
@@ -784,6 +885,17 @@ class TierPipeline:
         os.rename(tmp, os.path.join(path, name))
 
 
+def republish(spark: SparkSession, out: str) -> dict:
+    """Full publish of each tier the serving store already holds — after
+    a write outside the fold (``backfill``, ``expire_tiers``) rewrote
+    the tiers, so the store serves what they now hold."""
+    from workbook_exporter_fe_spark.sources.snapshots import current_sequence
+
+    served = tuple(t for t in ("tier1", "tier2", "tier3")
+                   if current_sequence(f"{out}/snapshot_tiers/{t}"))
+    return publish_snapshot_tiers(spark, out, served) if served else {}
+
+
 def publish_snapshot_tiers(
     spark: SparkSession,
     out: str,
@@ -830,6 +942,10 @@ def publish_snapshot_tiers(
     the coarser tiers' floored buckets (the proxies carry raw event
     times), so it forces a full republish. Tuples match null-safely, so
     a batch touching the null-source partition republishes it.
+
+    The tiers' commits share no table, so after the one tuple probe on
+    the calling thread each tier commits in a thread of its own
+    (``_run_stages``, no edges); the commits' Spark jobs overlap.
     """
     import functools
 
@@ -852,47 +968,16 @@ def publish_snapshot_tiers(
             F.col("source"),
             F.col(ts_col).cast("timestamp").alias("bucket_ts"),
         )
-    tuples_of: dict = {}  # the batch's tuples, one probe job per spec
-    info: dict = {}
-    for name in tier_names:
-        src = f"{out}/{name}"
-        if not os.path.exists(src):
-            continue
-        root = f"{out}/snapshot_tiers/{name}"
-        table = SnapshotTable(spark, root)
-        seq = table.current_sequence()
-        if seq == 0:
-            table.set_properties(**{"partition.spec": list(spec)})
-        fields = parse_spec(
-            list(table.properties().get("partition.spec") or [])
+
+    def overwrite(table, root, src):
+        seq = table.commit(
+            spark.read.parquet(src), mode="overwrite",
+            summary={"published_from": src},
         )
-        scoped = (
-            proxy is not None
-            and seq > 0
-            and fields
-            and all(f.transform in ("day", "month")
-                    for f in fields if f.source == "bucket_ts")
-        )
-        if not scoped:
-            seq = table.commit(
-                spark.read.parquet(src), mode="overwrite",
-                summary={"published_from": src},
-            )
-            info[name] = {
-                "root": root,
-                "sequence": seq,
-                "files": len(table.snapshot()["files"]),
-            }
-            continue
-        key = tuple(fields)
-        if key not in tuples_of:
-            # one task dedupes the batch's tuples: a single input
-            # partition needs no exchange, so the probe is one job
-            tuples_of[key] = [
-                tuple(r) for r in proxy.select(*partition_columns(proxy, fields))
-                .coalesce(1).distinct().collect()
-            ]
-        tuples = tuples_of[key]
+        return {"root": root, "sequence": seq,
+                "files": len(table.snapshot()["files"])}
+
+    def scoped(table, root, src, seq, fields, tuples):
         rows = spark.read.schema(
             StructType.fromJson(load_manifest_raw(root, seq)["schema"])
         ).parquet(src)
@@ -912,11 +997,47 @@ def publish_snapshot_tiers(
             rows.filter(match), summary={"published_from": src},
             partitions=tuples,
         )
-        info[name] = {
+        return {
             "root": root,
             "sequence": rep["sequence"],
             "files": len(table.snapshot()["files"]),
             "partitions_replaced": rep["partitions"],
             "files_replaced": rep["files_replaced"],
         }
-    return info
+
+    tuples_of: dict = {}  # the batch's tuples, one probe job per spec
+    commits: dict = {}  # tier -> its commit
+    for name in tier_names:
+        src = f"{out}/{name}"
+        if not os.path.exists(src):
+            continue
+        root = f"{out}/snapshot_tiers/{name}"
+        table = SnapshotTable(spark, root)
+        seq = table.current_sequence()
+        if seq == 0:
+            table.set_properties(**{"partition.spec": list(spec)})
+        fields = parse_spec(
+            list(table.properties().get("partition.spec") or [])
+        )
+        if not (
+            proxy is not None
+            and seq > 0
+            and fields
+            and all(f.transform in ("day", "month")
+                    for f in fields if f.source == "bucket_ts")
+        ):
+            commits[name] = functools.partial(overwrite, table, root, src)
+            continue
+        key = tuple(fields)
+        if key not in tuples_of:
+            # one task dedupes the batch's tuples: a single input
+            # partition needs no exchange, so the probe is one job
+            tuples_of[key] = [
+                tuple(r) for r in proxy.select(*partition_columns(proxy, fields))
+                .coalesce(1).distinct().collect()
+            ]
+        commits[name] = functools.partial(
+            scoped, table, root, src, seq, fields, tuples_of[key])
+    return _run_stages(spark, {
+        name: ((), lambda _, fn=fn: fn()) for name, fn in commits.items()
+    })

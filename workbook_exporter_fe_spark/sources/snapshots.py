@@ -73,6 +73,7 @@ import functools
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
 
@@ -237,6 +238,9 @@ MANIFEST_INLINE_MAX = 64
 
 _SEG_CACHE: "dict[str, list]" = {}
 _SEG_CACHE_MAX = 128
+# commits to different tables run on concurrent threads (a publish's
+# tiers); two evictions racing for the same oldest key would raise
+_SEG_CACHE_LOCK = threading.Lock()
 
 
 def _load_segment(meta: str, ref: dict) -> list[dict]:
@@ -247,9 +251,10 @@ def _load_segment(meta: str, ref: dict) -> list[dict]:
         return hit
     with open(path) as f:
         entries = json.load(f)["entries"]
-    if len(_SEG_CACHE) >= _SEG_CACHE_MAX:
-        _SEG_CACHE.pop(next(iter(_SEG_CACHE)))
-    _SEG_CACHE[key] = entries
+    with _SEG_CACHE_LOCK:
+        if len(_SEG_CACHE) >= _SEG_CACHE_MAX:
+            _SEG_CACHE.pop(next(iter(_SEG_CACHE)))
+        _SEG_CACHE[key] = entries
     return entries
 
 
