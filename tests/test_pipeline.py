@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 from contextlib import contextmanager
 
@@ -366,14 +367,15 @@ def test_incremental_refresh_equals_full_cascade(spark, tmp_path):
     assert pf == pi
 
     # idempotent resume: same fingerprints are no-ops. The replay runs
-    # its probe and a schema read of each tier and the chunks; a disk
-    # write of partials no stage reads would add two jobs
+    # only its probe: done tables are read with their footers' schema, and
+    # a disk write of partials no stage reads, a schema-inference job per
+    # table or an encode before the chunk stage's done check would add jobs
     probe = _spark_jobs(spark, "probe", lambda: TierPipeline(
         spark, out_dir)._probe(ev.filter(~gate)))
     again = {}
     descs = _spark_jobs(spark, "replay", lambda: again.update(TierPipeline(
         spark, out_dir).run_incremental(ev.filter(~gate), run_fp="b2")))
-    assert len(descs) <= len(probe) + 4, (len(descs), len(probe))
+    assert len(descs) <= len(probe), (len(descs), len(probe))
     assert _tiers_sorted(again["tier1"]) == _tiers_sorted(inc["tier1"])
 
 
@@ -697,6 +699,25 @@ def _spark_jobs(spark, tag, fn):
     return [jvm.statusStore().job(j).description() for j in ids]
 
 
+#: physical-plan nodes that run Python code on the executors
+_PYTHON_NODE = re.compile(r"\w*(?:Python|InPandas|InArrow)\w*")
+
+
+def _python_nodes(spark, tag):
+    """The Python-running nodes in the physical plans of every SQL
+    execution that ran a job of ``_spark_jobs``' group ``tag``."""
+    sc = spark.sparkContext
+    ids = set(sc.statusTracker().getJobIdsForGroup(f"{tag}-{os.getpid()}"))
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    found = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        jobs = {int(j) for j in e.jobs().keys().mkString(",").split(",") if j}
+        if jobs & ids:
+            found += _PYTHON_NODE.findall(e.physicalPlanDescription())
+    return found
+
+
 def _assert_rows_match_tables(spark, pipe, root, stages, run_fps,
                               events_rows=None):
     """Each of ``stages`` (stage, table, watermark column) has one manifest
@@ -720,37 +741,38 @@ def _assert_rows_match_tables(spark, pipe, root, stages, run_fps,
 
 #: jobs one run_incremental may run on the small store: it runs 22 —
 #: the batch probe, the events commit and its key extraction, the
-#: partials' disk write, then per merge its query stages and the write.
-#: A schema-inference or listing job per read, a touched-partition probe
-#: per merge or a second evaluation of the chunk encoding would pass it.
+#: partials' disk write, the collect of the chunk segments' tier-1 rows,
+#: then per merge its query stages and the write. A schema-inference or
+#: listing job per read or a touched-partition probe per merge would
+#: pass it.
 _BATCH_JOB_CEILING = 24
 
 
 def test_incremental_batch_job_budget(spark, tmp_path, small_store,
                                       monkeypatch):
     """run_incremental works out what a batch touches once: it runs no
-    file-listing job and at most a pinned number of jobs, evaluates the
-    chunk encoding once, and leaves one file in each tier and at most two
-    in chunks, not one per source. After each of two batches (one behind
-    the store's frontier, one past it) every stage's manifest row still
-    equals count() and max() of its table; the events stage records the
-    rows its batch committed, and the events table's live rows are the
-    base docs' and every batch's."""
-    from workbook_exporter_fe_spark.operators import merge
+    file-listing job and at most a pinned number of jobs, runs no Python
+    code on the executors (the chunk encoding runs once, on the driver),
+    and leaves one file in each tier and at most two in chunks, not one
+    per source. After each of two batches (one behind the store's
+    frontier, one past it) every stage's manifest row still equals
+    count() and max() of its table; the events stage records the rows
+    its batch committed, and the events table's live rows are the base
+    docs' and every batch's."""
+    from workbook_exporter_fe_spark.functions import spark_codecs
 
     pre, ev = small_store
     root = str(tmp_path / "store")
     shutil.copytree(pre, root)
     assert ev.select("source").distinct().count() > 32
-    plans = []
-    real = merge.merge_upsert
+    encodes = []
+    real = spark_codecs.encode_segments
 
-    def spy(existing, new, keys, **kw):
-        out = real(existing, new, keys, **kw)
-        plans.append(out._jdf.queryExecution().optimizedPlan().toString())
-        return out
+    def spy(pdf, *a, **k):
+        encodes.append(len(pdf))
+        return real(pdf, *a, **k)
 
-    monkeypatch.setattr(merge, "merge_upsert", spy)
+    monkeypatch.setattr(spark_codecs, "encode_segments", spy)
     live = ev.count()
     for i, batch in enumerate(_two_batches(ev)):
         pipe = TierPipeline(spark, root)
@@ -759,8 +781,8 @@ def test_incremental_batch_job_budget(spark, tmp_path, small_store,
         assert not [d.get() for d in descs
                     if d.isDefined() and d.get().startswith("Listing")]
         assert 0 < len(descs) <= _BATCH_JOB_CEILING, len(descs)
-        # the chunk merge is the batch's one key upsert
-        assert [p.count("FlatMapGroupsInPandas") for p in plans] == [1] * (i + 1)
+        assert _python_nodes(spark, f"budget-{i}") == []
+        assert len(encodes) == i + 1 and encodes[-1] > 0, encodes
         # chunks: the kept rows and the re-encoded segments, two tasks
         files = [len(_flat(root, t)) for t in ("tier1", "tier2", "tier3", "chunks")]
         assert files[:3] == [1, 1, 1] and 1 <= files[3] <= 2, files
@@ -774,6 +796,38 @@ def test_incremental_batch_job_budget(spark, tmp_path, small_store,
             ("compress_inc", "chunks", None),
         ), [f"b{k}" for k in range(i + 1)], events_rows=rows)
         assert _table(spark, root, "events").count() == live
+
+
+def test_stage_jobs_carry_the_stage_name(spark, tmp_path, small_store):
+    """Every Spark job run_incremental runs inside a stage is described by
+    that stage's name: the manifest's for a table-writing stage, the
+    fold's for the partials' disk write. Only the batch probe runs
+    outside every stage, and it and the caller keep the caller's
+    description. A publish's commits are described ``publish_<tier>``."""
+    pre, ev = small_store
+    root = str(tmp_path / "store")
+    shutil.copytree(pre, root)
+    batch = _two_batches(ev)[1]
+    sc = spark.sparkContext
+    after = []
+
+    def run(fn):
+        fn()
+        after.append(sc.getLocalProperty("spark.job.description"))
+
+    descs = _spark_jobs(spark, "named", lambda: run(
+        lambda: TierPipeline(spark, root).run_incremental(batch, "b1")))
+    group = f"named-{os.getpid()}"
+    names = [d.get() for d in descs]
+    assert names.count(group) == 1 and after == [group], (names, after)
+    assert set(names) - {group} == {
+        "t0_events_inc", "partial", "tier1_inc", "tier2_inc", "tier3_inc",
+        "compress_inc"}, names
+    descs = _spark_jobs(spark, "named-publish", lambda: run(
+        lambda: pl.publish_snapshot_tiers(spark, root)))
+    assert {d.get() for d in descs} == {
+        "publish_tier1", "publish_tier2", "publish_tier3"}, descs
+    assert after[-1] == f"named-publish-{os.getpid()}"
 
 
 #: jobs one run may run over the small store's own sequences under a new

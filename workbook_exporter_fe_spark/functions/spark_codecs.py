@@ -3,20 +3,31 @@
 Tier rows are compressed per (source, segment) group — segment = day of
 bucket_ts — into chunk rows
 ``(source, segment_start, n_points, codec_version, ts_payload, v_payload)``
-(FIXTURES.md F3). The group boundary is the Arrow batch boundary: each
-group's timestamps+values arrive as contiguous numpy arrays inside
-``applyInPandas`` and the codec runs vectorized over the whole segment.
+(FIXTURES.md F3). One numpy kernel, ``encode_segment``, encodes a group's
+timestamps+values vectorized over the whole segment, and runs where the
+input's size puts it (``compress_tier``):
+
+- on the driver, when the tier rows fit one Arrow batch
+  (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, 10,000 by
+  default: what one pandas-UDF call receives). A collect capped one row
+  past it tells; the rows then travel to the driver as one batch, and no
+  Python worker starts. A session's first Python worker costs seconds,
+  far more than encoding a batch's few hundred touched rows;
+- on the executors otherwise, grouped by (source, segment) through
+  ``applyInPandas``: the group boundary is the Arrow batch boundary.
 
 Scale design: grouping key (source, segment) bounds chunk size (one day of
 1m buckets = 1440 points), so executor memory per group is constant; the
 shuffle that forms groups is the only shuffle and it is keyed the same way
 as the tier table's layout, so with a source-partitioned tier table the
-exchange is cheap. Decompression uses the same grouped shape.
+exchange is cheap. The driver path is bounded by the same cap, so driver
+memory is too. Decompression uses the same grouped shape.
 """
 
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -53,31 +64,94 @@ CHUNK_SCHEMA = (
 )
 
 
+def encode_segment(pdf: pd.DataFrame, value_col: str,
+                   codec_version: int) -> tuple[int, bytes, bytes]:
+    """One (source, segment) group's rows -> ``(n_points, ts_payload,
+    v_payload)``: the numpy kernel of both encode paths. ``bucket_ts``
+    holds the session's wall clock as ``datetime64[ns]``, the form a
+    pandas UDF receives it in."""
+    enc_ts, enc_v = _ENCODERS[codec_version]
+    pdf = pdf.sort_values("bucket_ts")
+    ts = (pdf["bucket_ts"].astype("int64") // 1_000_000_000).to_numpy()
+    vals = pdf[value_col].to_numpy(dtype="float64")
+    return len(ts), enc_ts(ts), enc_v(vals)
+
+
+def encode_segments(pdf: pd.DataFrame, value_col: str,
+                    codec_version: int) -> pa.Table:
+    """Chunk rows of every (source, segment) group of ``pdf``, in key
+    order, ``segment_start`` as the session's wall clock. A null source
+    is a group of its own, as ``applyInPandas`` keeps it."""
+    rows = []
+    for _, g in pdf.groupby(["source", "segment_start"], dropna=False):
+        head = g.iloc[0]
+        rows.append((head["source"], head["segment_start"],
+                     *encode_segment(g, value_col, codec_version)))
+    cols = list(zip(*rows)) or [()] * 5
+    return pa.table({
+        "source": pa.array(cols[0], pa.string()),
+        "segment_start": pa.array(cols[1], pa.timestamp("us")),
+        "n_points": pa.array(cols[2], pa.int32()),
+        "codec_version": pa.array([codec_version] * len(rows), pa.int32()),
+        "ts_payload": pa.array(cols[3], pa.binary()),
+        "v_payload": pa.array(cols[4], pa.binary()),
+    })
+
+
 def compress_tier(
     tier: DataFrame, value_col: str = "avg_v",
     codec_version: int = CODEC_VERSION_V2,
 ) -> DataFrame:
-    """tier(source, bucket_ts, <value_col>, ...) -> compressed chunk rows."""
-    enc_ts, enc_v = _ENCODERS[codec_version]
+    """tier(source, bucket_ts, <value_col>, ...) -> compressed chunk rows.
+
+    At call time it collects at most
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` + 1 rows of the
+    tier. When the collect ends within that cap, the rows fit one Arrow
+    batch, the most a pandas-UDF call receives, and the driver encodes them
+    (``encode_segments``) into a one-partition DataFrame: no Python
+    worker starts, whose start-up outweighs the encode of so few rows.
+    Otherwise, or when the setting is not positive, the rows are grouped
+    by (source, segment) and encoded on the executors
+    (``applyInPandas``). Both paths run ``encode_segment`` over the same
+    wall-clock timestamps, so they give the same chunk rows."""
+    spark = tier.sparkSession
+    seg = F.date_trunc("day", F.col("bucket_ts")).alias("segment_start")
+    cap = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    if cap > 0:
+        # timestamp_ntz carries the session's wall clock, as a pandas UDF
+        # sees it, whatever the session time zone
+        local = tier.select(
+            "source", seg.cast("timestamp_ntz").alias("segment_start"),
+            F.col("bucket_ts").cast("timestamp_ntz").alias("bucket_ts"),
+            value_col,
+        ).limit(cap + 1).toArrow()
+        if local.num_rows <= cap:
+            pdf = local.to_pandas(coerce_temporal_nanoseconds=True)
+            chunks = spark.createDataFrame(
+                encode_segments(pdf, value_col, codec_version),
+                CHUNK_SCHEMA.replace("timestamp", "timestamp_ntz"),
+            )
+            # a local relation spreads over every core; one partition
+            # writes one file
+            return chunks.withColumn(
+                "segment_start", F.col("segment_start").cast("timestamp")
+            ).coalesce(1)
 
     def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("bucket_ts")
-        ts = (pdf["bucket_ts"].astype("int64") // 1_000_000_000).to_numpy()
-        vals = pdf[value_col].to_numpy(dtype="float64")
+        n, ts_payload, v_payload = encode_segment(pdf, value_col, codec_version)
         return pd.DataFrame(
             {
                 "source": [pdf["source"].iloc[0]],
                 "segment_start": [pdf["segment_start"].iloc[0]],
-                "n_points": [len(ts)],
+                "n_points": [n],
                 "codec_version": [codec_version],
-                "ts_payload": [enc_ts(ts)],
-                "v_payload": [enc_v(vals)],
+                "ts_payload": [ts_payload],
+                "v_payload": [v_payload],
             }
         )
 
-    with_seg = tier.withColumn("segment_start", F.date_trunc("day", F.col("bucket_ts")))
     return (
-        with_seg.select("source", "segment_start", "bucket_ts", value_col)
+        tier.select("source", seg, "bucket_ts", value_col)
         .groupBy("source", "segment_start")
         .applyInPandas(encode_group, schema=CHUNK_SCHEMA)
     )

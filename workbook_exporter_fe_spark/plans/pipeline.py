@@ -66,6 +66,7 @@ import threading
 import time
 import uuid
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark import StorageLevel
@@ -155,6 +156,39 @@ def _parquet_rows(d: str) -> int:
     )
 
 
+def _read_table(spark: SparkSession, path: str) -> DataFrame:
+    """The parquet table at ``path``, read with the Spark schema that
+    Spark stored in its first file's footer
+    (``org.apache.spark.sql.parquet.row.metadata``), fetched on the
+    driver: no schema-inference job. A table with no parquet file
+    directly in its dir (an older store's ``col=value`` layout) or no
+    stored schema is read by inference."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    files = sorted(f for f in os.listdir(path)
+                   if f.endswith(".parquet") and not f.startswith((".", "_")))
+    meta = pq.read_schema(os.path.join(path, files[0])).metadata if files else None
+    stored = (meta or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    if stored is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(StructType.fromJson(json.loads(stored))).parquet(path)
+
+
+@contextmanager
+def _job_description(spark: SparkSession, name: str):
+    """Name the Spark jobs this thread runs inside the block ``name``
+    (``spark.job.description``), then restore the caller's value. The job
+    group is left alone, so a caller's group still covers the jobs."""
+    sc = spark.sparkContext
+    prior = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", name)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prior)
+
+
 def _source_last(df: DataFrame) -> DataFrame:
     """``df`` with ``source`` last: every tier's column order, the one an
     older store's ``source=`` table reads with."""
@@ -226,9 +260,16 @@ def _run_stages(spark: SparkSession, stages: dict) -> dict:
     Spark runs jobs submitted from separate threads concurrently. Each
     thread starts with its own copy of the caller's local properties and
     tags (``inheritable_thread_target``), so the caller's job group
-    covers every job. When a stage fails, the running ones finish, none
-    starts after it, and the first error is raised; no thread outlives
-    the call."""
+    covers every job, and its jobs are described by the stage's name
+    (``_job_description``). When a stage fails, the running ones finish,
+    none starts after it, and the first error is raised; no thread
+    outlives the call."""
+    def named(name, fn):
+        def run(done):
+            with _job_description(spark, name):
+                return fn(done)
+        return run
+
     done: dict = {}
     waiting, running = dict(stages), {}
     error = None
@@ -237,7 +278,7 @@ def _run_stages(spark: SparkSession, stages: dict) -> dict:
             for name, (after, fn) in list(waiting.items()):
                 if error is None and all(a in done for a in after):
                     del waiting[name]
-                    target = inheritable_thread_target(spark)(fn)
+                    target = inheritable_thread_target(spark)(named(name, fn))
                     running[pool.submit(target, done)] = name
             if not running:
                 break
@@ -278,26 +319,29 @@ class TierPipeline:
         """Run one stage idempotently: skip if done, else write → log.
         ``write(out_path, keys)`` merges the stage's rows into its table
         and may return the merged table; ``read(out_path)`` reads it
-        (a parquet read by default). Row counts come from the table's
+        (by default with the schema its footer stores, ``_read_table``,
+        so a done stage runs no job). Row counts come from the table's
         parquet footers; a stage of ``run`` also records them per source,
         from one aggregate job over the written table. ``extra(table)``
         gives fields of the row's own — in place of the per-source
         counts, and of ``rows_out`` if it names one. ``watermark``, the
-        table's max key, is recorded when given."""
-        read = read or self.spark.read.parquet
+        table's max key, is recorded when given. The stage's Spark jobs
+        carry its name as their description (``_job_description``)."""
+        read = read or (lambda path: _read_table(self.spark, path))
         if self.manifest.done(run_fp, stage):
             return read(out_path)
         t0 = time.perf_counter()
-        result = write(out_path, keys)
-        if result is None:
-            result = read(out_path)
-        fields = {} if extra is None else extra(result)
-        if "rows_out" not in fields:
-            fields["rows_out"] = _parquet_rows(out_path)
-            if extra is None and not stage.endswith("_inc"):
-                # one input partition aggregates without an exchange
-                fields["partitions"] = dict(
-                    result.coalesce(1).groupBy("source").count().collect())
+        with _job_description(self.spark, stage):
+            result = write(out_path, keys)
+            if result is None:
+                result = read(out_path)
+            fields = {} if extra is None else extra(result)
+            if "rows_out" not in fields:
+                fields["rows_out"] = _parquet_rows(out_path)
+                if extra is None and not stage.endswith("_inc"):
+                    # one input partition aggregates without an exchange
+                    fields["partitions"] = dict(
+                        result.coalesce(1).groupBy("source").count().collect())
         if watermark is not None:
             fields["watermark"] = str(watermark)
         self.manifest.record(
@@ -309,12 +353,15 @@ class TierPipeline:
         )
         return result
 
-    def _merge(self, combine, new: DataFrame, **kw):
-        """A stage's ``write``: ``combine`` ``new`` into the whole flat
-        table — a batch touching every source rewrites every row anyway,
-        and scoped by source it would write one file per source."""
+    def _merge(self, combine, rows, **kw):
+        """A stage's ``write``: ``combine`` the rows ``rows()`` builds into
+        the whole flat table — a batch touching every source rewrites
+        every row anyway, and scoped by source it would write one file per
+        source. ``rows`` runs inside the write, after the stage's done
+        check, so a done stage builds (and encodes) nothing."""
         return lambda path, keys: combine(
-            self.spark, path, _source_last(new), keys, partition_col=None, **kw)
+            self.spark, path, _source_last(rows()), keys, partition_col=None,
+            **kw)
 
     def _watermark(self, batch: dict, key: str, stages, events: DataFrame):
         """A table's max ``key`` after a merge: the batch's, or the highest
@@ -445,6 +492,12 @@ class TierPipeline:
           sketch2 → sketch3 beside it. Chunks and anomaly wait for tier1
           and re-derive the touched sources from it.
 
+        The chunk stage encodes inside its write (``compress_tier``, on
+        the driver when the segments' tier-1 rows fit one Arrow batch), so
+        a replay whose chunk stage is done encodes nothing. A
+        driver-encoded delta is one partition, so the chunk table keeps
+        at most two files: the kept rows and the delta.
+
         Every stage is still one swap or commit plus one manifest row, so
         a crash leaves any subset of them done and the re-run completes
         the rest."""
@@ -454,17 +507,17 @@ class TierPipeline:
         in_touched = merge.in_partitions("source", batch["sources"])
         tier_merge = merge.merge_tier_additive_path if incremental else merge_upsert_path
 
-        def stage(table, new, combine=merge_upsert_path, grain=None,
+        def stage(table, rows, combine=merge_upsert_path, grain=None,
                   keys=("source", "bucket_ts"), extra=None, **kw):
             names = _STAGES[table]
             return self._stage(
-                run_fp, names[incremental], self._merge(combine, new, **kw),
+                run_fp, names[incremental], self._merge(combine, rows, **kw),
                 f"{self.out}/{table}", list(keys),
                 grain and self._watermark(batch, grain, names, events), extra,
             )
 
         def tier_stage(table, grain, feed):
-            return lambda done: stage(table, feed(done), tier_merge, grain)
+            return lambda done: stage(table, lambda: feed(done), tier_merge, grain)
 
         def reagg_feed(reagg, grain, below, feed):
             if incremental:
@@ -512,7 +565,8 @@ class TierPipeline:
         def chunks(done):
             t1 = segments = done["tier1"].filter(in_touched)
             # the (source, day) segments to re-encode; they are also the
-            # keys the chunk merge replaces, so the encoding runs once
+            # keys the chunk merge replaces, so an executor-side encoding
+            # runs once
             seg = F.date_trunc("day", "bucket_ts").alias("segment_start")
             affected = (partial if incremental else t1).select("source", seg)
             affected = affected.distinct()
@@ -523,7 +577,7 @@ class TierPipeline:
                     F.broadcast(affected), ["source", "segment_start"]
                 ).drop("segment_start")
             return stage(
-                "chunks", compress_tier(segments),
+                "chunks", lambda: compress_tier(segments),
                 keys=("source", "segment_start"),
                 extra=None if incremental else _chunk_metrics,
                 replaced=affected,
@@ -539,7 +593,7 @@ class TierPipeline:
 
             stages["anomaly1"] = (("tier1",), lambda done: stage(
                 "anomaly1",
-                anomaly_zscore(
+                lambda: anomaly_zscore(
                     done["tier1"].filter(in_touched).select(
                         "source", "bucket_ts", "avg_v"),
                     n=30, threshold=3.0,
@@ -945,7 +999,8 @@ def publish_snapshot_tiers(
 
     The tiers' commits share no table, so after the one tuple probe on
     the calling thread each tier commits in a thread of its own
-    (``_run_stages``, no edges); the commits' Spark jobs overlap.
+    (``_run_stages``, no edges); the commits' Spark jobs overlap, each
+    described ``publish_<tier>``.
     """
     import functools
 
@@ -1038,6 +1093,11 @@ def publish_snapshot_tiers(
             ]
         commits[name] = functools.partial(
             scoped, table, root, src, seq, fields, tuples_of[key])
+
+    def commit(name):
+        with _job_description(spark, f"publish_{name}"):
+            return commits[name]()
+
     return _run_stages(spark, {
-        name: ((), lambda _, fn=fn: fn()) for name, fn in commits.items()
+        name: ((), lambda _, name=name: commit(name)) for name in commits
     })
