@@ -104,17 +104,18 @@ def test_mixed_version_chunk_table_decodes(spark, events):
     assert orig.exceptAll(back).count() == 0
 
 
-def _encoded(spark, tier, cap, ver, tz):
-    """``compress_tier``'s rows with the Arrow batch cap set to ``cap``
-    and the session in time zone ``tz``, and whether the executors
-    encoded them (a pandas UDF in the plan)."""
+def _encoded(spark, tier, cap, ver, tz, rows):
+    """``compress_tier``'s rows under the row bound ``rows``, with the
+    Arrow batch cap set to ``cap`` and the session in time zone ``tz``,
+    and whether the executors encoded them (a pandas UDF in the plan)."""
     conf = {"spark.sql.execution.arrow.maxRecordsPerBatch": str(cap),
             "spark.sql.session.timeZone": tz}
     prior = {k: spark.conf.get(k) for k in conf}
     for k, v in conf.items():
         spark.conf.set(k, v)
     try:
-        chunks = compress_tier(tier, value_col="avg_v", codec_version=ver)
+        chunks = compress_tier(tier, value_col="avg_v", codec_version=ver,
+                               rows=rows)
         plan = chunks._jdf.queryExecution().executedPlan().toString()
         rows = sorted(map(tuple, chunks.collect()), key=repr)
     finally:
@@ -125,11 +126,12 @@ def _encoded(spark, tier, cap, ver, tz):
 
 @pytest.mark.parametrize("ver,tz", [(1, "UTC"), (2, "UTC"), (2, "Asia/Kolkata")])
 def test_driver_and_executor_encode_agree(spark, ver, tz):
-    """A tier-1 input of exactly the Arrow batch cap is encoded on the
-    driver; with the cap one row lower, or not positive, on the
-    executors. All give the same chunk rows, payload bytes included: a
-    null-source segment is kept, and segments split at the session's
-    midnight (18:30 UTC in Kolkata) on both sides."""
+    """A tier-1 input bounded by exactly the Arrow batch cap is encoded
+    on the driver; one row past the cap, with the cap not positive, or
+    with no bound, on the executors. All give the same chunk rows,
+    payload bytes included: a null-source segment is kept, and segments
+    split at the session's midnight (18:30 UTC in Kolkata) on both
+    sides."""
     import datetime
 
     t0 = datetime.datetime(2026, 1, 1, 18, 20)
@@ -142,12 +144,12 @@ def test_driver_and_executor_encode_agree(spark, ver, tz):
     tier = spark.createDataFrame(
         rows, "source string, bucket_ts timestamp, avg_v double")
     n = len(rows)
-    driver, on_executors = _encoded(spark, tier, n, ver, tz)
+    driver, on_executors = _encoded(spark, tier, n, ver, tz, n)
     assert not on_executors
     # in Kolkata each day's rows straddle the session's midnight
     assert len(driver) == (6 if tz == "UTC" else 12)
     assert [r[0] for r in driver].count(None) == len(driver) // 3
-    for cap in (n - 1, 0):
-        executor, on_executors = _encoded(spark, tier, cap, ver, tz)
+    for cap, rows in ((n - 1, n), (0, n), (n, None)):
+        executor, on_executors = _encoded(spark, tier, cap, ver, tz, rows)
         assert on_executors
-        assert executor == driver, cap
+        assert executor == driver, (cap, rows)

@@ -739,10 +739,11 @@ def _assert_rows_match_tables(spark, pipe, root, stages, run_fps,
             }, stage
 
 
-#: jobs one run_incremental may run on the small store: it runs 22 —
+#: jobs one run_incremental may run on the small store: it runs 21 —
 #: the batch probe, the events commit and its key extraction, the
 #: partials' disk write, the collect of the chunk segments' tier-1 rows,
-#: then per merge its query stages and the write. A schema-inference or
+#: then per merge its query stages and the write (the chunk merge
+#: replaces its local delta's own keys, so no job finds them). A schema-inference or
 #: listing job per read or a touched-partition probe per merge would
 #: pass it.
 _BATCH_JOB_CEILING = 24
@@ -798,6 +799,33 @@ def test_incremental_batch_job_budget(spark, tmp_path, small_store,
         assert _table(spark, root, "events").count() == live
 
 
+def test_chunk_stage_encodes_alike_on_driver_and_executors(
+        spark, tmp_path, small_store):
+    """With the Arrow batch cap below the tier-1 table's rows, a batch's
+    chunk stage encodes on the executors and its merge replaces the
+    touched segments' keys; the chunk table is the driver path's, row for
+    row, payload bytes included."""
+    pre, ev = small_store
+    batch = _two_batches(ev)[1]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    chunks, pythons = {}, {}
+    for cap in ("10000", "1"):
+        root = str(tmp_path / cap)
+        shutil.copytree(pre, root)
+        prior = spark.conf.get(key)
+        spark.conf.set(key, cap)
+        try:
+            _spark_jobs(spark, f"side-{cap}", lambda: TierPipeline(
+                spark, root).run_incremental(batch, "b1"))
+        finally:
+            spark.conf.set(key, prior)
+        pythons[cap] = _python_nodes(spark, f"side-{cap}")
+        chunks[cap] = sorted(map(tuple, _table(spark, root, "chunks").collect()),
+                             key=repr)
+    assert pythons["10000"] == [] and pythons["1"], pythons
+    assert chunks["1"] == chunks["10000"]
+
+
 def test_stage_jobs_carry_the_stage_name(spark, tmp_path, small_store):
     """Every Spark job run_incremental runs inside a stage is described by
     that stage's name: the manifest's for a table-writing stage, the
@@ -831,12 +859,12 @@ def test_stage_jobs_carry_the_stage_name(spark, tmp_path, small_store):
 
 
 #: jobs one run may run over the small store's own sequences under a new
-#: fingerprint: it runs 30 — a probe of the eventized sequences, the
+#: fingerprint: it runs 29 — a probe of the eventized sequences, the
 #: events commit and its key extraction, a probe of the bounded events
 #: table, then per merge its query stages, the write and, for tier1–3,
 #: the per-source row counts, and the chunk metrics. It ran 48 with a
-#: touched-partition and a watermark job per stage, and 32 with
-#: two-job probes.
+#: touched-partition and a watermark job per stage, 32 with two-job
+#: probes, and 30 before the chunk merge took its local delta's keys.
 _RUN_JOB_CEILING = 35
 
 

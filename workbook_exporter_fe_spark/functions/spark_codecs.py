@@ -5,23 +5,28 @@ bucket_ts — into chunk rows
 ``(source, segment_start, n_points, codec_version, ts_payload, v_payload)``
 (FIXTURES.md F3). One numpy kernel, ``encode_segment``, encodes a group's
 timestamps+values vectorized over the whole segment, and runs where the
-input's size puts it (``compress_tier``):
+caller's row bound puts it (``compress_tier``):
 
-- on the driver, when the tier rows fit one Arrow batch
-  (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, 10,000 by
-  default: what one pandas-UDF call receives). A collect capped one row
-  past it tells; the rows then travel to the driver as one batch, and no
-  Python worker starts. A session's first Python worker costs seconds,
-  far more than encoding a batch's few hundred touched rows;
+- on the driver, when the caller knows, without a job, that the input
+  holds at most ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows
+  (10,000 by default) — the pipeline takes that bound from the tier-1
+  table's parquet footers. The rows travel to the driver in one collect,
+  and no Python worker starts: a session's first one costs seconds, far
+  more than encoding a few thousand rows on the driver;
 - on the executors otherwise, grouped by (source, segment) through
-  ``applyInPandas``: the group boundary is the Arrow batch boundary.
+  ``applyInPandas``.
+
+The cap is not a measured crossover: the driver encode was the faster
+at every size tried, up to 160,000 rows (4 vCPUs, warm or cold session).
+It bounds what the driver collects and holds to the rows of one Arrow
+batch, whatever the store's size. (``applyInPandas`` is not split by it:
+each group reaches its Python worker whole.)
 
 Scale design: grouping key (source, segment) bounds chunk size (one day of
 1m buckets = 1440 points), so executor memory per group is constant; the
 shuffle that forms groups is the only shuffle and it is keyed the same way
 as the tier table's layout, so with a source-partitioned tier table the
-exchange is cheap. The driver path is bounded by the same cap, so driver
-memory is too. Decompression uses the same grouped shape.
+exchange is cheap. Decompression uses the same grouped shape.
 """
 
 from __future__ import annotations
@@ -98,44 +103,49 @@ def encode_segments(pdf: pd.DataFrame, value_col: str,
     })
 
 
+def encodes_on_driver(spark, rows: int | None) -> bool:
+    """Whether ``compress_tier`` encodes an input of at most ``rows``
+    rows on the driver: ``rows`` is known and within a positive
+    ``spark.sql.execution.arrow.maxRecordsPerBatch``."""
+    cap = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    return rows is not None and 0 < cap and rows <= cap
+
+
 def compress_tier(
     tier: DataFrame, value_col: str = "avg_v",
-    codec_version: int = CODEC_VERSION_V2,
+    codec_version: int = CODEC_VERSION_V2, rows: int | None = None,
 ) -> DataFrame:
     """tier(source, bucket_ts, <value_col>, ...) -> compressed chunk rows.
 
-    At call time it collects at most
-    ``spark.sql.execution.arrow.maxRecordsPerBatch`` + 1 rows of the
-    tier. When the collect ends within that cap, the rows fit one Arrow
-    batch, the most a pandas-UDF call receives, and the driver encodes them
-    (``encode_segments``) into a one-partition DataFrame: no Python
-    worker starts, whose start-up outweighs the encode of so few rows.
-    Otherwise, or when the setting is not positive, the rows are grouped
-    by (source, segment) and encoded on the executors
-    (``applyInPandas``). Both paths run ``encode_segment`` over the same
-    wall-clock timestamps, so they give the same chunk rows."""
+    ``rows`` is an upper bound of the tier's rows that the caller knows
+    without running a job (parquet footers). When it is within the Arrow
+    batch cap (``encodes_on_driver``), the tier is collected and the
+    driver encodes it at call time (``encode_segments``) into a
+    one-partition DataFrame, and no Python worker starts. Otherwise, or
+    without a bound, the rows are grouped by (source, segment) and
+    encoded on the executors (``applyInPandas``). Both paths run
+    ``encode_segment`` over the same wall-clock timestamps, so they give
+    the same chunk rows."""
     spark = tier.sparkSession
     seg = F.date_trunc("day", F.col("bucket_ts")).alias("segment_start")
-    cap = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
-    if cap > 0:
+    if encodes_on_driver(spark, rows):
         # timestamp_ntz carries the session's wall clock, as a pandas UDF
         # sees it, whatever the session time zone
         local = tier.select(
             "source", seg.cast("timestamp_ntz").alias("segment_start"),
             F.col("bucket_ts").cast("timestamp_ntz").alias("bucket_ts"),
             value_col,
-        ).limit(cap + 1).toArrow()
-        if local.num_rows <= cap:
-            pdf = local.to_pandas(coerce_temporal_nanoseconds=True)
-            chunks = spark.createDataFrame(
-                encode_segments(pdf, value_col, codec_version),
-                CHUNK_SCHEMA.replace("timestamp", "timestamp_ntz"),
-            )
-            # a local relation spreads over every core; one partition
-            # writes one file
-            return chunks.withColumn(
-                "segment_start", F.col("segment_start").cast("timestamp")
-            ).coalesce(1)
+        ).toArrow()
+        pdf = local.to_pandas(coerce_temporal_nanoseconds=True)
+        chunks = spark.createDataFrame(
+            encode_segments(pdf, value_col, codec_version),
+            CHUNK_SCHEMA.replace("timestamp", "timestamp_ntz"),
+        )
+        # a local relation spreads over every core; one partition
+        # writes one file
+        return chunks.withColumn(
+            "segment_start", F.col("segment_start").cast("timestamp")
+        ).coalesce(1)
 
     def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
         n, ts_payload, v_payload = encode_segment(pdf, value_col, codec_version)

@@ -74,7 +74,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
-from workbook_exporter_fe_spark.functions.spark_codecs import compress_tier
+from workbook_exporter_fe_spark.functions.spark_codecs import (
+    compress_tier,
+    encodes_on_driver,
+)
 from workbook_exporter_fe_spark.operators.eventize import eventize
 from workbook_exporter_fe_spark.operators.merge import _swap, merge_upsert_path
 from workbook_exporter_fe_spark.operators.tiers import (
@@ -260,16 +263,9 @@ def _run_stages(spark: SparkSession, stages: dict) -> dict:
     Spark runs jobs submitted from separate threads concurrently. Each
     thread starts with its own copy of the caller's local properties and
     tags (``inheritable_thread_target``), so the caller's job group
-    covers every job, and its jobs are described by the stage's name
-    (``_job_description``). When a stage fails, the running ones finish,
-    none starts after it, and the first error is raised; no thread
-    outlives the call."""
-    def named(name, fn):
-        def run(done):
-            with _job_description(spark, name):
-                return fn(done)
-        return run
-
+    covers every job. When a stage fails, the running ones finish, none
+    starts after it, and the first error is raised; no thread outlives
+    the call."""
     done: dict = {}
     waiting, running = dict(stages), {}
     error = None
@@ -278,7 +274,7 @@ def _run_stages(spark: SparkSession, stages: dict) -> dict:
             for name, (after, fn) in list(waiting.items()):
                 if error is None and all(a in done for a in after):
                     del waiting[name]
-                    target = inheritable_thread_target(spark)(named(name, fn))
+                    target = inheritable_thread_target(spark)(fn)
                     running[pool.submit(target, done)] = name
             if not running:
                 break
@@ -492,11 +488,13 @@ class TierPipeline:
           sketch2 → sketch3 beside it. Chunks and anomaly wait for tier1
           and re-derive the touched sources from it.
 
-        The chunk stage encodes inside its write (``compress_tier``, on
-        the driver when the segments' tier-1 rows fit one Arrow batch), so
-        a replay whose chunk stage is done encodes nothing. A
-        driver-encoded delta is one partition, so the chunk table keeps
-        at most two files: the kept rows and the delta.
+        The chunk stage encodes inside its write (``compress_tier``), so
+        a replay whose chunk stage is done encodes nothing. It encodes on
+        the driver when the tier-1 table's footers count at most one
+        Arrow batch of rows, a bound of the segments' rows that costs no
+        job. A driver-encoded delta is one local partition, so the chunk
+        table keeps at most two files (the kept rows and the delta) and
+        the merge replaces the delta's own keys.
 
         Every stage is still one swap or commit plus one manifest row, so
         a crash leaves any subset of them done and the re-run completes
@@ -548,8 +546,12 @@ class TierPipeline:
                 # them: a query that finds them unwritten runs a job to
                 # write them itself, and concurrent tiers would each run one
                 partial.persist(StorageLevel.DISK_ONLY)
-                stages["partial"] = ((), lambda done: partial.write.format(
-                    "noop").mode("overwrite").save())
+
+                def write_partials(done):
+                    with _job_description(self.spark, "partial"):
+                        partial.write.format("noop").mode("overwrite").save()
+
+                stages["partial"] = ((), write_partials)
         for family, first, reagg in families:
             feed = lambda done, first=first: first  # noqa: E731
             after = ("partial",) if "partial" in stages else ()
@@ -564,9 +566,12 @@ class TierPipeline:
 
         def chunks(done):
             t1 = segments = done["tier1"].filter(in_touched)
-            # the (source, day) segments to re-encode; they are also the
-            # keys the chunk merge replaces, so an executor-side encoding
-            # runs once
+            # the segments' rows are at most the tier-1 table's
+            n = _parquet_rows(f"{self.out}/tier1")
+            # the (source, day) segments to re-encode; on the executors
+            # they are also the keys the chunk merge replaces, so the
+            # encoding runs once. A driver-encoded delta is a local table:
+            # its own keys cost no job.
             seg = F.date_trunc("day", "bucket_ts").alias("segment_start")
             affected = (partial if incremental else t1).select("source", seg)
             affected = affected.distinct()
@@ -577,10 +582,10 @@ class TierPipeline:
                     F.broadcast(affected), ["source", "segment_start"]
                 ).drop("segment_start")
             return stage(
-                "chunks", lambda: compress_tier(segments),
+                "chunks", lambda: compress_tier(segments, rows=n),
                 keys=("source", "segment_start"),
                 extra=None if incremental else _chunk_metrics,
-                replaced=affected,
+                replaced=None if encodes_on_driver(self.spark, n) else affected,
             )
 
         stages["chunks"] = (("tier1",), chunks)
@@ -699,7 +704,8 @@ class TierPipeline:
 
         chunks_path = f"{self.out}/chunks"
         if os.path.exists(chunks_path):
-            ch_slice = compress_tier(_win(t1, "bucket_ts", lo_d, hi_d))
+            ch_slice = compress_tier(_win(t1, "bucket_ts", lo_d, hi_d),
+                                     rows=_parquet_rows(f"{self.out}/tier1"))
             stats["chunks"] = _replace_window(
                 chunks_path, ch_slice, "segment_start", lo_d, hi_d
             )
