@@ -1,14 +1,10 @@
 #!/usr/bin/env python
 """CLI entry point: the store's periodic maintenance pass in one command.
 
-A continuously-ingesting tier store accumulates three kinds of debt, each
+A continuously-ingesting tier store accumulates two kinds of debt, each
 with an existing engine operator; this CLI is the cron-able wrapper that
 applies them together and prints one JSON report:
 
-- **small files** in the ``source=`` tier tables of older stores (the
-  pipeline writes its tiers flat, a file or two per write) →
-  `compact_partitions` (sources/tableio.py) rewrites only partitions
-  holding >= min-files and skips flat tables.
 - **snapshot-log growth** in SnapshotTable roots (one manifest + commit
   dir per micro-batch; footer-dominated scans, unbounded time travel) →
   `SnapshotTable.compact()` (REPLACE snapshot, optional sort for stats
@@ -19,7 +15,6 @@ applies them together and prints one JSON report:
 
 Usage:
 
-    python run_maintenance.py --tiers /tmp/t --compact
     python run_maintenance.py --tiers /tmp/t \
         --retention tier1='30 days',tier2='180 days',tier3='720 days' --verify
     python run_maintenance.py --snapshot-table /tmp/tbl \
@@ -49,8 +44,6 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-TIER_DIRS = ("tier1", "tier2", "tier3")
 
 
 def _parse_policies(text: str) -> dict[str, str]:
@@ -101,14 +94,6 @@ def _parse_bounds(text: str | None) -> dict | None:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--tiers", help="tier-store out dir (tier1/tier2/tier3)")
-    ap.add_argument(
-        "--compact", action="store_true",
-        help="compact multi-file source= partitions of each tier table; "
-        "only tiers of older stores have them (the pipeline writes flat "
-        "tiers, which this skips)",
-    )
-    ap.add_argument("--target-rows", type=int, default=1_000_000)
-    ap.add_argument("--min-files", type=int, default=2)
     ap.add_argument(
         "--retention",
         help="tier TTLs, e.g. tier1='30 days',tier2='180 days',tier3='720 days'",
@@ -235,20 +220,6 @@ def main() -> None:
 
     if args.tiers:
         tier_report: dict = {}
-        if args.compact:
-            from workbook_exporter_fe_spark.sources.tableio import (
-                compact_partitions,
-            )
-
-            tier_report["compacted"] = {
-                t: compact_partitions(
-                    spark, f"{args.tiers}/{t}",
-                    target_rows_per_file=args.target_rows,
-                    min_files=args.min_files,
-                )
-                for t in TIER_DIRS
-                if os.path.isdir(f"{args.tiers}/{t}")
-            }
         if args.retention:
             from workbook_exporter_fe_spark.operators.retention import (
                 expire_tiers,

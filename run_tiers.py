@@ -99,8 +99,8 @@ def main() -> None:
         ap.error("--sketches needs a full run (--input or --generate): an "
                  "incremental refresh cannot fold the sketch tiers")
     if args.backfill and args.snapshot_tiers:
-        ap.error("--backfill does not publish the serving store; run "
-                 "--snapshot-tiers separately after it")
+        ap.error("--backfill republishes the tiers a serving store already "
+                 "holds; publish a new one with a separate --snapshot-tiers run")
 
     from workbook_exporter_fe_spark.plans.pipeline import TierPipeline
     from workbook_exporter_fe_spark.session import get_spark
@@ -147,34 +147,31 @@ def main() -> None:
         ev = batch if args.events else eventize(seq).select(
             "source", "event_ts", "v", "doc_id"
         )
-        stats = pipe.backfill(ev, start, end, run_fp or "backfill")
-        print(json.dumps({"out": args.out, "backfill": [start, end],
-                          "replaced": stats}))
-        return
-    if args.from_snapshots:
-        from workbook_exporter_fe_spark.sources.snapshots import SnapshotTable
-
-        tables = pipe.run_from_snapshots(
-            SnapshotTable(spark, args.from_snapshots)
-        )
-        summary = (
-            {name: df.count() for name, df in tables.items()}
-            if tables is not None
-            else "up-to-date"
-        )
+        result = {"out": args.out, "backfill": [start, end],
+                  "replaced": pipe.backfill(ev, start, end, run_fp)}
     else:
-        tables = (
-            pipe.run_incremental(batch, run_fp)
-            if args.events
-            else pipe.run(seq, run_fp)
-        )
-        summary = {name: df.count() for name, df in tables.items()}
-    result = {
-        "out": args.out,
-        "rows": summary,
-        "resumed": args.resume,
-        "master": spark.sparkContext.master,
-    }
+        if args.from_snapshots:
+            from workbook_exporter_fe_spark.sources.snapshots import SnapshotTable
+
+            tables = pipe.run_from_snapshots(
+                SnapshotTable(spark, args.from_snapshots)
+            )
+        else:
+            tables = (
+                pipe.run_incremental(batch, run_fp)
+                if args.events
+                else pipe.run(seq, run_fp)
+            )
+        result = {
+            "out": args.out,
+            "rows": (
+                {name: df.count() for name, df in tables.items()}
+                if tables is not None
+                else "up-to-date"
+            ),
+            "resumed": args.resume,
+            "master": spark.sparkContext.master,
+        }
     if args.snapshot_tiers:
         from workbook_exporter_fe_spark.plans.pipeline import (
             publish_snapshot_tiers,

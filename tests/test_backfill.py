@@ -133,7 +133,8 @@ def test_window_alignment_is_timezone_independent(monkeypatch):
 def test_run_tiers_rejects_backfill_with_from_snapshots(tmp_path):
     """--backfill --from-snapshots used to die with a NameError deep in
     the run, and --backfill --snapshot-tiers silently skipped the
-    serving-store publish; both must be usage errors up front."""
+    first publish of a serving store; both must be usage errors up
+    front."""
     import os
     import subprocess
     import sys
@@ -142,7 +143,7 @@ def test_run_tiers_rejects_backfill_with_from_snapshots(tmp_path):
     cases = [
         (["--from-snapshots", str(tmp_path)], "--backfill needs explicit events"),
         (["--generate", "10", "--snapshot-tiers"],
-         "--backfill does not publish the serving store"),
+         "--backfill republishes the tiers a serving store already holds"),
     ]
     for extra, message in cases:
         r = subprocess.run(
@@ -152,3 +153,37 @@ def test_run_tiers_rejects_backfill_with_from_snapshots(tmp_path):
         )
         assert r.returncode == 2, extra
         assert message in r.stderr, extra
+
+
+def test_run_tiers_backfill_verifies(spark, tmp_path):
+    """--backfill --verify audits the store after the backfill and exits
+    non-zero when the audit fails: a tier-2 that no longer equals the
+    re-aggregated tier-1 outside the backfilled window fails it."""
+    import json
+    import os
+    import shutil
+    import subprocess
+    import sys
+
+    from workbook_exporter_fe_spark.sources.datagen import gen_sequences
+
+    seq = gen_sequences(spark, 300, seed=3)
+    out, events = str(tmp_path / "store"), str(tmp_path / "events")
+    TierPipeline(spark, out).run(seq, "base")
+    eventize(seq).select("source", "event_ts", "v", "doc_id").write.parquet(events)
+    tier2 = f"{out}/tier2"
+    spark.read.parquet(tier2).withColumn("sum_v", F.col("sum_v") + 1).write.parquet(
+        tier2 + ".bad")
+    shutil.rmtree(tier2)
+    os.rename(tier2 + ".bad", tier2)
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(
+        [sys.executable, "run_tiers.py", "--events", events, "--out", out,
+         "--backfill", "2099-01-01..2099-01-02", "--verify"],
+        capture_output=True, text=True, cwd=repo,
+    )
+    assert r.returncode == 1, r.stderr[-2000:]
+    result = json.loads(r.stdout.strip().splitlines()[-1])
+    assert result["backfill"] == ["2099-01-01", "2099-01-02"]
+    assert result["verify"]["ok"] is False

@@ -1,8 +1,6 @@
-"""Additive tier refresh, LTTB / min-max downsampling, partition compaction."""
+"""Additive tier refresh, LTTB / min-max downsampling."""
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 import pytest
@@ -99,48 +97,6 @@ def test_lttb_indices_reference():
     assert len(idx) == 10 and idx[0] == 0 and idx[-1] == 99
     assert 57 in idx
     assert np.all(np.diff(idx) > 0)
-
-
-def test_compact_partitions(spark, tmp_path):
-    from workbook_exporter_fe_spark.operators.merge import merge_upsert_path
-    from workbook_exporter_fe_spark.sources.tableio import compact_partitions
-
-    path = str(tmp_path / "tier")
-    # 4 incremental merges → 4 files in the touched partition
-    for i in range(4):
-        batch = spark.createDataFrame(
-            [("a", 100 + i, float(i)), ("b", 100 + i, float(i))],
-            "source string, bucket long, v double",
-        )
-        merge_upsert_path(spark, path, batch, ["source", "bucket"], partition_col="source")
-
-    def nfiles(part):
-        d = os.path.join(path, f"source={part}")
-        return len([f for f in os.listdir(d) if f.endswith(".parquet")])
-
-    # partition-scoped merge rewrites the whole (tiny) partition each time,
-    # so build the multi-file state directly: append extra files
-    spark.createDataFrame([("a", 999, 9.9)], "source string, bucket long, v double").write.mode(
-        "append"
-    ).partitionBy("source").parquet(path)
-    assert nfiles("a") >= 2
-    before = _rows_simple(spark.read.parquet(path))
-
-    report = compact_partitions(spark, path, target_rows_per_file=1000, min_files=2)
-    assert "a" in report and report["a"][1] == 1
-    assert nfiles("a") == 1
-    assert _rows_simple(spark.read.parquet(path)) == before  # data unchanged
-
-    # a flat table (the pipeline's tiers) has no partitions to compact
-    flat = str(tmp_path / "flat")
-    spark.read.parquet(path).write.parquet(flat)
-    files = sorted(os.listdir(flat))
-    assert compact_partitions(spark, flat, min_files=1) == {}
-    assert sorted(os.listdir(flat)) == files
-
-
-def _rows_simple(df):
-    return sorted((r["source"], r["bucket"], r["v"]) for r in df.collect())
 
 
 def test_downsample_minmax_tie_break_deterministic(spark):

@@ -206,41 +206,9 @@ def test_rollup_at_routes_to_coarsest_tier(spark, tmp_path):
         rollup_at(spark, out, "90s")
 
 
-def test_partition_scoped_merge_preserves_untouched_partitions(
-    spark, tmp_path, small_store
-):
-    """merge_upsert_path(partition_col=...) must rewrite ONLY the partitions
-    present in the new batch — untouched partition dirs keep their files'
-    mtimes (the replaceWhere shape a 100 TB merge needs). The pipeline's
-    tiers are flat, and backfill and expiry keep them flat, with the
-    column order they had."""
-    from workbook_exporter_fe_spark.operators.merge import merge_upsert_path
-
-    path = str(tmp_path / "tier")
-    base = spark.createDataFrame(
-        [("a", 1, 10.0), ("a", 2, 11.0), ("b", 1, 20.0)],
-        "source string, bucket long, v double",
-    )
-    merge_upsert_path(spark, path, base, ["source", "bucket"], partition_col="source")
-    b_dir = os.path.join(path, "source=b")
-    before = {
-        f: os.path.getmtime(os.path.join(b_dir, f)) for f in os.listdir(b_dir)
-    }
-
-    new = spark.createDataFrame(
-        [("a", 2, 99.0), ("a", 3, 12.0)], "source string, bucket long, v double"
-    )
-    merge_upsert_path(spark, path, new, ["source", "bucket"], partition_col="source")
-
-    after = {f: os.path.getmtime(os.path.join(b_dir, f)) for f in os.listdir(b_dir)}
-    assert after == before  # partition b untouched, byte-for-byte same files
-
-    got = {
-        (r["source"], r["bucket"]): r["v"]
-        for r in spark.read.parquet(path).collect()
-    }
-    assert got == {("a", 1): 10.0, ("a", 2): 99.0, ("a", 3): 12.0, ("b", 1): 20.0}
-
+def test_backfill_and_expiry_keep_tiers_flat(spark, tmp_path, small_store):
+    """The pipeline's tiers are flat, and backfill and expiry keep them
+    flat, with the column order they had."""
     import datetime
 
     from workbook_exporter_fe_spark.operators.retention import expire_tiers
@@ -262,27 +230,25 @@ def test_partition_scoped_merge_preserves_untouched_partitions(
 
 
 def test_merge_reads_stored_schema_without_inference(spark, tmp_path):
-    """A merge reads its table with the merged rows' schema, the
-    partition column last, and runs no schema-inference job; a column
-    only the stored files hold raises instead of being dropped."""
+    """A merge reads its table with the merged rows' schema in the stored
+    column order and runs no schema-inference job; a column only the
+    stored files hold raises instead of being dropped."""
     from workbook_exporter_fe_spark.operators.merge import merge_upsert_path
 
     path = str(tmp_path / "t")
     keys = ["source", "bucket"]
-    merge_upsert_path(spark, path, _kv(spark, [("a", 1, 1.0), ("b", 1, 2.0)]),
-                      keys, partition_col="source")
-    new = _kv(spark, [("a", 1, 5.0)])
+    merge_upsert_path(spark, path, _kv(spark, [("a", 1, 1.0), ("b", 1, 2.0)]), keys)
+    new = _kv(spark, [("a", 1, 5.0)]).select("v", "bucket", "source")
     descs = _spark_jobs(spark, "stored-schema", lambda: merge_upsert_path(
-        spark, path, new, keys, partition_col="source", touched=["a"]))
+        spark, path, new, keys))
     # the keys' dedupe, their broadcast and the write; a schema
     # inference over the stored footers would be a fourth job
     assert len(descs) == 3, len(descs)
     got = spark.read.parquet(path)
-    assert got.columns == ["bucket", "v", "source"]
-    assert sorted(map(tuple, got.collect())) == [(1, 2.0, "b"), (1, 5.0, "a")]
+    assert got.columns == ["source", "bucket", "v"]
+    assert sorted(map(tuple, got.collect())) == [("a", 1, 5.0), ("b", 1, 2.0)]
     with pytest.raises(ValueError, match="stores columns"):
-        merge_upsert_path(spark, path, new.drop("v"), ["source", "bucket"],
-                          partition_col="source", touched=["a"])
+        merge_upsert_path(spark, path, new.drop("v"), keys)
 
 
 def test_late_bound_watermark_monotone_across_runs(spark, tmp_path):
@@ -571,20 +537,18 @@ def _partial(spark, rows):
 
 
 def test_swap_crash_recovery_merges(spark, tmp_path, monkeypatch):
-    """Upsert, additive merge and compaction: a crash at any rename or
-    rmtree of the partition-scoped swap (moving `a` aside, promoting it,
-    adding the new partition `c`, commit) is rolled back by the next
-    call. The additive merge is not idempotent, so a partial promote
-    that survived would count the batch twice on the re-run. The null
-    source partition is merged like any other, never dropped."""
+    """Upsert and additive merge: a crash at any rename or rmtree of the
+    whole-table swap (the live table moved aside, the staged one
+    promoted, the commit) is rolled back by the next call. The additive
+    merge is not idempotent, so a promote that survived would count the
+    batch twice on the re-run. Null-source rows merge like any other,
+    never dropped."""
     from workbook_exporter_fe_spark.operators.merge import (
         merge_tier_additive_path,
         merge_upsert_path,
     )
-    from workbook_exporter_fe_spark.sources.tableio import compact_partitions
 
     keys = ["source", "bucket"]
-    # a null source lives in the __HIVE_DEFAULT_PARTITION__ dir
     base = [("a", 1, 1.0), ("a", 2, 2.0), ("b", 1, 3.0), (None, 1, 4.0)]
     batch = [("a", 2, 5.0), ("c", 1, 7.0), (None, 2, 6.0)]
     cases = {
@@ -593,25 +557,13 @@ def test_swap_crash_recovery_merges(spark, tmp_path, monkeypatch):
     }
     for name, (frame, merge) in cases.items():
         pre = str(tmp_path / name / "pre")
-        merge(spark, f"{pre}/t", frame(spark, base), keys, partition_col="source")
+        merge(spark, f"{pre}/t", frame(spark, base), keys)
         new = frame(spark, batch)
         _assert_recovers(
             spark, monkeypatch, tmp_path / name, pre,
-            lambda root: merge(spark, f"{root}/t", new, keys,
-                               partition_col="source"),
+            lambda root: merge(spark, f"{root}/t", new, keys),
             "t", ["t"],
         )
-
-    pre = str(tmp_path / "compact" / "pre")
-    merge_upsert_path(spark, f"{pre}/t", _kv(spark, base), keys,
-                      partition_col="source")
-    _kv(spark, [("a", 9, 9.0)]).write.mode("append").partitionBy(
-        "source").parquet(f"{pre}/t")
-    _assert_recovers(
-        spark, monkeypatch, tmp_path / "compact", pre,
-        lambda root: compact_partitions(spark, f"{root}/t", min_files=2),
-        "t", ["t"],
-    )
 
 
 @pytest.fixture(scope="module")

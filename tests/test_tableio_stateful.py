@@ -1,30 +1,11 @@
-"""TableIO seam + stateful streaming operator tests."""
+"""Shard export + stateful streaming operator tests."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from workbook_exporter_fe_spark.sources.tableio import TableIO, iceberg_available
 from workbook_exporter_fe_spark.streaming.stateful import running_source_stats
 from workbook_exporter_fe_spark.streaming.stream_rollup import EVENT_SCHEMA
-
-
-def test_tableio_parquet_backend_roundtrip(spark, tmp_path):
-    io = TableIO(spark, backend="auto")
-    # no Iceberg jar in this sandbox → auto must select parquet
-    assert not iceberg_available(spark)
-    assert io.backend == "parquet"
-    df = spark.range(10).select(
-        F.col("id"), (F.col("id") % 3).alias("part"), F.lit("a").alias("v")
-    )
-    path = str(tmp_path / "t")
-    io.write(df, path, partition_by=["part"])
-    assert io.read(path).count() == 10
-    # merge: update one key, insert one
-    new = spark.createDataFrame([(3, 0, "UPDATED"), (100, 1, "NEW")], "id long, part long, v string")
-    io.merge(new, path, keys=["id"])
-    got = {r["id"]: r["v"] for r in io.read(path).collect()}
-    assert got[3] == "UPDATED" and got[100] == "NEW" and len(got) == 11
 
 
 def test_stateful_running_stats(spark, events, tmp_path):
@@ -60,42 +41,6 @@ def test_stateful_running_stats(spark, events, tmp_path):
     for s, w in want.items():
         assert got[s]["total_events"] == w["n"]
         assert abs(got[s]["total_v"] - w["s"]) < 1e-6
-
-
-def test_bucketed_join_skips_exchange(spark, tmp_path):
-    """Two tables bucketed on the join key with equal bucket counts join
-    with ZERO Exchange nodes — the pre-shuffled co-located join the
-    pipeline uses for repeated doc_id joins at scale."""
-    from pyspark.sql import functions as F
-
-    from workbook_exporter_fe_spark.sources.tableio import TableIO
-
-    io = TableIO(spark, backend="parquet")
-    left = spark.range(20_000).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 7).alias("flag")
-    )
-    right = spark.range(20_000).select(
-        F.col("id").alias("doc_id"), F.sha2(F.col("id").cast("string"), 256).alias("h")
-    )
-    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
-    try:
-        # small test tables would otherwise broadcast; the bucketed-join
-        # path is what a big-big join takes
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        io.write_bucketed(left, "b_left", str(tmp_path / "bl"), ["doc_id"], 8, sort_by=["doc_id"])
-        io.write_bucketed(right, "b_right", str(tmp_path / "br"), ["doc_id"], 8, sort_by=["doc_id"])
-        j = io.read_table("b_left").join(io.read_table("b_right"), "doc_id")
-        assert j.count() == 20_000
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan[:1500]
-        assert "SortMergeJoin" in plan
-    finally:
-        if saved is None:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        else:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-        spark.sql("DROP TABLE IF EXISTS b_left")
-        spark.sql("DROP TABLE IF EXISTS b_right")
 
 
 def test_write_shards_bounds_and_roundtrip(spark, sequences, tmp_path):

@@ -356,8 +356,7 @@ class TierPipeline:
         source. ``rows`` runs inside the write, after the stage's done
         check, so a done stage builds (and encodes) nothing."""
         return lambda path, keys: combine(
-            self.spark, path, _source_last(rows()), keys, partition_col=None,
-            **kw)
+            self.spark, path, _source_last(rows()), keys, **kw)
 
     def _watermark(self, batch: dict, key: str, stages, events: DataFrame):
         """A table's max ``key`` after a merge: the batch's, or the highest

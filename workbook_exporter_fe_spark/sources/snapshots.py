@@ -1,8 +1,8 @@
 """Iceberg-style snapshot log over plain parquet: time travel + stats pruning.
 
 The north rule asks for an engine "over Iceberg tables ... resumable from
-checkpoint with per-partition lineage + metrics". The container has no
-Iceberg jar (sources/tableio.py:16 gates on that), so this module
+checkpoint with per-partition lineage + metrics". The engine runs
+without an Iceberg runtime jar, so this module
 re-expresses the *table-format mechanics the engine actually relies on*
 as a from-scratch snapshot log over immutable parquet files:
 
